@@ -96,7 +96,7 @@ final class Reservoir(val spark: SparkSession, root: String, tenant: String) {
   def deleteMatchKeyConfig(id: String): Unit = {
     catalog.updateWith("config_matchkeys", matchKeySchema)(
       _.filter(col("id") =!= id))
-    saveState(id, ClusterState.empty(spark))
+    saveState(id, subTables(ClusterState.empty(spark)), allBuckets, -1L)
   }
 
   // ---------------- oai config (GET/PUT/DELETE /config/oai) ----------------
@@ -192,90 +192,63 @@ final class Reservoir(val spark: SparkSession, root: String, tenant: String) {
         .sortWithinPartitions(col("_bucket"), col("clusterId")),
       "_bucket", dirty)
 
-  /** pool state plus the snapshot version it was pinned at (the `expected`
-    * for an optimistic save)
+  /** Pool state pinned at one manifest, plus that snapshot's version (the
+    * `expected` for an optimistic save): the latest snapshot, or the PAST
+    * version `at` of a paged OAI export — which fails with guidance when
+    * auto-vacuum already dropped that manifest.
     */
-  private def loadStateV(pool: String): (ClusterState, Long) = {
+  private def loadState(pool: String,
+      at: Option[Long] = None): (ClusterState, Long) = {
     val t = poolTable(pool)
-    val (v, mf) = catalog.snapshot(t)
+    val (v, mf) = at match {
+      case None => catalog.snapshot(t)
+      case Some(v) =>
+        val mf = catalog.snapshotAt(t, v)
+        if (v > 0 && mf.isEmpty) throw new IllegalStateException(
+          s"snapshot v=$v of pool '$pool' is no longer available (vacuumed " +
+            "while the paged export ran); restart the export without the token")
+        (v, mf)
+    }
     val Seq(meta, assignments, values) = poolSchemas.map { case (sub, schema) =>
       catalog.readGroupOr(t, mf, sub, schema)
     }
     (ClusterState(meta, assignments, values), v)
   }
 
-  private def loadState(pool: String): ClusterState = loadStateV(pool)._1
+  private def subTables(s: ClusterState): Seq[(String, DataFrame)] =
+    Seq("meta" -> s.meta, "assignments" -> s.assignments, "values" -> s.values)
 
-  /** pool state at a PAST pinned snapshot version (paged OAI exports);
-    * fails with guidance when auto-vacuum already dropped that manifest
-    */
-  private def loadStateAt(pool: String, v: Long): ClusterState = {
-    val t = poolTable(pool)
-    val mf = catalog.snapshotAt(t, v)
-    if (v > 0 && mf.isEmpty) throw new IllegalStateException(
-      s"snapshot v=$v of pool '$pool' is no longer available (vacuumed " +
-        "while the paged export ran); restart the export without the token")
-    val Seq(meta, assignments, values) = poolSchemas.map { case (sub, schema) =>
-      catalog.readGroupOr(t, mf, sub, schema)
-    }
-    ClusterState(meta, assignments, values)
-  }
-
-  /** full rewrite (initialize / pool reset): every bucket is touched */
-  private def saveState(pool: String, s: ClusterState): Unit = {
-    catalog.overwriteGroupIf(poolTable(pool),
-      poolSchemas.map(_._1).zip(Seq(s.meta, s.assignments, s.values)).map {
-        case (sub, df) => bucketBatch(sub, df, allBuckets)
-      }, -1L)
-    ()
-  }
-
-  /** Delta rewrite after an incremental step: dirty buckets are those of the
-    * clusters the step touched (datestamp == ts in the next meta). Write I/O
-    * is O(dirty buckets), not O(pool). `expected` (the version the state was
-    * loaded against, from [[loadStateV]]) makes the commit optimistic: a
-    * concurrent writer to the same pool raises CommitConflict instead of
-    * silently losing its update — and since all three sub-tables commit
-    * atomically, a conflict can never leave the pool half-updated.
-    */
-  private def saveStateDelta(pool: String, s: ClusterState, ts: Timestamp,
-      expected: Long): Unit = {
-    val dirty = s.meta.filter(col("datestamp") === lit(ts))
-      .select(bucketOf(col("clusterId")).as("b")).distinct()
+  /** the buckets holding the given clusters (a `clusterId` frame) */
+  private def bucketsOf(clusters: DataFrame): Seq[String] =
+    clusters.select(bucketOf(col("clusterId"))).distinct()
       .collect().map(_.getString(0)).toSeq
+
+  /** The one pool-state saver: commit the `dirty` buckets of the given
+    * sub-tables as one atomic group, optimistic on `expected` (the version
+    * the state was loaded at; -1 writes blind). Write I/O is O(dirty
+    * buckets), not O(pool), and since the sub-tables commit together a
+    * conflict can never leave the pool half-updated.
+    */
+  private def saveState(pool: String, subs: Seq[(String, DataFrame)],
+      dirty: Seq[String], expected: Long): Unit =
     if (dirty.nonEmpty) {
       catalog.overwriteGroupIf(poolTable(pool),
-        poolSchemas.map(_._1).zip(Seq(s.meta, s.assignments, s.values)).map {
-          case (sub, df) => bucketBatch(sub, df, dirty)
-        }, expected)
+        subs.map { case (sub, df) => bucketBatch(sub, df, dirty) }, expected)
       ()
     }
-  }
 
-  /** Optimistic-retry loop for read-modify-write steps: on a concurrent
-    * commit (or a lost claim after a stall, or the base snapshot's files
-    * being GC'd mid-computation by two quick successive commits) the step is
-    * re-run against the fresh snapshot, so no writer's update is silently
-    * lost (the reference's retry-once around its PG transaction,
-    * Storage.java:251-264).
+  /** Advance one pool under [[Catalog.retrying]]: `f` steps the freshly
+    * pinned state; the buckets of the clusters it stamped with `ts` are
+    * saved optimistically against the pinned version.
     */
-  private def retrying[T](what: String, maxRetries: Int = 3)(step: () => T): T = {
-    def fileGone(e: Throwable): Boolean =
-      Iterator.iterate(e)(_.getCause).takeWhile(_ != null).take(16)
-        .exists(_.isInstanceOf[java.io.FileNotFoundException])
-    var attempt = 0
-    while (true) {
-      try return step()
-      catch {
-        case e: Throwable
-            if (e.isInstanceOf[graft.storage.CommitConflict] ||
-              e.isInstanceOf[graft.storage.ClaimLost] || fileGone(e)) &&
-              attempt < maxRetries =>
-          attempt += 1
-      }
+  private def advancePool(pool: String, ts: Timestamp)(
+      f: ClusterState => ClusterState): Unit =
+    Catalog.retrying {
+      val (st0, poolVer) = loadState(pool)
+      val s = f(st0)
+      saveState(pool, subTables(s),
+        bucketsOf(s.meta.filter(col("datestamp") === lit(ts))), poolVer)
     }
-    sys.error("unreachable")
-  }
 
   // ---------------- ingest ----------------
 
@@ -335,7 +308,7 @@ final class Reservoir(val spark: SparkSession, root: String, tenant: String) {
     // a concurrent ingest landing between our read and commit re-runs this
     // step against the fresh snapshot (no lost update, stats stay exact)
     val (inserted, updated, deletedGlobalIds, deletedCount) =
-      retrying("records upsert") { () =>
+      Catalog.retrying {
         val recVer = catalog.version("records")
         val base = readRecordsOf(touchedSources)
         val existingKeys = base.select(col("globalId")).distinct()
@@ -366,13 +339,11 @@ final class Reservoir(val spark: SparkSession, root: String, tenant: String) {
     matchKeyConfigs().filter(_.update == "ingest").foreach { cfg =>
       val keys = upserts.select(col("globalId").as("recordId"),
         matcherKeys(cfg.matcher).as("keys"))
-      retrying(s"pool ${cfg.id} advance") { () =>
-        val (st0, poolVer) = loadStateV(cfg.id)
-        var state = Clusterize.ingestBatch(st0, keys, cfg.id, ts)
-        if (deletedCount > 0)
-          state = Clusterize.deleteRecords(state,
-            deletedGlobalIds.withColumnRenamed("globalId", "recordId"), ts)
-        saveStateDelta(cfg.id, state, ts, poolVer)
+      advancePool(cfg.id, ts) { st0 =>
+        val state = Clusterize.ingestBatch(st0, keys, cfg.id, ts)
+        if (deletedCount == 0) state
+        else Clusterize.deleteRecords(state,
+          deletedGlobalIds.withColumnRenamed("globalId", "recordId"), ts)
       }
     }
 
@@ -386,7 +357,8 @@ final class Reservoir(val spark: SparkSession, root: String, tenant: String) {
     val recs = readRecords()
     val keys = recs.select(col("globalId").as("recordId"),
       matcherKeys(cfg.matcher).as("keys"))
-    saveState(pool, Clusterize.initialize(keys, pool, now()))
+    saveState(pool, subTables(Clusterize.initialize(keys, pool, now())),
+      allBuckets, -1L)
   }
 
   // ---------------- queries ----------------
@@ -411,18 +383,15 @@ final class Reservoir(val spark: SparkSession, root: String, tenant: String) {
     if (n > 0) {
       val touched = victimRows.select(col("sourceId")).distinct()
         .collect().map(_.getString(0)).toSeq
-      retrying("records delete") { () =>
+      Catalog.retrying {
         val recVer = catalog.version("records")
         catalog.overwritePartitionsIf("records",
           readRecordsOf(touched).join(victims, Seq("globalId"), "left_anti"),
           "sourceId", touched, recVer)
       }
       matchKeyConfigs().foreach { cfg =>
-        retrying(s"pool ${cfg.id} delete") { () =>
-          val (st0, poolVer) = loadStateV(cfg.id)
-          saveStateDelta(cfg.id, Clusterize.deleteRecords(st0,
-            victims.withColumnRenamed("globalId", "recordId"), ts), ts, poolVer)
-        }
+        advancePool(cfg.id, ts)(Clusterize.deleteRecords(_,
+          victims.withColumnRenamed("globalId", "recordId"), ts))
       }
     }
     n
@@ -440,7 +409,7 @@ final class Reservoir(val spark: SparkSession, root: String, tenant: String) {
     * join build (Storage.java:657-679).
     */
   def clusters(pool: String, cqlQuery: String = null): DataFrame = {
-    val state = loadState(pool)
+    val state = loadState(pool)._1
     val recs = readRecords()
     val parsed = Cql.parse(cqlQuery, clusterCqlFields)
     // J2 join elision (Storage.java:657-679): join the record and value
@@ -504,7 +473,7 @@ final class Reservoir(val spark: SparkSession, root: String, tenant: String) {
     */
   private[graft] def pageClusterDocs(pool: String, pageIds: Seq[String],
       pinned: Option[ClusterState] = None): DataFrame = {
-    val state = pinned.getOrElse(loadState(pool))
+    val state = pinned.getOrElse(loadState(pool)._1)
     val recs = readRecords()
     val pageState = ClusterState(
       state.meta.filter(col("clusterId").isin(pageIds: _*)),
@@ -524,22 +493,20 @@ final class Reservoir(val spark: SparkSession, root: String, tenant: String) {
       .localCheckpoint(true)
     val n = hit.count()
     if (n > 0) {
-      val dirty = hit.select(bucketOf(col("clusterId")).as("b")).distinct()
-        .collect().map(_.getString(0)).toSeq
-      retrying(s"pool $pool touch") { () =>
-        val (state, poolVer) = loadStateV(pool)
+      val dirty = bucketsOf(hit)
+      Catalog.retrying {
+        val (state, poolVer) = loadState(pool)
         val nextMeta = state.meta
           .join(hit.withColumn("t", lit(true)), Seq("clusterId"), "left")
           .withColumn("datestamp", when(col("t"), lit(ts)).otherwise(col("datestamp")))
           .select("clusterId", "datestamp")
-        catalog.overwriteGroupIf(poolTable(pool),
-          Seq(bucketBatch("meta", nextMeta, dirty)), poolVer)
+        saveState(pool, Seq("meta" -> nextMeta), dirty, poolVer)
       }
     }
     n
   }
 
-  def stats(pool: String): DataFrame = Clusterize.stats(loadState(pool))
+  def stats(pool: String): DataFrame = Clusterize.stats(loadState(pool)._1)
 
   /** Reclaim partition data dirs superseded beyond the retained snapshot or
     * left behind by emptied partitions, across the record store and every
@@ -578,13 +545,9 @@ final class Reservoir(val spark: SparkSession, root: String, tenant: String) {
     val effUntil = effUntilStr.map(OaiDates.parseUntil)
     val afterId = tok.flatMap(_.clusterId)
 
-    val (state, pinnedV) = tok.flatMap(_.snapshotVersion) match {
-      case Some(v) => (loadStateAt(pool, v), Some(v))
-      case None if pinSnapshot =>
-        val (s, v) = loadStateV(pool)
-        (s, Some(v))
-      case None => (loadState(pool), None)
-    }
+    val pinAt = tok.flatMap(_.snapshotVersion)
+    val (state, v) = loadState(pool, pinAt)
+    val pinnedV = if (pinAt.isDefined || pinSnapshot) Some(v) else None
     var q = state.meta
     effFrom.foreach { f =>
       val fts = Timestamp.valueOf(f)
@@ -652,7 +615,7 @@ final class Reservoir(val spark: SparkSession, root: String, tenant: String) {
     * has no such cluster (OaiService.java:352-386).
     */
   def getOaiRecord(pool: String, clusterId: String): Option[OaiItem] =
-    loadState(pool).meta.filter(col("clusterId") === clusterId)
+    loadState(pool)._1.meta.filter(col("clusterId") === clusterId)
       .collect().headOption.map { r =>
         mkOaiItem(clusterId, r.getTimestamp(1),
           clusterDocMap(pool, Seq(clusterId)), withMetadata = true)

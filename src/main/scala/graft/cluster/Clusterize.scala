@@ -101,6 +101,9 @@ object Clusterize {
     val localMax = e.sparkSession.conf
       .getOption("spark.graft.cc.localMaxEdges").map(_.toLong)
       .getOrElse(100000L)
+    // limit takes an Int: truncation past it would silently drop edges
+    require(localMax < Int.MaxValue - 1,
+      s"spark.graft.cc.localMaxEdges must be below ${Int.MaxValue - 1}: $localMax")
     // The gate and the local path's collect are ONE bounded job:
     // limit(localMax+1) can never pull more than the gate's own ceiling to
     // the driver, and when the result fits (the common, mostly-unique-
@@ -108,18 +111,11 @@ object Clusterize {
     // materialization of `e` plus a count job plus the collect, three
     // passes where one suffices. Over the ceiling, the truncated collect
     // is discarded (bounded waste) and the iterative path recomputes from
-    // the cached e0. A localMax near Int.MaxValue falls back to the
-    // count-based gate (limit takes an Int; truncation there would
-    // silently drop edges).
+    // the cached e0.
+    val bounded = e.limit(localMax.toInt + 1).collect()
     val comps =
-      if (localMax >= Int.MaxValue - 1) {
-        if (e.count() <= localMax) localComponents(e.collect(), e)
-        else iterativeComponents(cut(e))
-      } else {
-        val bounded = e.limit(localMax.toInt + 1).collect()
-        if (bounded.length <= localMax) localComponents(bounded, e)
-        else iterativeComponents(cut(e))
-      }
+      if (bounded.length <= localMax) localComponents(bounded, e)
+      else iterativeComponents(cut(e))
     // ids whose every key was unshared never entered the loop: solo components
     allIds.join(comps, Seq("id"), "left")
       .select(col("id"), coalesce(col("component"), col("id")).as("component"))
@@ -191,11 +187,7 @@ object Clusterize {
     var labels = cut(e.select(col("id")).distinct()
       .withColumn("label", col("id")))
     var converged = false
-    var round = 0
-    val debug = sys.env.contains("GRAFT_CC_DEBUG")
     while (!converged) {
-      round += 1
-      val t0 = System.nanoTime()
       // hop 1: propagate the min label across the bipartite edges
       val keyMin = e.join(labels, "id")
         .groupBy("key").agg(min("label").as("klabel"))
@@ -218,8 +210,6 @@ object Clusterize {
         .filter(col("label") =!= col("prev")).limit(1).count()
       labels = withPrev.select(col("id"), col("label"))
       converged = changed == 0
-      if (debug) println(f"[cc] round=$round changed=$changed " +
-        f"elapsed=${(System.nanoTime() - t0) / 1e9}%.2f s")
     }
     labels.withColumnRenamed("label", "component")
   }

@@ -180,18 +180,6 @@ object Dedup {
   def minhashBands(sh: Column, k: Int, bands: Int): Column =
     graft.expressions.DedupExpressions.minhashBands(sh, k, bands)
 
-  /** legacy udf forms (same kernels behind a ScalaUDF — each row pays the
-    * CatalystTypeConverters round-trip; prefer the column forms above)
-    */
-  def shingleUdf(n: Int): org.apache.spark.sql.expressions.UserDefinedFunction =
-    udf((text: String) => shinglesOf(text, n))
-
-  def minhashUdf(k: Int): org.apache.spark.sql.expressions.UserDefinedFunction =
-    udf((sh: Seq[String]) => minhashOf(sh, k))
-
-  def bandUdf(k: Int, bands: Int): org.apache.spark.sql.expressions.UserDefinedFunction =
-    udf((sh: Seq[String]) => bandHashesOf(minhashOf(sh, k), bands, k / bands))
-
   /** Annotate each row with an exact-dup hash and the duplicate count. */
   def exactDuplicates(df: DataFrame, text: Column, id: Column): DataFrame = {
     val h = md5(text)

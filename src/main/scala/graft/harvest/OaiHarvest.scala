@@ -14,6 +14,7 @@ import org.apache.spark.sql.types._
 import graft.api.{IngestStats, Reservoir}
 import graft.marc.{MarcJson, MarcRecord, MarcXml}
 import graft.oai.OaiDates
+import graft.storage.Catalog
 
 /** OAI-PMH harvest source (S6, T3-T5): a resumable, driver-side ListRecords
   * pull loop — the resumption-token protocol is inherently sequential, so the
@@ -184,11 +185,9 @@ final class OaiPmhClient(reservoir: Reservoir,
           r.getBoolean(7), Option(r.getString(8)))
       }
 
-  /** persist the job row; `expected` (a catalog version) makes the write
-    * optimistic — pass -1 to write blind
-    */
+  /** persist the job row, optimistic on `expected` (a catalog version) */
   private def saveStatus(s: HarvestStatus, stop: Boolean,
-      owner: Option[String], expected: Long = -1L): Unit = {
+      owner: Option[String], expected: Long): Unit = {
     val others = reservoir.catalog.readOr("oai_clients", stateSchema)
       .filter(org.apache.spark.sql.functions.col("id") =!= s.id)
     val row = spark.createDataFrame(
@@ -200,27 +199,30 @@ final class OaiPmhClient(reservoir: Reservoir,
     ()
   }
 
-  /** Retries on saveStatus version conflicts. Every job's flush bumps the
-    * shared oai_clients version, so N concurrent jobs race each other on
-    * every write — attempt-scaled backoff keeps the CAS from exhausting
-    * under ordinary multi-job harvests.
+  /** fencing: a runner whose claim was taken over (stop + re-run while it
+    * stalled) aborts instead of clobbering the new owner's progress
     */
-  private val CasAttempts = 10
-
-  private def casBackoff(attempt: Int): Unit =
-    Thread.sleep(math.min(10L << attempt, 1000L))
+  private def requireOwner(id: String,
+      cur: Option[(HarvestStatus, Boolean, Option[String])], uuid: String): Unit =
+    cur.foreach { case (_, _, owner) =>
+      if (!owner.contains(uuid))
+        throw new IllegalStateException(
+          s"harvest job '$id' was taken over by another runner " +
+            s"(owner ${owner.getOrElse("<none>")}); aborting this one")
+    }
 
   /** Claim the job for this runner (the reference's owner fencing,
     * oai_pmh_clients.owner / OaiPmhClientService.java:335-474): an optimistic
     * CAS on the job row stamps this runner's UUID as owner. A second `run`
     * against a live job (status running, no stop requested) fails fast
     * instead of interleaving; a job whose runner crashed is reclaimed by
-    * requesting `stop(id)` first.
+    * requesting `stop(id)` first. Every job's flush bumps the shared
+    * oai_clients version, so this and every other job-row write re-examines
+    * the row under [[Catalog.retrying]].
     */
   private def claimJob(cfg: HarvestConfig): (HarvestStatus, String) = {
     val uuid = java.util.UUID.randomUUID().toString
-    var attempts = 0
-    while (true) {
+    Catalog.retrying {
       val v = reservoir.catalog.version("oai_clients")
       val cur = loadStatus(cfg.id)
       cur match {
@@ -228,56 +230,30 @@ final class OaiPmhClient(reservoir: Reservoir,
           throw new IllegalStateException(
             s"harvest job '${cfg.id}' is already running (owner $other); " +
               "stop(id) it first if its runner crashed")
-        case _ =>
-          val st = cur.map(_._1)
-            .getOrElse(HarvestStatus(cfg.id, "idle", None, cfg.from, 0L, 0L, None))
-            .copy(status = "running", error = None)
-          try {
-            saveStatus(st, stop = false, Some(uuid), v)
-            return (st, uuid)
-          } catch {
-            // another runner claimed between read and write: re-examine
-            case _: graft.storage.CommitConflict if attempts < CasAttempts =>
-              casBackoff(attempts); attempts += 1
-            case _: graft.storage.CommitConflict =>
-              throw new IllegalStateException(
-                s"could not claim harvest job '${cfg.id}': persistent commit " +
-                  "contention on oai_clients (too many concurrent jobs?)")
-          }
+        case _ => ()
       }
+      val st = cur.map(_._1)
+        .getOrElse(HarvestStatus(cfg.id, "idle", None, cfg.from, 0L, 0L, None))
+        .copy(status = "running", error = None)
+      saveStatus(st, stop = false, Some(uuid), v)
+      (st, uuid)
     }
-    sys.error("unreachable")
   }
 
-  /** Fencing check + persist: a runner whose claim was taken over (stop +
-    * re-run while it stalled) aborts instead of clobbering the new owner's
-    * progress. A pending stop request is preserved across mid-run flushes
-    * (only a terminal save consumes it via `clearStop`); `release` drops the
-    * owner claim on terminal saves. The write is an optimistic CAS so a
-    * concurrent `stop(id)` can't be silently overwritten.
+  /** Fencing check + persist. A pending stop request is preserved across
+    * mid-run flushes (only a terminal save consumes it via `clearStop`);
+    * `release` drops the owner claim on terminal saves. The write is an
+    * optimistic CAS so a concurrent `stop(id)` can't be silently overwritten.
     */
   private def saveOwned(s: HarvestStatus, uuid: String,
-      release: Boolean = false, clearStop: Boolean = false): Unit = {
-    var attempts = 0
-    while (true) {
+      release: Boolean = false, clearStop: Boolean = false): Unit =
+    Catalog.retrying {
       val v = reservoir.catalog.version("oai_clients")
       val cur = loadStatus(s.id)
-      cur.foreach { case (_, _, owner) =>
-        if (!owner.contains(uuid))
-          throw new IllegalStateException(
-            s"harvest job '${s.id}' was taken over by another runner " +
-              s"(owner ${owner.getOrElse("<none>")}); aborting this one")
-      }
+      requireOwner(s.id, cur, uuid)
       val stopFlag = !clearStop && cur.exists(_._2)
-      try {
-        saveStatus(s, stopFlag, if (release) None else Some(uuid), v)
-        return
-      } catch {
-        case _: graft.storage.CommitConflict if attempts < CasAttempts =>
-          casBackoff(attempts); attempts += 1
-      }
+      saveStatus(s, stopFlag, if (release) None else Some(uuid), v)
     }
-  }
 
   def status(id: String): Option[HarvestStatus] = loadStatus(id).map(_._1)
 
@@ -285,23 +261,13 @@ final class OaiPmhClient(reservoir: Reservoir,
     * recovery path that lets a crashed runner's claim be taken over. CAS so
     * a racing flush can't overwrite the request.
     */
-  def stop(id: String): Unit = {
-    var attempts = 0
-    while (attempts <= CasAttempts) {
+  def stop(id: String): Unit =
+    Catalog.retrying {
       val v = reservoir.catalog.version("oai_clients")
-      loadStatus(id) match {
-        case None => return
-        case Some((s, _, owner)) =>
-          try { saveStatus(s, stop = true, owner, v); return }
-          catch {
-            case _: graft.storage.CommitConflict =>
-              casBackoff(attempts); attempts += 1
-          }
+      loadStatus(id).foreach { case (s, _, owner) =>
+        saveStatus(s, stop = true, owner, v)
       }
     }
-    sys.error(s"could not persist stop request for harvest job '$id' " +
-      "(persistent commit contention)")
-  }
 
   private def buildUrl(cfg: HarvestConfig, token: Option[String],
       from: Option[String]): String = {
@@ -358,13 +324,7 @@ final class OaiPmhClient(reservoir: Reservoir,
     // would keep fetching and could ingest up to pagesPerIngest pages before
     // its next saveOwned aborted it. Ingest is an idempotent MERGE, so that
     // window was safe — but this closes it at the page boundary.
-    def assertStillOwner(): Unit =
-      loadStatus(cfg.id).foreach { case (_, _, owner) =>
-        if (!owner.contains(uuid))
-          throw new IllegalStateException(
-            s"harvest job '${cfg.id}' was taken over by another runner " +
-              s"(owner ${owner.getOrElse("<none>")}); aborting this one")
-      }
+    def assertStillOwner(): Unit = requireOwner(cfg.id, loadStatus(cfg.id), uuid)
 
     def flush(): Unit = if (bufferedPages > 0) {
       assertStillOwner()
@@ -382,12 +342,7 @@ final class OaiPmhClient(reservoir: Reservoir,
     try {
       while (continue) {
         val cur = loadStatus(cfg.id)
-        cur.foreach { case (_, _, owner) =>
-          if (!owner.contains(uuid))
-            throw new IllegalStateException(
-              s"harvest job '${cfg.id}' was taken over by another runner " +
-                s"(owner ${owner.getOrElse("<none>")}); aborting this one")
-        }
+        requireOwner(cfg.id, cur, uuid)
         val stopped = cur.exists(_._2)
         if (stopped) {
           flush()
@@ -429,15 +384,11 @@ final class OaiPmhClient(reservoir: Reservoir,
         // token resumes after them
         try flush() catch { case _: Exception => () }
         st = st.copy(status = "error", error = Some(e.getMessage))
+        // best effort: a usurped runner's row is theirs now, and if this
+        // save's retries run out too the returned status still reports
+        // the error
         try saveOwned(st, uuid, release = true, clearStop = true)
-        catch {
-          case _: IllegalStateException => () // usurped: theirs now
-          // CAS retries exhausted under contention: still return the error
-          // status instead of replacing it with a thrown CommitConflict
-          // (which would leave the row stuck at status=running, needing
-          // stop(id) to reclaim)
-          case _: graft.storage.CommitConflict => ()
-        }
+        catch { case _: Exception => () }
         st
     }
   }

@@ -6,9 +6,9 @@ import org.apache.spark.sql.types.StructType
 
 /** Thrown when an optimistic commit (`writeIf` / `overwritePartitionsIf` /
   * `overwriteGroupIf`) finds the table no longer at the version the caller's
-  * batch was computed against. Callers re-read the fresh snapshot and retry
-  * the batch — the reference's retry-once loop around its PG transaction
-  * (Storage.java:251-264).
+  * batch was computed against. [[Catalog.retrying]] re-runs the step against
+  * the fresh snapshot — the reference's retry loop around its PG
+  * transaction (Storage.java:251-264).
   */
 final case class CommitConflict(table: String, expected: Long, found: Long)
   extends RuntimeException(
@@ -17,7 +17,7 @@ final case class CommitConflict(table: String, expected: Long, found: Long)
 
 /** Thrown when a committer discovers its version claim was taken over by
   * another writer (it stalled past `claimTimeoutMs` and was presumed
-  * crashed). Nothing was committed; the caller retries like a
+  * crashed). Nothing was committed; [[Catalog.retrying]] retries it like a
   * [[CommitConflict]].
   */
 final case class ClaimLost(table: String, version: Long)
@@ -27,50 +27,48 @@ final case class ClaimLost(table: String, version: Long)
 
 /** One sub-table's batch inside an atomic multi-table group commit
   * ([[Catalog.overwriteGroupIf]]): overwrite the `touched` partitions of
-  * sub-table `sub` with `df`'s rows (partitioned by `partCol`).
-  *
-  * `unionStagedParts` (r17 optimization round) unions the staged frame's
-  * OWN partition values into `touched` — read off the staging directory's
-  * child names after the write (filesystem metadata only), replacing the
-  * separate `distinct().collect()` Spark job per batch the callers used
-  * to run (and re-running the batch subplan with it) to learn the same
-  * set. Declared-but-unstaged partitions still drop (emptied-partition
-  * semantics unchanged); staged-but-undeclared partitions can no longer
-  * be silently lost.
+  * sub-table `sub` with `df`'s rows (partitioned by `partCol`). The commit
+  * also registers every partition the staged frame actually holds — read
+  * off the staging directory's child names, no Spark job — so rows routed
+  * to an undeclared partition are never lost; a declared partition with no
+  * staged rows is dropped. An empty `partCol` stages `df` whole as the one
+  * partition named in `touched` (how whole-table writes commit).
   */
 final case class GroupBatch(sub: String, df: DataFrame, partCol: String,
-    touched: Seq[String], unionStagedParts: Boolean = false)
+    touched: Seq[String])
 
-/** Tenant-namespaced table layout on parquet with a snapshot-commit protocol
-  * (SURVEY.md §7.1 step 3): each table lives at
-  * `<root>/<tenant>/<table>/v=<N>`; `_LATEST` names the committed version and
-  * is replaced atomically (write-temp + rename), so concurrent readers always
-  * see a complete snapshot and resumption-token pagination can pin a version
-  * (SURVEY.md §7.4 risk 5). Replaces the reference's per-tenant PostgreSQL
+/** Tenant-namespaced tables on parquet with one snapshot-commit protocol
+  * (SURVEY.md §7.1 step 3), replacing the reference's per-tenant PostgreSQL
   * schemas (Storage.java:81-92) and its MVCC isolation.
   *
-  * Writer-writer safety: committers serialize on an exclusive versioned claim
-  * marker (`_COMMIT.v=N`, created with overwrite=false — atomic on HDFS-like
-  * stores) carrying the claimant's UUID. Every destructive step of a commit
-  * (removing a crashed claimant's leftovers, flipping `_LATEST`, vacuuming)
-  * re-reads the claim and verifies the UUID still matches, so a stalled
+  * On-disk layout, the same for every table: `<root>/<tenant>/<table>/_LATEST`
+  * names the committed version N; `_MANIFEST.v=N` maps each partition to its
+  * current data version M; the rows live at `parts/<urlencoded(p)>/v=M`. A
+  * whole table (`write` / `writeIf` / `read*` / `updateWith`) is a manifest
+  * table with one fixed partition; a partitioned table's batch rewrites only
+  * the partitions it touches plus one small manifest, so per-batch I/O is
+  * O(touched partitions), not O(table). Group tables namespace manifest keys
+  * as `sub/part`, giving several sub-tables one atomic commit point — the
+  * role PG transactions play in the reference. Readers pin one manifest and
+  * always see a complete snapshot; the `retainVersions` newest manifests and
+  * their data dirs stay readable (in-flight readers, time travel, pinned
+  * resumption tokens — SURVEY.md §7.4 risk 5).
+  *
+  * Every write goes through [[overwriteGroupIf]]: stage → claim → rename →
+  * manifest → flip `_LATEST`. Committers serialize on an exclusive versioned
+  * claim marker (`_COMMIT.v=N`, created with overwrite=false) carrying the
+  * claimant's UUID; every destructive step re-reads the claim, so a stalled
   * writer whose claim was taken over aborts with [[ClaimLost]] instead of
-  * clobbering the usurper's committed data. Takeover of a stale claim goes
-  * through an atomic rename-to-tombstone (never a bare delete), so two
-  * waiters can't both think they removed it and double-claim the version.
+  * clobbering the usurper's data. Takeover of a stale claim is an atomic
+  * rename-to-tombstone (never a bare delete), so two waiters can't both
+  * think they removed it and double-claim the version.
   *
-  * Read-modify-write callers additionally pass the snapshot version their
-  * batch was computed against (`writeIf` / `overwritePartitionsIf` /
-  * `overwriteGroupIf` / `updateWith`); if the table moved, the commit fails
-  * with [[CommitConflict]] instead of silently losing the other writer's
-  * update, and the caller recomputes against the fresh snapshot.
-  *
-  * Multi-table atomicity: sub-tables committed together via
-  * [[overwriteGroupIf]] share ONE manifest and ONE `_LATEST` flip (partition
-  * keys are namespaced `sub/part`), so a group either commits entirely or
-  * not at all, and a reader pinning one manifest version sees a consistent
-  * snapshot across every sub-table — the role PG transactions play in the
-  * reference.
+  * Read-modify-write callers pass the snapshot version their batch was
+  * computed against; if the table moved, the commit fails with
+  * [[CommitConflict]] instead of silently losing the other writer's update.
+  * One retry rule covers every such writer: [[Catalog.retrying]] re-runs the
+  * step on [[CommitConflict]], [[ClaimLost]] or a `FileNotFoundException`
+  * in the cause chain, with a fixed attempt limit and capped backoff.
   */
 final class Catalog(val spark: SparkSession, root: String, tenant: String) {
 
@@ -100,7 +98,7 @@ final class Catalog(val spark: SparkSession, root: String, tenant: String) {
   private def stagingTtlMs: Long =
     confLong("spark.graft.catalog.stagingTtlMs", 3600000L)
 
-  /** every N-th partitioned commit opportunistically vacuums data dirs no
+  /** every N-th commit opportunistically vacuums data dirs no
     * retained snapshot references (0 disables). Runs while still holding the
     * commit claim, so no concurrent writer can be mid-rename.
     */
@@ -113,7 +111,7 @@ final class Catalog(val spark: SparkSession, root: String, tenant: String) {
     * past the default current+previous window needs a knob, not a code
     * change). Floor 2: in-flight readers of the previous snapshot are
     * always safe. Raising it widens every retention decision consistently
-    * (whole-table versions, per-partition data versions, vacuum).
+    * (manifests, per-partition data versions, vacuum).
     */
   private def retainVersions: Long =
     math.max(2L, confLong("spark.graft.catalog.retainVersions", 2L))
@@ -135,13 +133,22 @@ final class Catalog(val spark: SparkSession, root: String, tenant: String) {
 
   def exists(name: String): Boolean = latestVersion(name).isDefined
 
+  /** the one manifest partition holding a whole table's rows */
+  private val WholeTable = "all"
+
+  /** a whole table's data dir in manifest `mf` of version `v` */
+  private def wholeDir(name: String, v: Long, mf: Map[String, Long]): String =
+    partDataDir(name, WholeTable, mf.getOrElse(WholeTable,
+      throw new IllegalStateException(
+        s"version $v of table '$name' is no longer retained"))).toString
+
   /** read the latest committed snapshot */
   def read(name: String): Option[DataFrame] =
     readVersion(name, latestVersion(name))
 
   /** read a pinned snapshot version (None → empty not allowed here) */
   def readVersion(name: String, version: Option[Long]): Option[DataFrame] =
-    version.map(v => spark.read.parquet(new Path(tableDir(name), s"v=$v").toString))
+    version.map(v => spark.read.parquet(wholeDir(name, v, manifestAt(name, v))))
 
   /** Read the latest snapshot under the EXPECTED schema, or an empty frame
     * with it. Applying `schema` at read time (not the file's own) makes
@@ -156,9 +163,9 @@ final class Catalog(val spark: SparkSession, root: String, tenant: String) {
     * the parquet footer (one small read; readOr serves config-row tables).
     */
   def readOr(name: String, schema: StructType): DataFrame =
-    latestVersion(name) match {
-      case Some(v) =>
-        val path = new Path(tableDir(name), s"v=$v").toString
+    snapshot(name) match {
+      case (v, mf) if mf.contains(WholeTable) =>
+        val path = wholeDir(name, v, mf)
         val expected = schema.fieldNames.map(_.toLowerCase(java.util.Locale.ROOT)).toSet
         val dropped = spark.read.parquet(path).schema.fieldNames
           .filterNot(n => expected.contains(n.toLowerCase(java.util.Locale.ROOT)))
@@ -167,7 +174,7 @@ final class Catalog(val spark: SparkSession, root: String, tenant: String) {
             "expected schema; pass the full current schema (a narrower one would lose " +
             "those columns through updateWith)")
         spark.read.schema(schema).parquet(path)
-      case None =>
+      case _ =>
         spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
     }
 
@@ -281,8 +288,8 @@ final class Catalog(val spark: SparkSession, root: String, tenant: String) {
     }
   }
 
-  /** retain the `retainVersions` latest versions (data, manifests, claim
-    * markers) for in-flight readers and time travel; GC everything older,
+  /** retain the `retainVersions` latest manifests and claim markers for
+    * in-flight readers and time travel; GC everything older,
     * plus aged-out orphan staging dirs (writer crashed before claiming)
     * and takeover tombstones. Live staging dirs and fresh claims are
     * never touched.
@@ -298,7 +305,7 @@ final class Catalog(val spark: SparkSession, root: String, tenant: String) {
     fs.listStatus(tableDir(name)).foreach { st =>
       val n = st.getPath.getName
       val aged = (ttl: Long) => now - st.getModificationTime > ttl
-      if (olderThan(n, "v=") || olderThan(n, "_COMMIT.v=") ||
+      if (olderThan(n, "_COMMIT.v=") ||
           olderThan(n, "_MANIFEST.v=") || olderThan(n, "_LATEST.tmp.") ||
           olderThan(n, "_MANIFEST.tmp.") ||
           (n.startsWith(".staging-") && aged(stagingTtlMs)) ||
@@ -320,64 +327,22 @@ final class Catalog(val spark: SparkSession, root: String, tenant: String) {
     * [[version]]; -1 skips the check). Throws [[CommitConflict]] otherwise —
     * the staged data is cleaned up and the caller recomputes.
     */
-  def writeIf(name: String, df: DataFrame, expected: Long): Long = {
-    val staging = new Path(tableDir(name),
-      s".staging-${java.util.UUID.randomUUID().toString.take(8)}")
-    df.write.mode("overwrite").parquet(staging.toString)
-    val (v, uuid) =
-      try claimNext(name, expected)
-      catch { case e: Throwable => fs.delete(staging, true); throw e }
-    val dest = new Path(tableDir(name), s"v=$v")
-    ensureOwned(name, v, uuid)
-    // under a fenced claim, an existing dest can only be a crashed claimant's
-    // leftover (a committed v would have advanced _LATEST past our base)
-    if (fs.exists(dest)) fs.delete(dest, true)
-    if (!fs.rename(staging, dest))
-      sys.error(s"failed to commit $name v=$v")
-    ensureOwned(name, v, uuid)
-    flipLatest(name, v)
-    gcVersions(name, v)
-    v
-  }
+  def writeIf(name: String, df: DataFrame, expected: Long): Long =
+    overwriteGroupIf(name, Seq(GroupBatch("", df, "", Seq(WholeTable))), expected)
 
-  /** Read-modify-write with optimistic retry: `f` maps the current snapshot
-    * to the full next contents; a concurrent commit between read and commit
-    * re-runs `f` against the fresh snapshot (up to `maxRetries` times) so no
-    * writer's update is silently lost. Also retries when a quick pair of
-    * concurrent commits GC'd the base version's files before the staging
-    * write evaluated the (lazy) read, and when this writer stalled and lost
-    * its claim.
+  /** Read-modify-write under [[Catalog.retrying]]: `f` maps the current
+    * snapshot to the full next contents, and is re-run against the fresh
+    * snapshot whenever the commit fails retryably, so no writer's update is
+    * silently lost.
     */
-  def updateWith(name: String, schema: StructType, maxRetries: Int = 3)(
-      f: DataFrame => DataFrame): Long = {
-    def fileGone(e: Throwable): Boolean =
-      Iterator.iterate(e)(_.getCause).takeWhile(_ != null).take(16)
-        .exists(_.isInstanceOf[java.io.FileNotFoundException])
-    var attempt = 0
-    while (true) {
+  def updateWith(name: String, schema: StructType)(
+      f: DataFrame => DataFrame): Long =
+    Catalog.retrying {
       val base = version(name)
-      val next = f(readOr(name, schema))
-      try return writeIf(name, next, base)
-      catch {
-        case e: Throwable
-            if (e.isInstanceOf[CommitConflict] || e.isInstanceOf[ClaimLost]
-              || fileGone(e)) && attempt < maxRetries =>
-          attempt += 1
-      }
+      writeIf(name, f(readOr(name, schema)), base)
     }
-    sys.error("unreachable")
-  }
 
-  // ---------------- partitioned copy-on-write tables ----------------
-  // Layout: <table>/_LATEST names manifest version N; <table>/_MANIFEST.v=N
-  // maps each partition value to its current data version; data files live at
-  // <table>/parts/<urlencoded(part)>/v=M. A batch that touches partitions S
-  // rewrites ONLY those partitions' data dirs plus one small manifest file —
-  // per-batch I/O is O(touched partitions), not O(table) — while readers
-  // keep full snapshot isolation (the committed manifest only ever names
-  // complete data dirs; the previous manifest and its dirs are retained for
-  // in-flight readers). Group tables namespace the manifest key as
-  // `sub/part`, giving several sub-tables one atomic commit point.
+  // ---------------- manifests and partition reads ----------------
 
   private def enc(part: String): String = Catalog.encodePart(part)
 
@@ -412,7 +377,7 @@ final class Catalog(val spark: SparkSession, root: String, tenant: String) {
     */
   def snapshotAt(name: String, v: Long): Map[String, Long] = manifestAt(name, v)
 
-  /** Atomically pin (version, manifest) of a partitioned or group table: the
+  /** Atomically pin (version, manifest) of a table: the
     * consistent snapshot a reader resolves every partition dir against. A
     * racing GC of the just-read manifest version (two commits land in
     * between) is retried.
@@ -501,7 +466,8 @@ final class Catalog(val spark: SparkSession, root: String, tenant: String) {
       touched: Seq[String], expected: Long): Long =
     overwriteGroupIf(name, Seq(GroupBatch("", df, partCol, touched)), expected)
 
-  /** stage one batch's rows partitioned by its partition column; returns the
+  /** stage one batch's rows partitioned by its partition column (or whole,
+    * as its one declared partition, when `partCol` is empty); returns the
     * staging root
     */
   private def stageBatch(name: String, b: GroupBatch): Path = {
@@ -512,14 +478,20 @@ final class Catalog(val spark: SparkSession, root: String, tenant: String) {
       s"stage $name/${if (b.sub.isEmpty) "data" else b.sub}")
     val staging = new Path(tableDir(name),
       s".staging-${java.util.UUID.randomUUID().toString.take(8)}")
-    // duplicate the partition column: partitionBy consumes `_p`, keeping
-    // partCol itself inside the data files. The value is URL-encoded first
-    // so staging dir names stay ASCII regardless of the JVM's filesystem
-    // encoding (non-ASCII partition values are otherwise unwritable on a
-    // POSIX-locale driver).
-    val encUdf = org.apache.spark.sql.functions.udf(Catalog.encodePart _)
-    b.df.withColumn("_p", encUdf(org.apache.spark.sql.functions.col(b.partCol)))
-      .write.partitionBy("_p").mode("overwrite").parquet(staging.toString)
+    if (b.partCol.isEmpty) {
+      require(b.touched.size == 1,
+        s"a batch without a partition column stages exactly one partition: ${b.touched}")
+      b.df.write.mode("overwrite").parquet(stagedDir(staging, b.touched.head).toString)
+    } else {
+      // duplicate the partition column: partitionBy consumes `_p`, keeping
+      // partCol itself inside the data files. The value is URL-encoded first
+      // so staging dir names stay ASCII regardless of the JVM's filesystem
+      // encoding (non-ASCII partition values are otherwise unwritable on a
+      // POSIX-locale driver).
+      val encUdf = org.apache.spark.sql.functions.udf(Catalog.encodePart _)
+      b.df.withColumn("_p", encUdf(org.apache.spark.sql.functions.col(b.partCol)))
+        .write.partitionBy("_p").mode("overwrite").parquet(staging.toString)
+    }
     staging
   }
 
@@ -530,8 +502,7 @@ final class Catalog(val spark: SparkSession, root: String, tenant: String) {
 
   /** the staged batch's own partition values, read off the staging dir's
     * child names (the exact inverse of [[stagedDir]]'s encoding) — a
-    * filesystem-metadata listing, replacing the per-batch
-    * `distinct().collect()` Spark job callers ran for the same set
+    * filesystem-metadata listing, no Spark job
     */
   private def listStagedParts(staging: Path): Seq[String] =
     fs.listStatus(staging).toSeq.map(_.getPath.getName)
@@ -540,12 +511,13 @@ final class Catalog(val spark: SparkSession, root: String, tenant: String) {
         org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
           .unescapePathName(n.stripPrefix("_p=")), "UTF-8"))
 
-  /** Atomic multi-sub-table commit: stage every batch, claim one version,
-    * move every staged partition dir into place, write ONE manifest naming
-    * them all, flip `_LATEST` once. Either every batch commits or none does,
-    * and a reader pinning the manifest sees all sub-tables at the same
-    * snapshot. `expected` as in [[overwritePartitionsIf]]. Sub names must not
-    * be reused as whole-partition keys of the same table.
+  /** The catalog's one commit sequence, behind every write: stage every
+    * batch, claim one version, move every staged partition dir into place,
+    * write ONE manifest naming them all, flip `_LATEST` once. Either every
+    * batch commits or none does, and a reader pinning the manifest sees all
+    * sub-tables at the same snapshot. `expected` as in
+    * [[overwritePartitionsIf]]. Sub names must not be reused as
+    * whole-partition keys of the same table.
     */
   def overwriteGroupIf(name: String, batches: Seq[GroupBatch],
       expected: Long): Long = {
@@ -584,26 +556,24 @@ final class Catalog(val spark: SparkSession, root: String, tenant: String) {
       // under the claim the base manifest is stable: no other writer can
       // commit, and the fencing checks abort us if we lose the claim
       val mf = partitionManifest(name)
-      var next = mf
       ensureOwned(name, v, uuid)
-      staged.foreach { case (b, staging) =>
-        val key = (p: String) => if (b.sub.isEmpty) p else s"${b.sub}/$p"
-        val touched =
-          if (b.unionStagedParts) b.touched ++ listStagedParts(staging)
-          else b.touched
-        touched.distinct.foreach { p =>
-          val src = stagedDir(staging, p)
-          if (fs.exists(src)) {
-            val nv = mf.getOrElse(key(p), 0L) + 1
-            val dest = partDataDir(name, key(p), nv)
-            fs.mkdirs(dest.getParent)
-            // a leftover of a crashed claimant (fenced: cannot be committed)
-            if (fs.exists(dest)) fs.delete(dest, true)
-            if (!fs.rename(src, dest))
-              sys.error(s"failed to commit partition ${key(p)} of $name")
-            next = next + (key(p) -> nv)
-          } else next = next - key(p) // partition emptied by this batch
-        }
+      // manifest key → staged dir of every partition a batch declared or
+      // actually staged
+      val parts: Seq[(String, Path)] = staged.flatMap { case (b, staging) =>
+        (b.touched ++ listStagedParts(staging)).distinct.map(p =>
+          (if (b.sub.isEmpty) p else s"${b.sub}/$p") -> stagedDir(staging, p))
+      }
+      val next = parts.foldLeft(mf) { case (m, (key, src)) =>
+        if (fs.exists(src)) {
+          val nv = mf.getOrElse(key, 0L) + 1
+          val dest = partDataDir(name, key, nv)
+          fs.mkdirs(dest.getParent)
+          // a leftover of a crashed claimant (fenced: cannot be committed)
+          if (fs.exists(dest)) fs.delete(dest, true)
+          if (!fs.rename(src, dest))
+            sys.error(s"failed to commit partition $key of $name")
+          m + (key -> nv)
+        } else m - key // partition emptied by this batch
       }
       cleanup()
 
@@ -621,17 +591,14 @@ final class Catalog(val spark: SparkSession, root: String, tenant: String) {
       // versions (current + previous by default)
       ensureOwned(name, v, uuid)
       val keepBack = retainVersions - 1
-      staged.foreach { case (b, _) =>
-        val key = (p: String) => if (b.sub.isEmpty) p else s"${b.sub}/$p"
-        b.touched.distinct.foreach { p =>
-          next.get(key(p)).foreach { nv =>
-            val pd = partDataDir(name, key(p), nv).getParent
-            if (fs.exists(pd)) fs.listStatus(pd).foreach { st =>
-              val n = st.getPath.getName
-              if (n.startsWith("v=") &&
-                  n.stripPrefix("v=").toLong < nv - keepBack)
-                fs.delete(st.getPath, true)
-            }
+      parts.foreach { case (key, _) =>
+        next.get(key).foreach { nv =>
+          val pd = partDataDir(name, key, nv).getParent
+          if (fs.exists(pd)) fs.listStatus(pd).foreach { st =>
+            val n = st.getPath.getName
+            if (n.startsWith("v=") &&
+                n.stripPrefix("v=").toLong < nv - keepBack)
+              fs.delete(st.getPath, true)
           }
         }
       }
@@ -724,6 +691,34 @@ final class Catalog(val spark: SparkSession, root: String, tenant: String) {
 }
 
 object Catalog {
+  /** how many times [[retrying]] runs a step before its failure propagates */
+  private[graft] val RetryAttempts = 10
+
+  /** The one retry rule for read-modify-write steps over the catalog:
+    * `step` re-reads the snapshot it needs and commits against that
+    * version; when it fails with [[CommitConflict]], [[ClaimLost]], or a
+    * `FileNotFoundException` anywhere in the cause chain (two quick commits
+    * GC'd the base snapshot's files before the step's lazy read ran), it is
+    * re-run against the fresh snapshot, up to [[RetryAttempts]] times with
+    * a 10 ms·2ⁿ backoff capped at 1 s. Any other failure, or the last
+    * attempt's, propagates.
+    */
+  def retrying[T](step: => T): T = {
+    @annotation.tailrec def attempt(n: Int): T = scala.util.Try(step) match {
+      case scala.util.Failure(e) if n < RetryAttempts && retryable(e) =>
+        Thread.sleep(math.min(10L << (n - 1), 1000L))
+        attempt(n + 1)
+      case t => t.get
+    }
+    attempt(1)
+  }
+
+  private def retryable(e: Throwable): Boolean =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null).take(16).exists {
+      case _: CommitConflict | _: ClaimLost | _: java.io.FileNotFoundException => true
+      case _ => false
+    }
+
   /** URL-encode a partition value for use as a directory name (kept in the
     * companion so the staging write's UDF closure stays serializable).
     */

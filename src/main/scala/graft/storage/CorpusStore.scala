@@ -195,29 +195,25 @@ object CorpusStore {
     val tset = touched.toSet
     val old = cat.partitionManifest(table).keysIterator
       .filter(p => tset.contains(partSource(p))).toSeq
-    // the staged frame's own part values are ALWAYS collected here (full
-    // source rewrite: every committed row is in `out`)
     commitDataParts(cat, table, out, idCol, sourceCol, buckets, dataSplits,
-      old, forceStagedCollect = true)
+      old)
   }
 
   /** commit `out` as the full new content of exactly the `declared` data
-    * partitions (∪ the staged frame's own part values, read off the
-    * staging directory by the commit — r17: no more per-commit
-    * `distinct().collect()` job) — the incremental-commit core: one file
-    * per bucket dir, sorted by id
+    * partitions (∪ the staged frame's own part values, which the commit
+    * reads off the staging directory) — the incremental-commit core: one
+    * file per bucket dir, sorted by id
     */
   private def commitDataParts(cat: Catalog, table: String, out: DataFrame,
       idCol: String, sourceCol: String, buckets: Int,
-      dataSplits: Set[(Long, Long)], declared: Seq[String],
-      forceStagedCollect: Boolean = false): Long = {
+      dataSplits: Set[(Long, Long)], declared: Seq[String]): Long = {
     val route = routeUdf(dataSplits, buckets.toLong)
     val df = out.withColumn("_graft_part",
         concat(route(col(idCol)), lit("#"), col(sourceCol)))
       .repartition(col("_graft_part"))
       .sortWithinPartitions(col("_graft_part"), col(idCol))
     cat.overwriteGroupIf(table, Seq(GroupBatch("", df, "_graft_part",
-      declared.distinct, unionStagedParts = true)), -1L)
+      declared.distinct)), -1L)
   }
 
   /** the data-layout fail-fast twin of [[requireIndexReady]]: a store
@@ -406,13 +402,9 @@ object CorpusStore {
       if (k == null) null else chainLabels(splits, b, k.longValue()))
 
   // With splits in play, rows read off a half-split ancestor re-route to
-  // leaves no batch key names — a staged dir absent from `touched` would
-  // be silently dropped by the commit, LOSING rows. Every CorpusStore
-  // GroupBatch therefore sets `unionStagedParts = true`: the commit unions
-  // the staged frame's own partition values into `touched`, read off the
-  // staging directory's child names (r17 — this replaced a per-batch
-  // `distinct().collect()` Spark job, which also re-ran the batch subplan,
-  // with a filesystem metadata listing).
+  // leaves no batch key names; the commit registers every partition a
+  // batch actually staged (read off the staging directory — no Spark job),
+  // so those rows land even though `touched` never named their leaf.
 
   /** one sub-table's partition values in a pinned group manifest */
   private def subParts(manifest: Map[String, Long],
@@ -617,8 +609,7 @@ object CorpusStore {
       .sortWithinPartitions(col("_graft_part"), col(sortKey))
     val tset = touched.toSet
     val old = existing.filter(p => tset.contains(partSource(p)))
-    GroupBatch(sub, df, "_graft_part", old.distinct,
-      unionStagedParts = true)
+    GroupBatch(sub, df, "_graft_part", old.distinct)
   }
 
   private def confBatch(spark: org.apache.spark.sql.SparkSession,
@@ -695,7 +686,7 @@ object CorpusStore {
           !oldB.contains(bucketsEff.toLong))
       if (needRewrite)
         commitDataParts(cat, table, full, idCol, sourceCol, bucketsEff,
-          Set.empty, dataMf.keys.toSeq, forceStagedCollect = true)
+          Set.empty, dataMf.keys.toSeq)
       val stored = full.select(col(idCol), col(sourceCol), col(textCol))
       val manifest = cat.snapshot(indexTable(table))._2
       val toks = SubstringDedup.tokenFrame(
@@ -905,16 +896,7 @@ object CorpusStore {
     requireDataLayout(cat, table)
     val stateIds = idxManifest.keysIterator.filter(_.startsWith("state/"))
       .map(_.stripPrefix("state/").toLong).toSeq
-    val highWater = if (stateIds.nonEmpty) stateIds.max
-    else {
-      // pre-r17 stores kept the mark in a `__stream_state` table; read it
-      // only until the first manifest-encoded mark lands (then: no job)
-      import org.apache.spark.sql.types._
-      val committed = cat.readOr(s"${table}__stream_state",
-          StructType(Seq(StructField("batch_id", LongType))))
-        .agg(max(col("batch_id"))).head()
-      if (committed.isNullAt(0)) Long.MinValue else committed.getLong(0)
-    }
+    val highWater = stateIds.maxOption.getOrElse(Long.MinValue)
     if (batchId <= highWater) {
       // make a skipped batch VISIBLE: a fresh streaming query without a
       // checkpoint restarts batch ids at 0, and the high-water mark would
@@ -1256,8 +1238,7 @@ object CorpusStore {
           concat(route(col(keyCol)), lit("#"), col(sourceCol)))
         .repartition(col("_graft_part"))
         .sortWithinPartitions(col("_graft_part"), col(sortKey))
-      GroupBatch(sub, content, "_graft_part", parts.distinct,
-        unionStagedParts = true)
+      GroupBatch(sub, content, "_graft_part", parts.distinct)
     }
     // the high-water mark: one tiny partition whose KEY is the batch id;
     // prior marks drop in the same commit (monotone single key)
@@ -1397,7 +1378,7 @@ object CorpusStore {
         val rows = cat.readManifestParts(table, dataMf,
           storedSchema(idCol, sourceCol, textCol), parents)
         commitDataParts(cat, table, rows, idCol, sourceCol, b.toInt,
-          splits1, parents, forceStagedCollect = true)
+          splits1, parents)
       }
       ()
     } else {
@@ -1415,8 +1396,7 @@ object CorpusStore {
         .repartition(col("_graft_part"))
         .sortWithinPartitions(col("_graft_part"), col(sortKey))
       cat.overwriteGroupIf(indexTable(table),
-        Seq(GroupBatch(space, content, "_graft_part", parents.distinct,
-            unionStagedParts = true),
+        Seq(GroupBatch(space, content, "_graft_part", parents.distinct),
           registryBatch(spark, space, m, i)), -1L)
       ()
     }

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 import graft.SparkEntry
 
 /** Plan-inspection main: prints the formatted physical plan of the given
@@ -9,6 +7,7 @@ import graft.SparkEntry
   * audited per operator (the "iterate until it's the plan you'd want" loop).
   *
   * Usage: runMain graft.tools.Explain [sfDir] [queryName ...]
+  * (runs at local[SPARK_GRAFT_CPUS], default 32)
   */
 object Explain {
   def main(args: Array[String]): Unit = {
@@ -16,13 +15,7 @@ object Explain {
     val names =
       if (args.length > 1) args.drop(1).toSeq
       else SparkEntry.allQ.filter(_.headline).map(_.name)
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Bench.benchSession("Explain")
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { n =>
       println(s"\n========== $n ==========")

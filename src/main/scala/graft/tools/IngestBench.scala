@@ -2,7 +2,6 @@ package graft.tools
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.api.{MatchKeyConfig, Reservoir}
@@ -14,6 +13,7 @@ import graft.api.{MatchKeyConfig, Reservoir}
   * proportional to the batch's sources/touched clusters, not table size.
   *
   * Usage: runMain graft.tools.IngestBench [nRecords] [batchSize] [growFactor]
+  * (runs at local[SPARK_GRAFT_CPUS], default 32)
   */
 object IngestBench {
   def main(args: Array[String]): Unit = {
@@ -21,13 +21,7 @@ object IngestBench {
     val batch = args.lift(1).map(_.toInt).getOrElse(5000)
     val grow = args.lift(2).map(_.toInt).getOrElse(10)
     val nSources = 20
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Bench.benchSession("IngestBench")
     spark.sparkContext.setLogLevel("ERROR")
 
     val root = graft.storage.Catalog.tempRoot("graft-soak")

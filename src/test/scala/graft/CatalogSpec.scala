@@ -36,6 +36,23 @@ class CatalogSpec extends AnyFunSuite {
     c.readPartitionedOr("tbl", schema).collect()
       .map(r => (r.getString(0), r.getInt(1))).toSet
 
+  /** A way of writing table `tbl`: its name, one row's commit, the full
+    * read-back, and the manifest key the row lands under. Whole tables are
+    * manifest tables with one fixed partition (`all`), so the commit
+    * protocol tests run against both.
+    */
+  private case class Kind(name: String, put: (Catalog, (String, Int)) => Long,
+      get: Catalog => Set[(String, Int)], key: String => String)
+
+  private val kinds = Seq(
+    Kind("whole", (c, row) => c.write("tbl", df(row)),
+      c => c.readOr("tbl", schema).collect()
+        .map(r => (r.getString(0), r.getInt(1))).toSet,
+      _ => "all"),
+    Kind("partitioned",
+      (c, row) => c.overwritePartitions("tbl", df(row), "k", Seq(row._1)),
+      readAll, identity))
+
   test("overwritePartitions touches only the named partitions") {
     val c = fresh()
     c.overwritePartitions("tbl", df("a" -> 1, "b" -> 2), "k", Seq("a", "b"))
@@ -123,7 +140,7 @@ class CatalogSpec extends AnyFunSuite {
     val threads = (1 to 2).map { t =>
       new Thread(() => {
         for (i <- 1 to perWriter)
-          c.updateWith("tbl", schema, maxRetries = 20)(
+          c.updateWith("tbl", schema)(
             cur => cur.unionByName(df(s"w$t-$i" -> i)))
       })
     }
@@ -178,41 +195,46 @@ class CatalogSpec extends AnyFunSuite {
   }
 
   test("a stale claim from a crashed writer is taken over") {
-    val dir = Files.createTempDirectory("graft-cat").toString
-    val cat = new Catalog(spark, dir, "t")
-    cat.write("tbl", df("a" -> 1))
-    // a crashed writer left a claim for v=2, an hour old
-    val fs = hfs(dir)
-    val claim = new org.apache.hadoop.fs.Path(s"$dir/t/tbl/_COMMIT.v=2")
-    val out = fs.create(claim, false)
-    out.write("dead-uuid 0".getBytes("UTF-8")); out.close()
-    fs.setTimes(claim, System.currentTimeMillis() - 3600000L, -1)
-    assert(cat.write("tbl", df("a" -> 2)) == 2L)
-    assert(cat.readOr("tbl", schema).collect().map(_.getInt(1)).toSeq == Seq(2))
+    kinds.foreach { kind =>
+      val dir = Files.createTempDirectory("graft-cat").toString
+      val cat = new Catalog(spark, dir, "t")
+      kind.put(cat, "a" -> 1)
+      // a crashed writer left a claim for v=2, an hour old
+      val fs = hfs(dir)
+      val claim = new org.apache.hadoop.fs.Path(s"$dir/t/tbl/_COMMIT.v=2")
+      val out = fs.create(claim, false)
+      out.write("dead-uuid 0".getBytes("UTF-8")); out.close()
+      fs.setTimes(claim, System.currentTimeMillis() - 3600000L, -1)
+      assert(kind.put(cat, "a" -> 2) == 2L, kind.name)
+      assert(kind.get(cat) == Set("a" -> 2), kind.name)
+    }
   }
 
   test("mid-commit crash debris is reclaimed: dest dir, manifest, claim") {
-    val dir = Files.createTempDirectory("graft-cat").toString
-    val cat = new Catalog(spark, dir, "t")
-    cat.overwritePartitions("tbl", df("a" -> 1), "k", Seq("a"))
-    val fs = hfs(dir)
-    // a writer crashed AFTER renaming its partition data and writing its
-    // manifest for v=2, but BEFORE flipping _LATEST: readers still see v=1,
-    // and the claim, data dir, and manifest are all debris
-    val claim = new org.apache.hadoop.fs.Path(s"$dir/t/tbl/_COMMIT.v=2")
-    val out = fs.create(claim, false)
-    out.write("dead-uuid 0".getBytes("UTF-8")); out.close()
-    fs.setTimes(claim, System.currentTimeMillis() - 3600000L, -1)
-    fs.mkdirs(new org.apache.hadoop.fs.Path(s"$dir/t/tbl/parts/a/v=2"))
-    val mf = fs.create(new org.apache.hadoop.fs.Path(s"$dir/t/tbl/_MANIFEST.v=2"), false)
-    mf.write("2\ta".getBytes("UTF-8")); mf.close()
-    // committed state is untouched by the debris
-    assert(readAll(cat) == Set("a" -> 1))
-    // the next writer takes over the stale claim, replaces every leftover,
-    // and commits cleanly
-    assert(cat.overwritePartitions("tbl", df("a" -> 7), "k", Seq("a")) == 2L)
-    assert(readAll(cat) == Set("a" -> 7))
-    assert(cat.partitionManifest("tbl").keySet == Set("a"))
+    kinds.foreach { kind =>
+      val dir = Files.createTempDirectory("graft-cat").toString
+      val cat = new Catalog(spark, dir, "t")
+      kind.put(cat, "a" -> 1)
+      val fs = hfs(dir)
+      val key = kind.key("a")
+      // a writer crashed AFTER renaming its partition data and writing its
+      // manifest for v=2, but BEFORE flipping _LATEST: readers still see
+      // v=1, and the claim, data dir, and manifest are all debris
+      val claim = new org.apache.hadoop.fs.Path(s"$dir/t/tbl/_COMMIT.v=2")
+      val out = fs.create(claim, false)
+      out.write("dead-uuid 0".getBytes("UTF-8")); out.close()
+      fs.setTimes(claim, System.currentTimeMillis() - 3600000L, -1)
+      fs.mkdirs(new org.apache.hadoop.fs.Path(s"$dir/t/tbl/parts/$key/v=2"))
+      val mf = fs.create(new org.apache.hadoop.fs.Path(s"$dir/t/tbl/_MANIFEST.v=2"), false)
+      mf.write(s"2\t$key".getBytes("UTF-8")); mf.close()
+      // committed state is untouched by the debris
+      assert(kind.get(cat) == Set("a" -> 1), kind.name)
+      // the next writer takes over the stale claim, replaces every leftover,
+      // and commits cleanly
+      assert(kind.put(cat, "a" -> 7) == 2L, kind.name)
+      assert(kind.get(cat) == Set("a" -> 7), kind.name)
+      assert(cat.partitionManifest("tbl") == Map(key -> 2L), kind.name)
+    }
   }
 
   test("orphaned staging dirs are aged out by the next commit's GC") {
@@ -334,16 +356,47 @@ class CatalogSpec extends AnyFunSuite {
         assert(rows == Set("a" -> (v.toInt * 10), "b" -> 2),
           s"post-vacuum v=$v: $rows")
       }
+
+      // the whole-table case: the same window through readVersion
+      val w = fresh()
+      (1 to 5).foreach(i => w.write("tbl", df("w" -> i)))
+      assert(w.snapshotAt("tbl", 1L).isEmpty)
+      intercept[IllegalStateException](w.readVersion("tbl", Some(1L)))
+      (2L to 5L).foreach { v =>
+        assert(w.readVersion("tbl", Some(v)).get.collect()
+          .map(_.getInt(1)).toSeq == Seq(v.toInt), s"whole v=$v")
+      }
     } finally spark.conf.unset("spark.graft.catalog.retainVersions")
   }
 
   test("the default retention window stays current+previous") {
-    val c = fresh()
-    c.overwritePartitions("tbl", df("a" -> 1), "k", Seq("a"))
-    c.overwritePartitions("tbl", df("a" -> 2), "k", Seq("a"))
-    c.overwritePartitions("tbl", df("a" -> 3), "k", Seq("a"))
-    assert(c.snapshotAt("tbl", 1L).isEmpty)
-    assert(c.snapshotAt("tbl", 2L).nonEmpty)
-    assert(c.snapshotAt("tbl", 3L).nonEmpty)
+    kinds.foreach { kind =>
+      val dir = Files.createTempDirectory("graft-cat").toString
+      val c = new Catalog(spark, dir, "t")
+      val fs = hfs(dir)
+      def p(rel: String) = new org.apache.hadoop.fs.Path(s"$dir/t/tbl/$rel")
+      (1 to 3).foreach { i =>
+        assert(kind.put(c, "a" -> i) == i.toLong, kind.name)
+        // every commit is a manifest commit: no <table>/v=N directory
+        assert(fs.exists(p(s"_MANIFEST.v=$i")) && !fs.exists(p(s"v=$i")),
+          s"${kind.name} v=$i")
+      }
+      assert(c.snapshotAt("tbl", 1L).isEmpty, kind.name)
+      assert(c.snapshotAt("tbl", 2L).nonEmpty, kind.name)
+      assert(c.snapshotAt("tbl", 3L).nonEmpty, kind.name)
+      val key = kind.key("a")
+      assert(!fs.exists(p(s"parts/$key/v=1")) && fs.exists(p(s"parts/$key/v=2")),
+        kind.name)
+    }
+    // a whole table reads its retained previous version, and an emptied
+    // one reads back empty under its schema
+    val w = fresh()
+    (1 to 3).foreach(i => w.write("tbl", df("a" -> i)))
+    assert(w.readVersion("tbl", Some(2L)).get.collect()
+      .map(_.getInt(1)).toSeq == Seq(2))
+    assert(w.read("tbl").get.collect().map(_.getInt(1)).toSeq == Seq(3))
+    w.write("tbl", df())
+    assert(w.readOr("tbl", schema).count() == 0L)
+    assert(w.read("tbl").get.schema.fieldNames.toSeq == Seq("k", "v"))
   }
 }

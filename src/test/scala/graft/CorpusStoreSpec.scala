@@ -671,22 +671,18 @@ class CorpusStoreSpec extends AnyFunSuite {
     assert(rows(1L).startsWith("document number 1"), rows(1L))
   }
 
-  test("high-water mark: manifest-encoded, replays skipped, and a legacy " +
-      "__stream_state table is honored until the first new-style commit") {
+  test("high-water mark: manifest-encoded, replays skipped, one key per " +
+      "batch") {
     import spark.implicits._
     val cat = fresh()
-    // legacy mark: batch ids <= 7 already committed by a pre-r17 build
-    cat.write("c__stream_state", Seq(7L).toDF("batch_id"))
     val b = Seq((1L, "web", "the quick brown fox jumps over the lazy dog"))
       .toDF("doc_id", "source", "text")
-    assert(CorpusStore.ingestBatch(cat, "c", b, 7L, "doc_id", "text",
-      "source", minWords = 5) == 0L, "legacy mark must skip batch 7")
-    // batch 8 commits; the mark moves INTO the index-group manifest
+    // batch 8 commits; the mark lands IN the index-group manifest
     assert(CorpusStore.ingestBatch(cat, "c", b, 8L, "doc_id", "text",
       "source", minWords = 5) == 1L)
     val (_, imf) = cat.snapshot("c__idx")
     assert(imf.contains("state/8"), imf.keySet.toString)
-    // replay of 8 skips without touching the legacy table
+    // replay of 8 skips: no new commit
     assert(CorpusStore.ingestBatch(cat, "c", b, 8L, "doc_id", "text",
       "source", minWords = 5) == 1L)
     // the next batch REPLACES the mark key (monotone single key)

@@ -1,12 +1,17 @@
 package graft
 
 import java.nio.file.{Files, Paths}
+import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy}
+import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.api.{MatchKeyConfig, Reservoir}
 import graft.harvest.{HarvestConfig, OaiHarvest, OaiPmhClient}
+import graft.storage.{Catalog, ClaimLost}
 
 /** Harvest-client tests with a scripted HTTP function (the reference's fake
   * OAI server with fault injection, MainVerticleTest.java:3474-4487,
@@ -218,5 +223,86 @@ class OaiHarvestSpec extends AnyFunSuite {
     good.stop("job8")
     val st = good.run(cfg)
     assert(st.status == "idle" && st.totalRecords == 1)
+  }
+
+  // ---------------- fault injection on job-row commits ----------------
+
+  /** Run `body` with `fault` injected into the n-th `oai_clients` commit
+    * attempt whenever `at(n)` holds. The hook is a planner strategy that
+    * sees the job row's staging write on the committing thread — after the
+    * writer read the version it commits against, before it claims the next
+    * one — so a commit landing there is a real conflict.
+    */
+  private def withJobRowFault[T](at: Int => Boolean, fault: Reservoir => Unit,
+      r: Reservoir)(body: => T): (T, Int) = {
+    val attempts = new AtomicInteger(0)
+    val faults = new AtomicInteger(0)
+    val hook = new SparkStrategy {
+      def apply(plan: LogicalPlan): Seq[SparkPlan] = {
+        plan match {
+          case w: InsertIntoHadoopFsRelationCommand
+              if w.outputPath.toString.contains("/oai_clients/.staging-") &&
+                at(attempts.incrementAndGet()) =>
+            faults.incrementAndGet()
+            fault(r)
+          case _ => ()
+        }
+        Nil
+      }
+    }
+    spark.experimental.extraStrategies = Seq(hook)
+    try (body, faults.get) finally spark.experimental.extraStrategies = Nil
+  }
+
+  /** another writer's commit to the job table lands (no row changes) */
+  private val concurrentCommit: Reservoir => Unit =
+    r => r.catalog.overwriteGroupIf("oai_clients", Nil, -1L)
+
+  /** this writer's claim is taken over while it stalls */
+  private val claimLost: Reservoir => Unit =
+    r => throw ClaimLost("oai_clients", r.catalog.version("oai_clients") + 1)
+
+  private val twoPages: String => (Int, String) = url =>
+    "resumptionToken=([^&]+)".r.findFirstMatchIn(url).map(_.group(1)) match {
+      case None => (200, page(Seq(("H1", "2024-02-01", false),
+        ("H2", "2024-02-02", false)), Some("tok1")))
+      case _ => (200, page(Seq(("H3", "2024-02-03", false)), None))
+    }
+
+  test("job-row commits retry a conflicting commit and a lost claim") {
+    Seq("conflict" -> concurrentCommit, "claim lost" -> claimLost).foreach {
+      case (what, fault) =>
+        val r = freshReservoir()
+        val client = new OaiPmhClient(r, twoPages, _ => ())
+        val cfg = HarvestConfig("jobF", "http://fake/oai", sourceId = "SRC",
+          pagesPerIngest = 1)
+        // the first attempt of every job-row write fails: the claim, each
+        // page's flush, and the terminal save
+        val (st, faults) = withJobRowFault(_ % 2 == 1, fault, r)(client.run(cfg))
+        assert(faults >= 4, s"$what: $faults faults injected")
+        assert(st.status == "idle" && st.totalRecords == 3 &&
+          st.totalRequests == 2, s"$what: $st")
+        assert(client.status("jobF").exists(_.status == "idle"), what)
+        assert(r.records().count() == 3, what)
+    }
+  }
+
+  test("a job-row write whose retries run out ends the job in error, not " +
+      "running") {
+    val r = freshReservoir()
+    val client = new OaiPmhClient(r, twoPages, _ => ())
+    val cfg = HarvestConfig("jobX", "http://fake/oai", sourceId = "SRC",
+      pagesPerIngest = 1)
+    // the claim commits; every attempt of the first page's flush conflicts
+    val (st, faults) = withJobRowFault(
+      n => n > 1 && n <= 1 + Catalog.RetryAttempts, concurrentCommit, r)(
+      client.run(cfg))
+    assert(faults == Catalog.RetryAttempts)
+    assert(st.status == "error" &&
+      st.error.exists(_.contains("concurrent write to 'oai_clients'")), st.toString)
+    assert(client.status("jobX").exists(_.status == "error"),
+      s"persisted: ${client.status("jobX")}")
+    // the terminal save released the claim: the job starts again cleanly
+    assert(client.run(cfg).status == "idle")
   }
 }
