@@ -14,7 +14,7 @@ import graft.cql.Cql
 import graft.functions.{GoldRush, JsonPathLite}
 import graft.marc.{MarcJson, MarcUtil, MarcXml}
 import graft.oai.{OaiDates, ResumptionToken}
-import graft.storage.{Catalog, GroupBatch}
+import graft.storage.{BucketSizing, Catalog, GroupBatch}
 
 /** A match-key pool definition (FIXTURES.md §3): `matcher` is either
   * `goldrush`/`goldrush2024`, or `jsonpath:<expr>`; `update` ∈ ingest|manual.
@@ -34,6 +34,13 @@ final case class OaiPage(
   */
 final case class OaiItem(clusterId: String, datestamp: Timestamp,
     deleted: Boolean, metadataXml: Option[String])
+
+/** A match-key pool pinned at one manifest: its state, its version (the
+  * `expected` of an optimistic save), the manifest, and the bucket modulus
+  * its keys carry.
+  */
+private[api] final case class PoolSnapshot(state: ClusterState,
+    version: Long, manifest: Map[String, Long], modulus: Int)
 
 /** The library facade mirroring the reference's API surface (SURVEY.md §2.12):
   * ingest with per-pool incremental clustering, CQL-queried record and
@@ -96,7 +103,8 @@ final class Reservoir(val spark: SparkSession, root: String, tenant: String) {
   def deleteMatchKeyConfig(id: String): Unit = {
     catalog.updateWith("config_matchkeys", matchKeySchema)(
       _.filter(col("id") =!= id))
-    saveState(id, subTables(ClusterState.empty(spark)), allBuckets, -1L)
+    Catalog.retrying(saveState(id, loadState(id), ClusterState.empty(spark),
+      allSubs, None))
   }
 
   // ---------------- oai config (GET/PUT/DELETE /config/oai) ----------------
@@ -150,25 +158,36 @@ final class Reservoir(val spark: SparkSession, root: String, tenant: String) {
   // ---------------- cluster state io ----------------
   // A pool's meta/assignments/values live in ONE group table (`pool_<id>`,
   // sub-tables committed atomically: one manifest, one _LATEST flip), each
-  // bucketed by hash(clusterId) % PoolBuckets. An incremental batch only
-  // rewrites the buckets holding touched clusters: every row an ingest/
-  // delete/merge changes has both its old and its new clusterId in the
-  // batch's touched set (newly assigned, absorbed, survivor, or previous
-  // cluster of a moved record — all marked datestamp = ts in meta), so
-  // untouched buckets are byte-identical and never rewritten. Because the
-  // three sub-tables share one commit point, a concurrent writer can never
-  // observe (or leave behind) a half-updated pool — the role the reference's
-  // PG transaction plays (Storage.java:251-264) — and loadState pins one
-  // manifest for a consistent cross-table snapshot.
-
-  private val PoolBuckets = 64
-
-  private val allBuckets: Seq[String] = (0 until PoolBuckets).map(_.toString)
-
-  private def bucketOf(clusterId: Column): Column =
-    pmod(hash(clusterId), lit(PoolBuckets)).cast("string")
+  // bucketed by hash(clusterId) % m under the manifest keys `<sub>/<m>.<b>`.
+  // The modulus m is derived from the pool's own bytes by the corpus store's
+  // rule (BucketSizing: the smallest power of two keeping a bucket under
+  // baseBucketBytes), so a pool of a few thousand clusters is one bucket per
+  // sub-table and a PALCI-scale pool tens to a hundred. The keys carry m, so
+  // loadState learns it from the manifest without a Spark job. A save reads
+  // the pool's bytes off filesystem metadata; when they outgrow m, m grows
+  // to the derived power of two and the same commit rewrites every bucket
+  // and drops the old keys. m never shrinks.
+  //
+  // Otherwise an incremental batch only rewrites the buckets holding
+  // touched clusters: every row an ingest/delete/merge changes has both its
+  // old and its new clusterId in the batch's touched set (newly assigned,
+  // absorbed, survivor, or previous cluster of a moved record — all marked
+  // datestamp = ts in meta), so untouched buckets are byte-identical and
+  // never rewritten. Because the three sub-tables share one commit point, a
+  // concurrent writer can never observe (or leave behind) a half-updated
+  // pool — the role the reference's PG transaction plays
+  // (Storage.java:251-264) — and loadState pins one manifest for a
+  // consistent cross-table snapshot.
 
   private def poolTable(pool: String): String = s"pool_$pool"
+
+  /** the manifest key (below the sub-table) of a clusterId's bucket */
+  private def bucketOf(clusterId: Column, m: Int): Column =
+    concat(lit(s"$m."), pmod(hash(clusterId), lit(m)).cast("string"))
+
+  private def allBuckets(m: Int): Seq[String] = (0 until m).map(b => s"$m.$b")
+
+  private val BucketKey = """[^/]+/(\d+)\.\d+""".r
 
   private val poolSchemas: Seq[(String, StructType)] = Seq(
     "meta" -> StructType(Seq(StructField("clusterId", StringType),
@@ -178,27 +197,42 @@ final class Reservoir(val spark: SparkSession, root: String, tenant: String) {
     "values" -> StructType(Seq(StructField("value", StringType),
       StructField("clusterId", StringType))))
 
+  /** The bucket modulus a pool manifest's keys carry (1 for an empty pool).
+    * A key without one (the former fixed-64 layout) or keys of two moduli
+    * fail loudly: routing rows by a guessed modulus would misplace them.
+    */
+  private def modulusOf(pool: String, mf: Map[String, Long]): Int = {
+    val ms = mf.keySet.map {
+      case BucketKey(m) => m.toInt
+      case k => throw new IllegalStateException(
+        s"pool '$pool' has bucket key '$k' of an unsupported layout " +
+          "(expected <sub>/<modulus>.<bucket>); stores with fixed-64 pools " +
+          "are no longer readable")
+    }
+    if (ms.size > 1) throw new IllegalStateException(
+      s"pool '$pool' mixes bucket moduli ${ms.toSeq.sorted.mkString(", ")}")
+    ms.headOption.getOrElse(1)
+  }
+
   /** one sub-table's batch: one file per bucket, rows sorted by clusterId —
     * parquet min/max stats then row-group-skip the clusterId IN probes of
     * the O(page) OAI export (and avoid small-file sprawl from many write
-    * tasks)
+    * tasks). `stale` keys are dropped in the same commit.
     */
-  private def bucketBatch(sub: String, df: DataFrame,
-      dirty: Seq[String]): GroupBatch =
+  private def bucketBatch(sub: String, df: DataFrame, m: Int,
+      dirty: Seq[String], stale: Seq[String]): GroupBatch =
     GroupBatch(sub,
-      df.withColumn("_bucket", bucketOf(col("clusterId")))
+      df.withColumn("_bucket", bucketOf(col("clusterId"), m))
         .filter(col("_bucket").isin(dirty: _*))
         .repartition(col("_bucket"))
         .sortWithinPartitions(col("_bucket"), col("clusterId")),
-      "_bucket", dirty)
+      "_bucket", dirty ++ stale)
 
-  /** Pool state pinned at one manifest, plus that snapshot's version (the
-    * `expected` for an optimistic save): the latest snapshot, or the PAST
-    * version `at` of a paged OAI export — which fails with guidance when
-    * auto-vacuum already dropped that manifest.
+  /** The latest pool snapshot, or the PAST version `at` of a paged OAI
+    * export — which fails with guidance when auto-vacuum already dropped
+    * that manifest.
     */
-  private def loadState(pool: String,
-      at: Option[Long] = None): (ClusterState, Long) = {
+  private def loadState(pool: String, at: Option[Long] = None): PoolSnapshot = {
     val t = poolTable(pool)
     val (v, mf) = at match {
       case None => catalog.snapshot(t)
@@ -209,45 +243,73 @@ final class Reservoir(val spark: SparkSession, root: String, tenant: String) {
             "while the paged export ran); restart the export without the token")
         (v, mf)
     }
+    val m = modulusOf(pool, mf)
     val Seq(meta, assignments, values) = poolSchemas.map { case (sub, schema) =>
       catalog.readGroupOr(t, mf, sub, schema)
     }
-    (ClusterState(meta, assignments, values), v)
+    PoolSnapshot(ClusterState(meta, assignments, values), v, mf, m)
   }
 
   private def subTables(s: ClusterState): Seq[(String, DataFrame)] =
     Seq("meta" -> s.meta, "assignments" -> s.assignments, "values" -> s.values)
 
-  /** the buckets holding the given clusters (a `clusterId` frame) */
-  private def bucketsOf(clusters: DataFrame): Seq[String] =
-    clusters.select(bucketOf(col("clusterId"))).distinct()
+  /** the buckets under modulus `m` holding the given clusters (a
+    * `clusterId` frame)
+    */
+  private def bucketsOf(clusters: DataFrame, m: Int): Seq[String] =
+    clusters.select(bucketOf(col("clusterId"), m)).distinct()
       .collect().map(_.getString(0)).toSeq
 
-  /** The one pool-state saver: commit the `dirty` buckets of the given
-    * sub-tables as one atomic group, optimistic on `expected` (the version
-    * the state was loaded at; -1 writes blind). Write I/O is O(dirty
-    * buckets), not O(pool), and since the sub-tables commit together a
-    * conflict can never leave the pool half-updated.
+  /** The one pool-state saver: commit the `changed` sub-tables of `next`
+    * (stepped from `base`) as one atomic group, optimistic on base's
+    * version. Only the buckets holding the `dirty` clusters are rewritten
+    * (None: every bucket), so write I/O is O(dirty buckets), not O(pool),
+    * and since the sub-tables commit together a conflict can never leave
+    * the pool half-updated. The pool's bytes, read off base's manifest
+    * (filesystem metadata, no Spark job), set the modulus: when they
+    * outgrow base's, every bucket of every sub-table is rewritten under the
+    * derived modulus and the old keys are dropped.
     */
-  private def saveState(pool: String, subs: Seq[(String, DataFrame)],
-      dirty: Seq[String], expected: Long): Unit =
-    if (dirty.nonEmpty) {
-      catalog.overwriteGroupIf(poolTable(pool),
-        subs.map { case (sub, df) => bucketBatch(sub, df, dirty) }, expected)
+  private def saveState(pool: String, base: PoolSnapshot, next: ClusterState,
+      changed: Set[String], dirty: Option[DataFrame]): Unit = {
+    val t = poolTable(pool)
+    val bytes = catalog.partitionBytes(t, base.manifest, base.manifest.keys.toSeq)
+      .values.sum
+    val m = math.max(base.modulus,
+      BucketSizing.deriveBase(bytes, BucketSizing.baseBucketBytes(spark)))
+    val grown = m != base.modulus
+    val buckets = dirty match {
+      case Some(c) if !grown => bucketsOf(c, m)
+      case _ => allBuckets(m)
+    }
+    if (buckets.nonEmpty) {
+      val batches = subTables(next).collect {
+        case (sub, df) if grown || changed(sub) =>
+          val stale = if (!grown) Nil else base.manifest.keys.toSeq
+            .filter(_.startsWith(s"$sub/")).map(_.stripPrefix(s"$sub/"))
+          bucketBatch(sub, df, m, buckets, stale)
+      }
+      catalog.overwriteGroupIf(t, batches, base.version)
       ()
     }
+  }
+
+  private val allSubs: Set[String] = poolSchemas.map(_._1).toSet
 
   /** Advance one pool under [[Catalog.retrying]]: `f` steps the freshly
     * pinned state; the buckets of the clusters it stamped with `ts` are
-    * saved optimistically against the pinned version.
+    * saved optimistically against the pinned version. The stepped meta is
+    * materialized once: the dirty-bucket collect and the meta staging both
+    * read it.
     */
   private def advancePool(pool: String, ts: Timestamp)(
       f: ClusterState => ClusterState): Unit =
     Catalog.retrying {
-      val (st0, poolVer) = loadState(pool)
-      val s = f(st0)
-      saveState(pool, subTables(s),
-        bucketsOf(s.meta.filter(col("datestamp") === lit(ts))), poolVer)
+      val base = loadState(pool)
+      val s = f(base.state)
+      val meta = s.meta.localCheckpoint(true)
+      saveState(pool, base, s.copy(meta = meta), allSubs,
+        Some(meta.filter(col("datestamp") === lit(ts))))
     }
 
   // ---------------- ingest ----------------
@@ -286,12 +348,15 @@ final class Reservoir(val spark: SparkSession, root: String, tenant: String) {
         batch.withColumn("localId", extract(col("payloadJson")))
     }
     val b = withLocalId.localCheckpoint(true)
-    // only the touched sources' partitions are ever read or rewritten;
-    // globalId embeds sourceId, so upsert/delete matches cannot cross sources
-    val touchedSources = b.filter(col("localId").isNotNull)
-      .select(col("sourceId")).distinct().collect().map(_.getString(0)).toSeq
+    // one pass yields the touched sources and both row counts. Only the
+    // touched sources' partitions are ever read or rewritten; globalId
+    // embeds sourceId, so upsert/delete matches cannot cross sources
+    val perSource = b.groupBy(col("sourceId"), col("localId").isNull.as("ign"))
+      .count().collect()
+    val touchedSources = perSource.filterNot(_.getBoolean(1))
+      .map(_.getString(0)).toSeq
+    val ignoredCount = perSource.filter(_.getBoolean(1)).map(_.getLong(2)).sum
 
-    val ignored = b.filter(col("localId").isNull)
     val deletes = b.filter(col("delete") === true && col("localId").isNotNull)
       .select(col("localId"), col("sourceId")).distinct()
     val upserts = b.filter(col("delete") =!= true && col("localId").isNotNull)
@@ -347,7 +412,8 @@ final class Reservoir(val spark: SparkSession, root: String, tenant: String) {
       }
     }
 
-    IngestStats(b.count(), inserted, updated, deletedCount, ignored.count())
+    IngestStats(perSource.map(_.getLong(2)).sum, inserted, updated,
+      deletedCount, ignoredCount)
   }
 
   /** Rebuild one pool from the full record store (Storage.java:799-879). */
@@ -357,8 +423,8 @@ final class Reservoir(val spark: SparkSession, root: String, tenant: String) {
     val recs = readRecords()
     val keys = recs.select(col("globalId").as("recordId"),
       matcherKeys(cfg.matcher).as("keys"))
-    saveState(pool, subTables(Clusterize.initialize(keys, pool, now())),
-      allBuckets, -1L)
+    val rebuilt = Clusterize.initialize(keys, pool, now())
+    Catalog.retrying(saveState(pool, loadState(pool), rebuilt, allSubs, None))
   }
 
   // ---------------- queries ----------------
@@ -409,7 +475,7 @@ final class Reservoir(val spark: SparkSession, root: String, tenant: String) {
     * join build (Storage.java:657-679).
     */
   def clusters(pool: String, cqlQuery: String = null): DataFrame = {
-    val state = loadState(pool)._1
+    val state = loadState(pool).state
     val recs = readRecords()
     val parsed = Cql.parse(cqlQuery, clusterCqlFields)
     // J2 join elision (Storage.java:657-679): join the record and value
@@ -473,7 +539,7 @@ final class Reservoir(val spark: SparkSession, root: String, tenant: String) {
     */
   private[graft] def pageClusterDocs(pool: String, pageIds: Seq[String],
       pinned: Option[ClusterState] = None): DataFrame = {
-    val state = pinned.getOrElse(loadState(pool)._1)
+    val state = pinned.getOrElse(loadState(pool).state)
     val recs = readRecords()
     val pageState = ClusterState(
       state.meta.filter(col("clusterId").isin(pageIds: _*)),
@@ -493,20 +559,20 @@ final class Reservoir(val spark: SparkSession, root: String, tenant: String) {
       .localCheckpoint(true)
     val n = hit.count()
     if (n > 0) {
-      val dirty = bucketsOf(hit)
       Catalog.retrying {
-        val (state, poolVer) = loadState(pool)
-        val nextMeta = state.meta
+        val base = loadState(pool)
+        val nextMeta = base.state.meta
           .join(hit.withColumn("t", lit(true)), Seq("clusterId"), "left")
           .withColumn("datestamp", when(col("t"), lit(ts)).otherwise(col("datestamp")))
           .select("clusterId", "datestamp")
-        saveState(pool, Seq("meta" -> nextMeta), dirty, poolVer)
+        saveState(pool, base, base.state.copy(meta = nextMeta), Set("meta"),
+          Some(hit))
       }
     }
     n
   }
 
-  def stats(pool: String): DataFrame = Clusterize.stats(loadState(pool)._1)
+  def stats(pool: String): DataFrame = Clusterize.stats(loadState(pool).state)
 
   /** Reclaim partition data dirs superseded beyond the retained snapshot or
     * left behind by emptied partitions, across the record store and every
@@ -546,9 +612,9 @@ final class Reservoir(val spark: SparkSession, root: String, tenant: String) {
     val afterId = tok.flatMap(_.clusterId)
 
     val pinAt = tok.flatMap(_.snapshotVersion)
-    val (state, v) = loadState(pool, pinAt)
-    val pinnedV = if (pinAt.isDefined || pinSnapshot) Some(v) else None
-    var q = state.meta
+    val snap = loadState(pool, pinAt)
+    val pinnedV = if (pinAt.isDefined || pinSnapshot) Some(snap.version) else None
+    var q = snap.state.meta
     effFrom.foreach { f =>
       val fts = Timestamp.valueOf(f)
       q = afterId match {
@@ -564,7 +630,7 @@ final class Reservoir(val spark: SparkSession, root: String, tenant: String) {
     val hasMore = page.length > limit
     val pageIds = page.take(limit).map(_.getString(0)).toSeq
     val docs = clusterDocMap(pool, pageIds,
-      if (pinnedV.isDefined) Some(state) else None)
+      if (pinnedV.isDefined) Some(snap.state) else None)
     val items = page.take(limit).map(r =>
       mkOaiItem(r.getString(0), r.getTimestamp(1), docs, withMetadata)).toSeq
 
@@ -584,22 +650,25 @@ final class Reservoir(val spark: SparkSession, root: String, tenant: String) {
       pinned: Option[ClusterState] = None)
       : Map[String, (Seq[String], Seq[MarcUtil.ClusterRecordDoc])] =
     if (ids.isEmpty) Map.empty
-    else pageClusterDocs(pool, ids, pinned).collect().map { r =>
-      val cid = r.getString(0)
-      val mvs = r.getSeq[String](2)
-      val recs = r.getSeq[org.apache.spark.sql.Row](3).map { rr =>
-        val payload = Option(rr.getString(4))
-        val marc = payload.flatMap { p =>
-          try {
-            val node = new com.fasterxml.jackson.databind.ObjectMapper().readTree(p)
-            Option(node.get("marc")).map(MarcJson.fromNode)
-          } catch { case _: Exception => None }
+    else {
+      val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+      pageClusterDocs(pool, ids, pinned).collect().map { r =>
+        val cid = r.getString(0)
+        val mvs = r.getSeq[String](2)
+        val recs = r.getSeq[org.apache.spark.sql.Row](3).map { rr =>
+          val payload = Option(rr.getString(4))
+          val marc = payload.flatMap { p =>
+            try {
+              val node = mapper.readTree(p)
+              Option(node.get("marc")).map(MarcJson.fromNode)
+            } catch { case _: Exception => None }
+          }
+          MarcUtil.ClusterRecordDoc(rr.getString(2), rr.getString(0),
+            rr.getInt(1), marc.getOrElse(graft.marc.MarcRecord(None, Nil)))
         }
-        MarcUtil.ClusterRecordDoc(rr.getString(2), rr.getString(0),
-          rr.getInt(1), marc.getOrElse(graft.marc.MarcRecord(None, Nil)))
-      }
-      cid -> (mvs, recs)
-    }.toMap
+        cid -> (mvs, recs)
+      }.toMap
+    }
 
   private def mkOaiItem(cid: String, ds: Timestamp,
       docs: Map[String, (Seq[String], Seq[MarcUtil.ClusterRecordDoc])],
@@ -615,7 +684,7 @@ final class Reservoir(val spark: SparkSession, root: String, tenant: String) {
     * has no such cluster (OaiService.java:352-386).
     */
   def getOaiRecord(pool: String, clusterId: String): Option[OaiItem] =
-    loadState(pool)._1.meta.filter(col("clusterId") === clusterId)
+    loadState(pool).state.meta.filter(col("clusterId") === clusterId)
       .collect().headOption.map { r =>
         mkOaiItem(clusterId, r.getTimestamp(1),
           clusterDocMap(pool, Seq(clusterId)), withMetadata = true)

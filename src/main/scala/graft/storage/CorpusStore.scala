@@ -98,32 +98,6 @@ object CorpusStore {
     * below), so subsequent [[ingestBatch]] commits can probe the store.
     * Returns the committed version.
     */
-  /** Base-modulus derivation for `buckets = 0` (AUTO): the smallest power
-    * of two with `bytes / b <= targetBytes` — each base bucket starts near
-    * the target, and [[maintainBuckets]]' doubling splits grow the
-    * geometry from there. Power-of-two bases make every later split nest
-    * cleanly in the trie. A CONSTANT base (the pre-r17 16) was the guide's
-    * "partitioning tuned for one scale" anti-pattern in both directions:
-    * at gate scale a 1.5 MB corpus paid 320 partition dirs of commit
-    * orchestration per table; at warehouse scale 16 buckets would start
-    * orders of magnitude past the target bytes and lean entirely on
-    * splits. Deterministic in the input bytes (no sampling), capped so a
-    * pathological byte count cannot explode the dir fan-out.
-    */
-  private[graft] def deriveBase(bytes: Long, targetBytes: Long): Int = {
-    var b = 1L
-    while (b * targetBytes < bytes && b < (1L << 20)) b *= 2
-    b.toInt
-  }
-
-  /** the AUTO target bucket bytes — parameterised (`spark.graft.store.
-    * baseBucketBytes`), defaulting to 64 MiB: parquet-row-group-scale
-    * buckets at the warehouse, a single bucket for toy corpora
-    */
-  private def baseBucketBytes(spark: org.apache.spark.sql.SparkSession): Long =
-    spark.conf.getOption("spark.graft.store.baseBucketBytes")
-      .map(_.toLong).getOrElse(64L << 20)
-
   def writeDeduped(cat: Catalog, table: String, docs: DataFrame,
       idCol: String, textCol: String, sourceCol: String,
       minWords: Int = 50, minDocs: Int = 2, winnowW: Int = 8,
@@ -169,9 +143,9 @@ object CorpusStore {
       out.sparkSession.sparkContext.setJobDescription(null)
       val touched = srcStats.map(_.getString(0)).toSeq
       val bEff = if (bResolved > 0) bResolved
-        else deriveBase(
+        else BucketSizing.deriveBase(
           srcStats.map(r => if (r.isNullAt(1)) 0L else r.getLong(1)).sum,
-          baseBucketBytes(out.sparkSession))
+          BucketSizing.baseBucketBytes(out.sparkSession))
       val v = commitData(cat, table, out, idCol, sourceCol, bEff,
         splitsAll(SpData), touched)
       commitIndexes(cat, table, idxManifest, splitsAll, out, idCol,
@@ -671,7 +645,8 @@ object CorpusStore {
       val storedBytes =
         if (bytesRow.isNullAt(0)) 0L else bytesRow.getLong(0)
       val bucketsEff = if (buckets > 0) buckets
-        else deriveBase(storedBytes, baseBucketBytes(full.sparkSession))
+        else BucketSizing.deriveBase(storedBytes,
+          BucketSizing.baseBucketBytes(full.sparkSession))
       // migrate the DATA layout when needed: legacy source-partitioned
       // parts, split leaves (flattened back to the base), or a
       // bucket-count pin change (part names are how dirty buckets
@@ -887,8 +862,8 @@ object CorpusStore {
         else {
           val bytes = batch.agg(
             sum(length(col(textCol).cast("string")))).head()
-          deriveBase(if (bytes.isNullAt(0)) 0L else bytes.getLong(0),
-            baseBucketBytes(spark))
+          BucketSizing.deriveBase(if (bytes.isNullAt(0)) 0L else bytes.getLong(0),
+            BucketSizing.baseBucketBytes(spark))
         }
       }
     requireIndexReady(cat, table, idxManifest, minWords, winnowW,

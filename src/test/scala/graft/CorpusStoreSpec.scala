@@ -8,7 +8,7 @@ import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.dedup.SubstringDedup
-import graft.storage.{Catalog, CorpusStore}
+import graft.storage.{BucketSizing, Catalog, CorpusStore}
 
 /** The r12 verdict-7 contract: ingest → normalize-dedup → keep-one strip →
   * STORED table round-trips through the Catalog's snapshot protocol, and
@@ -123,11 +123,11 @@ class CorpusStoreSpec extends AnyFunSuite {
     }
     assert(e.getMessage.contains("buckets"), e.getMessage)
     // deriveBase: power-of-two, bytes/target-scaled, capped
-    assert(CorpusStore.deriveBase(0L, 64L << 20) == 1)
-    assert(CorpusStore.deriveBase(64L << 20, 64L << 20) == 1)
-    assert(CorpusStore.deriveBase((64L << 20) + 1, 64L << 20) == 2)
-    assert(CorpusStore.deriveBase(1L << 40, 64L << 20) == 16384)
-    assert(CorpusStore.deriveBase(Long.MaxValue, 1L) == (1 << 20))
+    assert(BucketSizing.deriveBase(0L, 64L << 20) == 1)
+    assert(BucketSizing.deriveBase(64L << 20, 64L << 20) == 1)
+    assert(BucketSizing.deriveBase((64L << 20) + 1, 64L << 20) == 2)
+    assert(BucketSizing.deriveBase(1L << 40, 64L << 20) == 16384)
+    assert(BucketSizing.deriveBase(Long.MaxValue, 1L) == (1 << 20))
   }
 
   test("ingestBatch strips a passage duplicated from an UNTOUCHED source") {

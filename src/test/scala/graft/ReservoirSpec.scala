@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.api.{MatchKeyConfig, Reservoir}
+import graft.storage.GroupBatch
 
 /** The minimum end-to-end slice (SURVEY.md §7.2): ingest a records-in.json
   * style batch with an issn jsonpath pool (the fixture of
@@ -38,10 +39,19 @@ class ReservoirSpec extends AnyFunSuite {
       delete)
   }
 
-  private def batchDf(rows: (String, String, Int, String, Boolean)*): DataFrame = {
-    import spark.implicits._
-    rows.toSeq.toDF("localId", "sourceId", "sourceVersion", "payloadJson", "delete")
+  private def batchDf(rows: (String, String, Int, String, Boolean)*): DataFrame =
+    batchIn(spark, rows)
+
+  private def batchIn(session: SparkSession,
+      rows: Seq[(String, String, Int, String, Boolean)]): DataFrame = {
+    import session.implicits._
+    rows.toDF("localId", "sourceId", "sourceVersion", "payloadJson", "delete")
   }
+
+  /** the bucket moduli a pool's manifest keys `<sub>/<m>.<b>` carry */
+  private def moduli(r: Reservoir, pool: String): Set[Int] =
+    r.catalog.partitionManifest(s"pool_$pool").keySet
+      .map(_.split('/')(1).split('.')(0).toInt)
 
   test("end-to-end: ingest, cluster, CQL query, OAI export") {
     val r = freshReservoir()
@@ -297,5 +307,161 @@ class ReservoirSpec extends AnyFunSuite {
       .select(explode(col("records.localId")).as("l"))
       .collect().map(_.getString(0)).toSet
     assert(assigned == (for (t <- 1 to 2; i <- 1 to 3) yield s"T$t-$i").toSet)
+  }
+
+  test("a pool's bucket modulus grows with its bytes; contents match the default layout") {
+    // a tiny bucket target makes the pool outgrow its modulus within a few
+    // batches; the same batches go to a pool at the default target (one
+    // bucket per sub-table), and both must serve the same clusters
+    val tiny = spark.newSession()
+    tiny.conf.set("spark.graft.store.baseBucketBytes", "8192")
+    val grown = new Reservoir(tiny,
+      Files.createTempDirectory("graft-reservoir").toString, "tenant1")
+    grown.putMatchKeyConfig(MatchKeyConfig("issn", "jsonpath:$.inventory.issn[*]"))
+    val plain = freshReservoir()
+    val rnd = new scala.util.Random(7)
+    def long(): String = rnd.alphanumeric.take(300).mkString
+    // each batch: pairs linked by a shared value, a merge of two earlier
+    // pairs, a moved record and a delete
+    def batch(i: Int): Seq[(String, String, Int, String, Boolean)] =
+      (0 until 12).map(j => rec(s"R$i-$j", s"SRC-${j % 3}", 1,
+        Seq(long(), s"L$i-${j / 2}"))) ++
+        (if (i < 3) Nil else Seq(
+          rec(s"M$i", "SRC-M", 1, Seq(s"L${i - 1}-0", s"L${i - 2}-1")),
+          rec(s"R${i - 1}-5", "SRC-2", 1, Seq(long())),
+          rec(s"R${i - 2}-7", "SRC-1", 1, Nil, delete = true)))
+    val seen = scala.collection.mutable.ArrayBuffer(1)
+    var i = 0
+    def step(): Unit = {
+      i += 1
+      val rows = batch(i)
+      grown.ingest(batchIn(tiny, rows))
+      plain.ingest(batchDf(rows: _*))
+      val ms = moduli(grown, "issn")
+      assert(ms.size == 1, s"the manifest carries only one modulus's keys: $ms")
+      if (ms.head != seen.last) seen += ms.head
+    }
+    while (seen.last < 4 && i < 12) step()
+    assert(seen.last >= 4, s"the modulus doubled at least twice: $seen")
+    step() // one more batch on the grown layout
+    assert(seen.toSeq.sliding(2).forall(w => w(1) > w(0) && w(1) % w(0) == 0),
+      s"the modulus only grows, by powers of two: $seen")
+    assert(moduli(plain, "issn") == Set(1))
+    val m = seen.last
+    val keys = grown.catalog.partitionManifest("pool_issn").keySet
+    assert(keys.forall(_.split('/')(1).startsWith(s"$m.")), keys)
+    assert(keys.count(_.startsWith("meta/")) > 1, keys)
+
+    // clusters and the OAI export, with cluster ids (salted by the ingest
+    // time) taken out: the same multiset of documents
+    def docs(r: Reservoir): Seq[String] = r.clusters("issn").collect()
+      .map(d => (d.getSeq[String](2).mkString(",") + "|" +
+        d.getSeq[org.apache.spark.sql.Row](3).map(_.getString(2)).mkString(",")))
+      .toSeq.sorted
+    def export(r: Reservoir): Seq[String] = {
+      val p = r.listRecords("issn", limit = 10000)
+      assert(p.resumptionToken.isEmpty)
+      p.items.map(it => s"${it.deleted}|" +
+        it.metadataXml.getOrElse("").replace(it.clusterId, "CID")).sorted
+    }
+    val d = docs(grown)
+    assert(d.length > 20 && d == docs(plain), s"$i batches, moduli $seen")
+    val e = export(grown)
+    assert(e.exists(_.startsWith("true|")), "the inputs leave merge tombstones")
+    assert(e == export(plain))
+  }
+
+  /** (description, innermost graft frame) of every Spark job `body`
+    * submits. The listener bus is FIFO: once a marker job's start arrives,
+    * every job submitted before it has been seen.
+    */
+  private def jobsOf(body: => Any): Seq[(String, String)] = {
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
+    def graftFrame(callSite: String): Option[String] =
+      callSite.linesIterator.map(_.trim).find(_.startsWith("graft."))
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      // jobs a query runs from Spark's own threads carry no user frames;
+      // their SQL execution's call site names them
+      val execFrame = new java.util.concurrent.ConcurrentHashMap[String, String]()
+      override def onOtherEvent(e: org.apache.spark.scheduler.SparkListenerEvent): Unit =
+        e match {
+          case x: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart =>
+            graftFrame(x.details).foreach(execFrame.put(x.executionId.toString, _))
+          case _ => ()
+        }
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        def prop(k: String) = Option(e.properties).flatMap(p => Option(p.getProperty(k)))
+        val frame = e.stageInfos.sortBy(-_.stageId).iterator
+          .flatMap(st => graftFrame(st.details)).nextOption()
+          .orElse(prop("spark.sql.execution.id").flatMap(id => Option(execFrame.get(id))))
+        jobs.add(prop("spark.job.description").getOrElse("") -> frame.getOrElse(""))
+      }
+    }
+    val marker = s"marker-${java.util.UUID.randomUUID()}"
+    def seen = jobs.toArray(Array.empty[(String, String)]).toSeq
+    sc.addSparkListener(listener)
+    try {
+      body
+      sc.setJobDescription(marker)
+      sc.parallelize(Seq(1), 1).count()
+      sc.setJobDescription(null)
+      val deadline = System.currentTimeMillis() + 30000
+      while (!seen.exists(_._1 == marker) && System.currentTimeMillis() < deadline)
+        Thread.sleep(20)
+      assert(seen.exists(_._1 == marker), "listener bus did not drain")
+      seen.filterNot(_._1 == marker)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("a lookup and an OAI page on a small pool list no files with a Spark job") {
+    // a few hundred clusters: enough to fill every bucket of a fixed
+    // 64-bucket layout, whose reads listed 64 dirs per sub-table
+    val r = freshReservoir()
+    r.ingest(batchDf((1 to 300).map(i => rec(s"S$i", s"SRC${i % 4}", 1, Seq(s"v$i"))): _*))
+    val id = r.clusters("issn", "localId = S7").collect().head.getString(0)
+    def listing(body: => Any): Seq[String] =
+      jobsOf(body).map(_._1).filter(_.startsWith("Listing leaf files"))
+    // control: reading more dirs than the parallel-discovery threshold (32)
+    // does submit a listing job
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft-listing").toString + "/t"
+    (0 until 33).map(p => (p, p)).toDF("p", "x").write.partitionBy("p").parquet(dir)
+    val leaves = (0 until 33).map(p => s"$dir/p=$p")
+    assert(listing(spark.read.parquet(leaves: _*).count()).nonEmpty)
+
+    assert(listing(r.clusterById("issn", id).collect()).isEmpty)
+    assert(listing(r.listRecords("issn", limit = 1000)).isEmpty)
+  }
+
+  test("a pool step collects its dirty buckets in at most two Spark jobs") {
+    val r = freshReservoir()
+    r.ingest(batchDf(rec("S1", "SRC", 1, Seq("a")), rec("S2", "SRC", 1, Seq("b"))))
+    val jobs = jobsOf(r.ingest(batchDf(rec("S3", "SRC", 1, Seq("a", "c")),
+      rec("S4", "SRC2", 1, Seq("d")))))
+    val atBucketsOf = jobs.count(_._2.contains(".bucketsOf("))
+    assert(atBucketsOf >= 1 && atBucketsOf <= 2, jobs.mkString("\n"))
+  }
+
+  test("a pool in the former fixed-64 layout fails loudly, naming the pool") {
+    import spark.implicits._
+    val r = freshReservoir()
+    r.ingest(batchDf(rec("S1", "SRC", 1, Seq("a"))))
+    // a bucket key without the modulus, as the fixed-64 layout wrote them
+    val meta = Seq(("c1", new java.sql.Timestamp(0L))).toDF("clusterId", "datestamp")
+      .withColumn("_bucket", lit("17"))
+    r.catalog.overwriteGroupIf("pool_legacy",
+      Seq(GroupBatch("meta", meta, "_bucket", Seq("17"))), -1L)
+    r.putMatchKeyConfig(MatchKeyConfig("legacy", "jsonpath:$.inventory.issn[*]"))
+    val before = r.catalog.partitionManifest("pool_legacy")
+    def failsNamingPool(body: => Any): Unit = {
+      val e = intercept[IllegalStateException](body)
+      assert(e.getMessage.contains("pool 'legacy'"), e.getMessage)
+    }
+    failsNamingPool(r.clusters("legacy"))
+    failsNamingPool(r.listRecords("legacy"))
+    failsNamingPool(r.ingest(batchDf(rec("S2", "SRC", 1, Seq("a")))))
+    assert(r.catalog.partitionManifest("pool_legacy") == before,
+      "nothing was routed into the old-layout pool")
   }
 }
