@@ -159,11 +159,12 @@ final class Reservoir(val spark: SparkSession, root: String, tenant: String) {
   // A pool's meta/assignments/values live in ONE group table (`pool_<id>`,
   // sub-tables committed atomically: one manifest, one _LATEST flip), each
   // bucketed by hash(clusterId) % m under the manifest keys `<sub>/<m>.<b>`.
-  // The modulus m is derived from the pool's own bytes by the corpus store's
-  // rule (BucketSizing: the smallest power of two keeping a bucket under
-  // baseBucketBytes), so a pool of a few thousand clusters is one bucket per
-  // sub-table and a PALCI-scale pool tens to a hundred. The keys carry m, so
-  // loadState learns it from the manifest without a Spark job. A save reads
+  // The modulus m is derived from the pool's own bytes by the rule both
+  // stores share (BucketSizing: the smallest power of two keeping a bucket
+  // under baseBucketBytes), so a pool of a few thousand clusters is one
+  // bucket per sub-table and a PALCI-scale pool tens to a hundred. The keys
+  // carry m, so loadState learns it from the manifest without a Spark job
+  // (BucketSizing.modulusOf, the parser both stores share). A save reads
   // the pool's bytes off filesystem metadata; when they outgrow m, m grows
   // to the derived power of two and the same commit rewrites every bucket
   // and drops the old keys. m never shrinks.
@@ -183,11 +184,9 @@ final class Reservoir(val spark: SparkSession, root: String, tenant: String) {
 
   /** the manifest key (below the sub-table) of a clusterId's bucket */
   private def bucketOf(clusterId: Column, m: Int): Column =
-    concat(lit(s"$m."), pmod(hash(clusterId), lit(m)).cast("string"))
+    BucketSizing.label(hash(clusterId), m)
 
   private def allBuckets(m: Int): Seq[String] = (0 until m).map(b => s"$m.$b")
-
-  private val BucketKey = """[^/]+/(\d+)\.\d+""".r
 
   private val poolSchemas: Seq[(String, StructType)] = Seq(
     "meta" -> StructType(Seq(StructField("clusterId", StringType),
@@ -197,22 +196,13 @@ final class Reservoir(val spark: SparkSession, root: String, tenant: String) {
     "values" -> StructType(Seq(StructField("value", StringType),
       StructField("clusterId", StringType))))
 
-  /** The bucket modulus a pool manifest's keys carry (1 for an empty pool).
-    * A key without one (the former fixed-64 layout) or keys of two moduli
-    * fail loudly: routing rows by a guessed modulus would misplace them.
+  /** The bucket modulus a pool manifest's keys carry (1 for an empty pool),
+    * parsed by the rule both stores share; a key of another layout (the
+    * former fixed-64 one) or keys of two moduli fail, naming the pool.
     */
-  private def modulusOf(pool: String, mf: Map[String, Long]): Int = {
-    val ms = mf.keySet.map {
-      case BucketKey(m) => m.toInt
-      case k => throw new IllegalStateException(
-        s"pool '$pool' has bucket key '$k' of an unsupported layout " +
-          "(expected <sub>/<modulus>.<bucket>); stores with fixed-64 pools " +
-          "are no longer readable")
-    }
-    if (ms.size > 1) throw new IllegalStateException(
-      s"pool '$pool' mixes bucket moduli ${ms.toSeq.sorted.mkString(", ")}")
-    ms.headOption.getOrElse(1)
-  }
+  private def modulusOf(pool: String, mf: Map[String, Long]): Int =
+    BucketSizing.modulusOf(s"pool '$pool'",
+      mf.keys.map(k => k.drop(k.indexOf('/') + 1))).getOrElse(1)
 
   /** one sub-table's batch: one file per bucket, rows sorted by clusterId —
     * parquet min/max stats then row-group-skip the clusterId IN probes of
@@ -275,8 +265,7 @@ final class Reservoir(val spark: SparkSession, root: String, tenant: String) {
     val t = poolTable(pool)
     val bytes = catalog.partitionBytes(t, base.manifest, base.manifest.keys.toSeq)
       .values.sum
-    val m = math.max(base.modulus,
-      BucketSizing.deriveBase(bytes, BucketSizing.baseBucketBytes(spark)))
+    val m = BucketSizing.grown(base.modulus, bytes, spark)
     val grown = m != base.modulus
     val buckets = dirty match {
       case Some(c) if !grown => bucketsOf(c, m)

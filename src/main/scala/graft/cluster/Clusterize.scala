@@ -77,11 +77,11 @@ object Clusterize {
     // (duplicates would not change the RESULT, only the frame sizes, so
     // the flag is a pure plan choice); (b) e0 is a lazy persist rather
     // than an eager localCheckpoint — its materialization fuses into the
-    // first consuming job (one driver job fewer), lineage stays intact for
-    // fault recovery, and the later readers (allIds, the degree join)
-    // still hit the cache; (c) the degree-cut frame `e` is lineage-cut
-    // only on the ITERATIVE path, where the loop needs it — the local
-    // path collects it once, so a checkpoint there is a pure extra pass.
+    // first consuming job, and the later readers (allIds, the degree
+    // join) still hit the cache until the result is materialized; (c) the
+    // degree-cut frame `e` is lineage-cut only on the ITERATIVE path,
+    // where the loop needs it — the local path collects it once, so a
+    // checkpoint there is a pure extra pass.
     val e0 = (if (edgesDistinct) edges else edges.distinct())
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val allIds = e0.select(col("id")).distinct()
@@ -116,9 +116,13 @@ object Clusterize {
     val comps =
       if (bounded.length <= localMax) localComponents(bounded, e)
       else iterativeComponents(cut(e))
-    // ids whose every key was unshared never entered the loop: solo components
-    allIds.join(comps, Seq("id"), "left")
-      .select(col("id"), coalesce(col("component"), col("id")).as("component"))
+    // ids whose every key was unshared never entered the loop: solo
+    // components. The result is materialized so that e0 can be released
+    // here: a cached frame left behind would outlive the call in the
+    // session's cache manager.
+    try cut(allIds.join(comps, Seq("id"), "left")
+      .select(col("id"), coalesce(col("component"), col("id")).as("component")))
+    finally { e0.unpersist(); () }
   }
 
   /** the SAME order Spark's min()/least() would use: strings compare as

@@ -116,15 +116,12 @@ final class Catalog(val spark: SparkSession, root: String, tenant: String) {
   private def retainVersions: Long =
     math.max(2L, confLong("spark.graft.catalog.retainVersions", 2L))
 
-  def latestVersion(name: String): Option[Long] = {
-    val f = latestFile(name)
-    if (!fs.exists(f)) None
-    else {
-      val in = fs.open(f)
-      try Some(new String(in.readAllBytes(), "UTF-8").trim.toLong)
-      finally in.close()
-    }
-  }
+  /** the committed version `_LATEST` names; the pointer is opened directly
+    * (no exists-then-open window) and is only ever replaced atomically
+    */
+  def latestVersion(name: String): Option[Long] =
+    try Some(readSmall(latestFile(name)).trim.toLong)
+    catch { case _: java.io.FileNotFoundException => None }
 
   /** committed version as a plain number: 0 = table absent. This is the value
     * optimistic writers pass back as `expected`.
@@ -277,14 +274,30 @@ final class Catalog(val spark: SparkSession, root: String, tenant: String) {
     sys.error("unreachable")
   }
 
-  /** flip the _LATEST pointer to v (write-temp + rename) */
+  /** Flip the _LATEST pointer to v: write a temp file, then replace the
+    * pointer with it in one atomic rename, so a reader always opens either
+    * the old or the new pointer. Hadoop's `FileSystem.rename` refuses an
+    * existing target, so on file:// the pointer is written and replaced
+    * through NIO (ATOMIC_MOVE is rename(2); no checksum side file, and a
+    * stale one left by an older writer is removed first) and elsewhere
+    * through `FileContext`'s OVERWRITE rename.
+    */
   private def flipLatest(name: String, v: Long): Unit = {
     val tmp = new Path(tableDir(name), s"_LATEST.tmp.$v")
-    val out = fs.create(tmp, true)
-    try out.write(v.toString.getBytes("UTF-8")) finally out.close()
-    if (!fs.rename(tmp, latestFile(name))) {
-      fs.delete(latestFile(name), false)
-      fs.rename(tmp, latestFile(name))
+    val bytes = v.toString.getBytes("UTF-8")
+    if (fs.getScheme == "file") {
+      def local(p: Path) = java.nio.file.Paths.get(p.toUri.getPath)
+      java.nio.file.Files.write(local(tmp), bytes)
+      java.nio.file.Files.deleteIfExists(
+        local(new Path(tableDir(name), "._LATEST.crc")))
+      java.nio.file.Files.move(local(tmp), local(latestFile(name)),
+        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+    } else {
+      val out = fs.create(tmp, true)
+      try out.write(bytes) finally out.close()
+      org.apache.hadoop.fs.FileContext.getFileContext(fs.getUri,
+        spark.sparkContext.hadoopConfiguration)
+        .rename(tmp, latestFile(name), org.apache.hadoop.fs.Options.Rename.OVERWRITE)
     }
   }
 
@@ -410,7 +423,7 @@ final class Catalog(val spark: SparkSession, root: String, tenant: String) {
 
   /** Current on-disk bytes of each named partition's data dir (driver-side
     * filesystem metadata only — no Spark job; absent partitions omitted).
-    * The bucket-split trigger's measurement.
+    * The measurement behind the bucket-growth rule (`BucketSizing`).
     */
   def partitionBytes(name: String, manifest: Map[String, Long],
       parts: Seq[String], sub: String = ""): Map[String, Long] = {
@@ -470,30 +483,30 @@ final class Catalog(val spark: SparkSession, root: String, tenant: String) {
     * as its one declared partition, when `partCol` is empty); returns the
     * staging root
     */
-  private def stageBatch(name: String, b: GroupBatch): Path = {
+  private def stageBatch(name: String, b: GroupBatch): Path =
     // job label (thread-local, so each staging-pool thread labels its own
     // write): the staging writes are where a group commit's Spark time
     // goes — make them attributable in the UI / JobProbe rollup
-    spark.sparkContext.setJobDescription(
-      s"stage $name/${if (b.sub.isEmpty) "data" else b.sub}")
-    val staging = new Path(tableDir(name),
-      s".staging-${java.util.UUID.randomUUID().toString.take(8)}")
-    if (b.partCol.isEmpty) {
-      require(b.touched.size == 1,
-        s"a batch without a partition column stages exactly one partition: ${b.touched}")
-      b.df.write.mode("overwrite").parquet(stagedDir(staging, b.touched.head).toString)
-    } else {
-      // duplicate the partition column: partitionBy consumes `_p`, keeping
-      // partCol itself inside the data files. The value is URL-encoded first
-      // so staging dir names stay ASCII regardless of the JVM's filesystem
-      // encoding (non-ASCII partition values are otherwise unwritable on a
-      // POSIX-locale driver).
-      val encUdf = org.apache.spark.sql.functions.udf(Catalog.encodePart _)
-      b.df.withColumn("_p", encUdf(org.apache.spark.sql.functions.col(b.partCol)))
-        .write.partitionBy("_p").mode("overwrite").parquet(staging.toString)
+    Catalog.withJobLabel(spark,
+        s"stage $name/${if (b.sub.isEmpty) "data" else b.sub}") {
+      val staging = new Path(tableDir(name),
+        s".staging-${java.util.UUID.randomUUID().toString.take(8)}")
+      if (b.partCol.isEmpty) {
+        require(b.touched.size == 1,
+          s"a batch without a partition column stages exactly one partition: ${b.touched}")
+        b.df.write.mode("overwrite").parquet(stagedDir(staging, b.touched.head).toString)
+      } else {
+        // duplicate the partition column: partitionBy consumes `_p`, keeping
+        // partCol itself inside the data files. The value is URL-encoded first
+        // so staging dir names stay ASCII regardless of the JVM's filesystem
+        // encoding (non-ASCII partition values are otherwise unwritable on a
+        // POSIX-locale driver).
+        val encUdf = org.apache.spark.sql.functions.udf(Catalog.encodePart _)
+        b.df.withColumn("_p", encUdf(org.apache.spark.sql.functions.col(b.partCol)))
+          .write.partitionBy("_p").mode("overwrite").parquet(staging.toString)
+      }
+      staging
     }
-    staging
-  }
 
   private def stagedDir(staging: Path, part: String): Path =
     new Path(staging, "_p=" +
@@ -718,6 +731,17 @@ object Catalog {
       case _: CommitConflict | _: ClaimLost | _: java.io.FileNotFoundException => true
       case _ => false
     }
+
+  /** Run `body` with the thread's Spark job description set to `label`,
+    * restoring the previous description afterwards, so the label names
+    * exactly the jobs `body` submits.
+    */
+  def withJobLabel[T](spark: SparkSession, label: String)(body: => T): T = {
+    val sc = spark.sparkContext
+    val prev = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(label)
+    try body finally sc.setJobDescription(prev)
+  }
 
   /** URL-encode a partition value for use as a directory name (kept in the
     * companion so the staging write's UDF closure stays serializable).

@@ -1,7 +1,6 @@
 package graft.storage
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.UserDefinedFunction
 import org.apache.spark.sql.functions._
 
 import graft.dedup.{Normalize, SubstringDedup}
@@ -93,10 +92,11 @@ object CorpusStore {
   /** Dedup `docs` with [[strippedCorpus]] and commit the result as the next
     * version of `table`, partitioned by `sourceCol` (only touched source
     * partitions are written; a re-run with new data for one source leaves
-    * the others' files untouched). The dedup index tables' touched
-    * partitions rebuild from the committed rows (see the index note
-    * below), so subsequent [[ingestBatch]] commits can probe the store.
-    * Returns the committed version.
+    * the others' files untouched, unless the commit grows the table's
+    * bucket modulus — see the layout note below). The dedup index tables'
+    * touched partitions rebuild from the committed rows, so subsequent
+    * [[ingestBatch]] commits can probe the store. Returns the committed
+    * version.
     */
   def writeDeduped(cat: Catalog, table: String, docs: DataFrame,
       idCol: String, textCol: String, sourceCol: String,
@@ -129,80 +129,76 @@ object CorpusStore {
         // half-indexed-store guard (data committed ≠> index present)
         requireIndexReady(cat, table, idxManifest, minWords, winnowW,
           buckets)
-      requireDataLayout(cat, table)
-      val splitsAll = splitsOf(idxManifest)
+      requireDataLayout(table, cat.partitionManifest(table))
       // bounded: one row per SOURCE (config-scale), the Reservoir.ingest
       // touched-partition convention — never a corpus-sized collect. This
       // is the job that materializes the persisted strip chain; it also
       // returns the per-source text bytes the AUTO base modulus derives
       // from (chars ≈ bytes for layout purposes).
-      out.sparkSession.sparkContext.setJobDescription(
-        "writeDeduped: strip chain + touched sources")
-      val srcStats = out.groupBy(col(sourceCol))
-        .agg(sum(length(col(textCol))).as("_graft_bytes")).collect()
-      out.sparkSession.sparkContext.setJobDescription(null)
+      val srcStats = Catalog.withJobLabel(out.sparkSession,
+          "writeDeduped: strip chain + touched sources") {
+        out.groupBy(col(sourceCol))
+          .agg(sum(length(col(textCol))).as("_graft_bytes")).collect()
+      }
       val touched = srcStats.map(_.getString(0)).toSeq
       val bEff = if (bResolved > 0) bResolved
         else BucketSizing.deriveBase(
           srcStats.map(r => if (r.isNullAt(1)) 0L else r.getLong(1)).sum,
           BucketSizing.baseBucketBytes(out.sparkSession))
-      val v = commitData(cat, table, out, idCol, sourceCol, bEff,
-        splitsAll(SpData), touched)
-      commitIndexes(cat, table, idxManifest, splitsAll, out, idCol,
-        textCol, sourceCol, minWords, winnowW, bEff, touched)
+      val v = commitData(cat, table, out, idCol, textCol, sourceCol, bEff,
+        touched)
+      commitIndexes(cat, table, idxManifest, out, idCol, textCol, sourceCol,
+        minWords, winnowW, bEff, touched)
       v
     } finally { out.unpersist(); cleanup(); () }
   }
 
   /** Commit `out` as the full new content of the `touched` SOURCES of the
-    * bucketed data table: rows land in `bucket#source` partitions (one
+    * bucketed data table: rows land in `<m>.<i>#source` partitions (one
     * file per bucket, sorted by id), and every existing bucket of a
-    * touched source is in the overwrite set so emptied buckets drop.
-    * Bucketing the DATA like the indexes is what bounds an incremental
-    * commit's write amplification: a small batch into a huge source
-    * rewrites only the id-buckets it lands in, never the whole source
-    * (the r15 hot-source finding).
+    * touched source is in the overwrite set so emptied buckets drop. A
+    * commit that grows the modulus re-routes the other sources' stored
+    * rows too, so the table keeps one modulus.
     */
   private def commitData(cat: Catalog, table: String, out: DataFrame,
-      idCol: String, sourceCol: String, buckets: Int,
-      dataSplits: Set[(Long, Long)], touched: Seq[String]): Long = {
+      idCol: String, textCol: String, sourceCol: String, floor: Int,
+      touched: Seq[String]): Long = {
+    val (_, mf) = cat.snapshot(table)
+    val (m0, m) = moduli(cat, table, mf, Seq(""), floor)
     val tset = touched.toSet
-    val old = cat.partitionManifest(table).keysIterator
-      .filter(p => tset.contains(partSource(p))).toSeq
-    commitDataParts(cat, table, out, idCol, sourceCol, buckets, dataSplits,
-      old)
+    val (old, others) = mf.keys.toSeq.partition(p => tset(partSource(p)))
+    if (m == m0) commitDataParts(cat, table, out, idCol, sourceCol, m, old)
+    else commitDataParts(cat, table, out.unionByName(cat.readManifestParts(
+        table, mf, storedSchema(idCol, sourceCol, textCol), others)),
+      idCol, sourceCol, m, old ++ others)
   }
 
-  /** commit `out` as the full new content of exactly the `declared` data
-    * partitions (∪ the staged frame's own part values, which the commit
-    * reads off the staging directory) — the incremental-commit core: one
-    * file per bucket dir, sorted by id
+  /** commit `rows` as the full new content of exactly the `declared` data
+    * partitions (∪ the partitions the rows land in, which the commit reads
+    * off the staging directory) at modulus `m` — the incremental-commit
+    * core: bucketing the DATA like the indexes is what bounds a commit's
+    * write amplification (a small batch into a huge source rewrites only
+    * the id-buckets it lands in — the r15 hot-source finding)
     */
-  private def commitDataParts(cat: Catalog, table: String, out: DataFrame,
-      idCol: String, sourceCol: String, buckets: Int,
-      dataSplits: Set[(Long, Long)], declared: Seq[String]): Long = {
-    val route = routeUdf(dataSplits, buckets.toLong)
-    val df = out.withColumn("_graft_part",
-        concat(route(col(idCol)), lit("#"), col(sourceCol)))
-      .repartition(col("_graft_part"))
-      .sortWithinPartitions(col("_graft_part"), col(idCol))
-    cat.overwriteGroupIf(table, Seq(GroupBatch("", df, "_graft_part",
+  private def commitDataParts(cat: Catalog, table: String, rows: DataFrame,
+      idCol: String, sourceCol: String, m: Int, declared: Seq[String]): Long =
+    cat.overwriteGroupIf(table, Seq(GroupBatch("",
+      bucketed(rows, col(idCol), m, idCol, sourceCol), "_graft_part",
       declared.distinct)), -1L)
-  }
 
   /** the data-layout fail-fast twin of [[requireIndexReady]]: a store
-    * whose data partitions are not bucket-shaped (source-named legacy
-    * parts — including sources that happen to contain '#', the r16 ADVICE
-    * evasion) must be migrated by [[rebuildIndexes]] before any
-    * incremental commit — part names are how dirty buckets resolve, so a
-    * legacy part would silently hide its stored rows from the merge
+    * whose data partitions are not bucket-labelled (source-named legacy
+    * parts) must be migrated by [[rebuildIndexes]] before any incremental
+    * commit — part names are how dirty buckets resolve, so a legacy part
+    * would silently hide its stored rows from the merge
     */
-  private def requireDataLayout(cat: Catalog, table: String): Unit = {
-    val legacy = cat.partitionManifest(table).keysIterator
-      .filterNot(isBucketedPart).toSeq
+  private def requireDataLayout(table: String,
+      manifest: Map[String, Long]): Unit = {
+    val legacy = manifest.keysIterator
+      .filter(BucketSizing.labelModulus(_).isEmpty).toSeq
     require(legacy.isEmpty,
-      s"corpus table '$table' has source-partitioned (pre-bucketing) data " +
-        s"partitions ${legacy.take(3).mkString("[", ", ", "]")}…; run " +
+      s"corpus table '$table' has data partitions outside the bucketed " +
+        s"layout ${legacy.take(3).mkString("[", ", ", "]")}…; run " +
         "rebuildIndexes to migrate the store to the bucketed layout")
   }
 
@@ -242,47 +238,32 @@ object CorpusStore {
   // indexed cluster_values probe, Storage.java:370-400), and the hash
   // index finds whole-document exact duplicates with no length floor.
   //
-  // BUCKET GEOMETRY (r16 verdict item 1 — the B-tree split). A key k of a
-  // space (data/docs by id, grams by h1, hashes by th) routes down a
-  // binary SPLIT TRIE: start at the pinned base modulus b with residue
-  // pmod(k, b); while the current node (m, i) is registered as split,
-  // descend to (2m, pmod(k, 2m)) — note pmod(k, 2m) ∈ {i, i+m}, so a
-  // split sends a bucket's keys to exactly two children. Partition values
-  // name the leaf: `%05d#source` at the base modulus (unchanged from the
-  // pre-split layout — an unsplit store's on-disk layout is byte-for-byte
-  // the r16 one) or `<m>.<i>#source` for a split leaf. The registry of
-  // split nodes is encoded as MANIFEST PART KEYS of the index group
-  // (`splits/<space>.<m>.<i>`), so reading it costs nothing beyond the
-  // snapshot pin every commit already takes, and it is versioned with the
-  // indexes themselves. Growing the store therefore NEVER rewrites it:
-  // [[maintainBuckets]] splits ONE oversized bucket at a time (rewriting
-  // only that bucket's rows, ~targetBytes), where pre-r17 growth required
-  // a full-store rebuildIndexes re-bucket.
+  // BUCKET LAYOUT — the match-key pools' rule (BucketSizing). Each corpus
+  // table has ONE modulus m at a time: the data table (keyed by id), and
+  // the index group across its three subs (docs by id, grams by h1, hashes
+  // by th). A row with key k lives in partition `<m>.<pmod(k, m)>#source`,
+  // so m is read off the table's own manifest labels with no Spark job,
+  // and a probe names exactly the buckets pmod(k, m) of its batch keys (a
+  // native column; bucket labels never contain '#', so the FIRST '#'
+  // splits label from source even when the source carries one). Every
+  // commit sets m = max(current m, deriveBase(bytes, baseBucketBytes)),
+  // the bytes read off the pinned manifest's filesystem metadata; when m
+  // grows, that commit rewrites every bucket of the table and drops the
+  // old labels, so no reader ever sees two moduli. m never shrinks, the
+  // pinned `buckets` conf is its floor, and rebuildIndexes re-bases both
+  // tables flat at the (re-)derived floor.
   //
-  // Read-side rule (lossless, split-state-agnostic): a partition
-  // (m, i, source) can hold a row with key k ONLY IF pmod(k, m) == i —
-  // true at whatever trie depth the row was committed. So every probe and
-  // every dirty-part resolution matches existing partitions against the
-  // batch keys' ROUTE CHAINS (every (modulus, residue) node from the base
-  // to the current leaf). This covers rows committed before a later split
-  // (they sit at an ancestor) and makes a half-split data bucket
-  // self-healing: the ancestor stays matched, its rows are read into the
-  // next touching commit, and the rewrite re-routes them to the leaves
-  // (the ancestor empties out of the manifest).
-  //
-  // Probe and write cost at scale (r15 items 1+2, r16 item 1): winnowing
-  // cuts gram-index rows AND probe keys to ~2/(w+1) of gram positions;
-  // each probe reads ONLY the index buckets on the batch's own route
-  // chains (chain length = trie depth, ~log of the growth factor); the
-  // data commit rewrites ONLY the id-buckets the batch lands in. With
-  // buckets kept near a target byte size by maintainBuckets' one-leaf
-  // splits, per-batch I/O is O(batch keys × target bucket bytes) — the
-  // B-tree-leaf bound — at ANY store size, with no full-rewrite event in
-  // the store's lifetime. Detection floor: shared spans ≥ minWords + w −
-  // 1 words are ALWAYS caught (the winnowing guarantee, documented at
-  // winnowedGramKeys); exact whole-doc dups always (hash index); shorter
-  // shared spans heal at the next full writeDeduped. (minWords, w, b) are
-  // pinned per table in the conf sub.
+  // Probe and write cost at scale (r15 items 1+2): winnowing cuts
+  // gram-index rows AND probe keys to ~2/(w+1) of gram positions; each
+  // probe reads ONLY the index buckets its batch keys name; the data
+  // commit rewrites ONLY the id-buckets the batch lands in. With buckets
+  // held near baseBucketBytes by growth, per-batch probe I/O is O(batch
+  // keys × bucket bytes) at any store size; a doubling rewrites the table
+  // once, amortized over the commits that doubled its bytes. Detection
+  // floor: shared spans ≥ minWords + w − 1 words are ALWAYS caught (the
+  // winnowing guarantee, documented at winnowedGramKeys); exact whole-doc
+  // dups always (hash index); shorter shared spans heal at the next full
+  // writeDeduped. (minWords, w, b) are pinned per table in the conf sub.
   //
   // Staleness discipline: the index group commits AFTER the data table;
   // the stream high-water mark commits WITH the index group (one fewer
@@ -297,95 +278,58 @@ object CorpusStore {
 
   private def indexTable(table: String) = s"${table}__idx"
 
-  // the four key spaces of the split trie registry
   private val SpData = "data"
   private val SpDocs = "docs"
   private val SpGrams = "grams"
   private val SpHashes = "hashes"
-
-  /** base-modulus buckets keep the pre-split `%05d#source` shape; split
-    * leaves are `<m>.<i>#source`. Bucket labels never contain '#', so the
-    * FIRST '#' splits unambiguously even when the source value itself
-    * carries one.
-    */
-  private def isBucketedPart(p: String): Boolean =
-    p.matches("(\\d{5}|\\d+\\.\\d+)#.*")
+  /** the index group's bucketed subs (one modulus across the three) */
+  private val IdxSubs = Seq(SpGrams, SpDocs, SpHashes)
 
   private def partSource(p: String): String = p.drop(p.indexOf('#') + 1)
 
-  /** (modulus, residue) a bucketed partition value names — base-modulus
-    * labels carry the pinned `b` implicitly
+  private def partLabel(p: String): String = p.takeWhile(_ != '#')
+
+  /** the partition column of a bucketed commit: `<m>.<i>#source` */
+  private def partOf(key: Column, m: Int, sourceCol: String): Column =
+    concat(BucketSizing.label(key, m), lit("#"), col(sourceCol))
+
+  /** `rows` laid out for a bucketed commit at modulus `m`: one task (one
+    * file) per partition, sorted by `sortKey` within it so parquet row
+    * groups cover narrow key ranges (the at-scale footer-stats path)
     */
-  private def partModIdx(p: String, b: Long): (Long, Long) = {
-    val label = p.takeWhile(_ != '#')
-    val d = label.indexOf('.')
-    if (d < 0) (b, label.toLong)
-    else (label.take(d).toLong, label.drop(d + 1).toLong)
-  }
+  private def bucketed(rows: DataFrame, key: Column, m: Int, sortKey: String,
+      sourceCol: String): DataFrame =
+    rows.withColumn("_graft_part", partOf(key, m, sourceCol))
+      .repartition(col("_graft_part"))
+      .sortWithinPartitions(col("_graft_part"), col(sortKey))
 
-  /** the split registry parsed off an index-group manifest's part keys
-    * (`splits/<space>.<m>.<i>`): space → set of split trie nodes. Reading
-    * it is free — no file I/O beyond the manifest every commit pins.
+  /** one sub-table's partition values in a pinned group manifest ("" = every
+    * partition of a plain table)
     */
-  private def splitsOf(manifest: Map[String, Long])
-      : Map[String, Set[(Long, Long)]] = {
-    val parsed = manifest.keysIterator.filter(_.startsWith("splits/"))
-      .map(_.stripPrefix("splits/")).toSeq
-      .flatMap { s =>
-        s.split('.') match {
-          case Array(space, m, i) => Some((space, (m.toLong, i.toLong)))
-          case _ => None
-        }
-      }
-    parsed.groupBy(_._1).map { case (sp, xs) => sp -> xs.map(_._2).toSet }
-      .withDefaultValue(Set.empty[(Long, Long)])
-  }
-
-  /** every bucket label on key k's route: the base node first, then each
-    * registered split descended, ending at the LEAF the key routes to.
-    * Chain length = that key's trie depth (log of the bucket's total
-    * growth factor), never store-sized.
-    */
-  private def chainLabels(splits: Set[(Long, Long)], b: Long,
-      k: Long): Seq[String] = {
-    val out = scala.collection.mutable.ArrayBuffer.empty[String]
-    var m = b
-    var i = java.lang.Math.floorMod(k, m)
-    out += f"$i%05d"
-    while (splits.contains((m, i))) {
-      m *= 2
-      i = java.lang.Math.floorMod(k, m)
-      out += s"$m.$i"
-    }
-    out.toSeq
-  }
-
-  /** the leaf label alone — where a NEW row of this key is written */
-  private def routeLabel(splits: Set[(Long, Long)], b: Long,
-      k: Long): String =
-    chainLabels(splits, b, k).last
-
-  private def routeUdf(splits: Set[(Long, Long)], b: Long)
-      : UserDefinedFunction =
-    udf((k: java.lang.Long) =>
-      if (k == null) null else routeLabel(splits, b, k.longValue()))
-
-  private def chainUdf(splits: Set[(Long, Long)], b: Long)
-      : UserDefinedFunction =
-    udf((k: java.lang.Long) =>
-      if (k == null) null else chainLabels(splits, b, k.longValue()))
-
-  // With splits in play, rows read off a half-split ancestor re-route to
-  // leaves no batch key names; the commit registers every partition a
-  // batch actually staged (read off the staging directory — no Spark job),
-  // so those rows land even though `touched` never named their leaf.
-
-  /** one sub-table's partition values in a pinned group manifest */
   private def subParts(manifest: Map[String, Long],
-      sub: String): Seq[String] = {
-    val prefix = s"$sub/"
-    manifest.keysIterator.filter(_.startsWith(prefix))
-      .map(_.stripPrefix(prefix)).toSeq
+      sub: String): Seq[String] =
+    if (sub.isEmpty) manifest.keys.toSeq
+    else manifest.keysIterator.filter(_.startsWith(s"$sub/"))
+      .map(_.stripPrefix(s"$sub/")).toSeq
+
+  /** the modulus a corpus table's `subs` labels carry in `mf`, or `floor`
+    * for a table with none yet
+    */
+  private def modulusIn(name: String, mf: Map[String, Long],
+      subs: Seq[String], floor: Int): Int =
+    BucketSizing.modulusOf(s"corpus table '$name'", subs.flatMap(subParts(mf, _)))
+      .getOrElse(floor)
+
+  /** (current, next) modulus of a corpus table: next is what its commit
+    * writes at — the shared growth rule over the bytes `mf` names
+    * (filesystem metadata, no Spark job), never below `floor`
+    */
+  private def moduli(cat: Catalog, name: String, mf: Map[String, Long],
+      subs: Seq[String], floor: Int): (Int, Int) = {
+    val cur = modulusIn(name, mf, subs, floor)
+    val bytes = subs.map(s =>
+      cat.partitionBytes(name, mf, subParts(mf, s), s).values.sum).sum
+    (cur, BucketSizing.grown(math.max(cur, floor), bytes, cat.spark))
   }
 
   /** the docs-index schema: one (id, source) row per stored document */
@@ -422,11 +366,37 @@ object CorpusStore {
       StructField(idCol, LongType), StructField(sourceCol, StringType)))
   }
 
+  private def idxSchema(sub: String, idCol: String, sourceCol: String)
+      : org.apache.spark.sql.types.StructType = sub match {
+    case SpGrams => gramIndexSchema(idCol, sourceCol)
+    case SpDocs => docsIndexSchema(idCol, sourceCol)
+    case _ => hashIndexSchema(idCol, sourceCol)
+  }
+
   /** the exact-dup probe key: xxhash64 over the normalized text (the SAME
     * normalization [[strippedCorpus]]'s exact-dedup groups by)
     */
   private def thCol(textCol: String): Column =
     xxhash64(Normalize.normalizeText(col(textCol)))
+
+  /** The three index subs' rows for stored docs `df` (id, source, text),
+    * as (sub, rows, key) — the key column buckets and sorts the sub
+    */
+  private def indexRows(df: DataFrame, idCol: String, textCol: String,
+      sourceCol: String, minWords: Int, winnowW: Int)
+      : Seq[(String, DataFrame, String)] = {
+    val grams = SubstringDedup.winnowedGramKeys(
+        SubstringDedup.tokenFrame(df.select(col(idCol), col(textCol)),
+          idCol, textCol), idCol, minWords, winnowW)
+      .select(col("gram_h.h1").as("h1"), col("gram_h.h2").as("h2"),
+        col(idCol))
+      .join(df.select(col(idCol), col(sourceCol)), Seq(idCol))
+      .select(col("h1"), col("h2"), col(idCol), col(sourceCol))
+    Seq((SpGrams, grams, "h1"),
+      (SpDocs, df.select(col(idCol), col(sourceCol)), idCol),
+      (SpHashes, df.select(thCol(textCol).as("th"), col(idCol),
+        col(sourceCol)), "th"))
+  }
 
   private def confSchema: org.apache.spark.sql.types.StructType = {
     import org.apache.spark.sql.types._
@@ -475,11 +445,11 @@ object CorpusStore {
   /** The index shape the group was built at — every commit of a table
     * must use the SAME (minWords, winnowW, buckets): a probe at a
     * different gram length or winnow window slices/samples different
-    * token windows and silently finds nothing, and a different base
-    * modulus routes the wrong trie. The triple is pinned in a one-row
-    * `conf` sub-table written with the FIRST index commit; later commits
-    * verify against it instead of trusting the caller. A conf row missing
-    * the (w, b) columns is a pre-winnowing (r15) index — refused with a
+    * token windows and silently finds nothing, and `buckets` is the floor
+    * of both tables' moduli. The triple is pinned in a one-row `conf`
+    * sub-table written with the FIRST index commit; later commits verify
+    * against it instead of trusting the caller. A conf row missing the
+    * (w, b) columns is a pre-winnowing (r15) index — refused with a
     * pointer at [[rebuildIndexes]].
     */
   private def requireConf(cat: Catalog, table: String,
@@ -529,61 +499,29 @@ object CorpusStore {
     * index grams describe exactly what the store holds) in ONE atomic
     * group commit, pinning (minWords, winnowW, buckets) in the conf sub
     * on first write. Runs after the data commit; see the staleness
-    * discipline note above. Split geometry is RESPECTED (rows route down
-    * the current trie), never changed here.
+    * discipline note above. A commit that grows the group's modulus
+    * re-routes the other sources' index rows too.
     */
   private def commitIndexes(cat: Catalog, table: String,
-      idxManifest: Map[String, Long], splitsAll: Map[String, Set[(Long, Long)]],
-      out: DataFrame, idCol: String, textCol: String, sourceCol: String,
-      minWords: Int, winnowW: Int, buckets: Int,
-      touched: Seq[String]): Unit = {
-    val toks = SubstringDedup.tokenFrame(
-      out.select(col(idCol), col(textCol)), idCol, textCol)
-    val gramRows = SubstringDedup
-      .winnowedGramKeys(toks, idCol, minWords, winnowW)
-      .select(col("gram_h.h1").as("h1"), col("gram_h.h2").as("h2"),
-        col(idCol))
-      .join(out.select(col(idCol), col(sourceCol)), Seq(idCol))
-      .select(col("h1"), col("h2"), col(idCol), col(sourceCol))
-    val b = buckets.toLong
-    val base = Seq(
-      idxBatch(SpGrams, gramRows, col("h1"), "h1", sourceCol,
-        splitsAll(SpGrams), b, subParts(idxManifest, SpGrams), touched),
-      idxBatch(SpDocs, out.select(col(idCol), col(sourceCol)), col(idCol),
-        idCol, sourceCol, splitsAll(SpDocs), b,
-        subParts(idxManifest, SpDocs), touched),
-      idxBatch(SpHashes,
-        out.select(thCol(textCol).as("th"), col(idCol), col(sourceCol)),
-        col("th"), "th", sourceCol, splitsAll(SpHashes), b,
-        subParts(idxManifest, SpHashes), touched))
+      idxManifest: Map[String, Long], out: DataFrame, idCol: String,
+      textCol: String, sourceCol: String, minWords: Int, winnowW: Int,
+      buckets: Int, touched: Seq[String]): Unit = {
+    val idx = indexTable(table)
+    val (m0, m) = moduli(cat, idx, idxManifest, IdxSubs, buckets)
+    val tset = touched.toSet
+    val base = indexRows(out, idCol, textCol, sourceCol, minWords, winnowW)
+      .map { case (sub, rows, key) =>
+        val (old, others) =
+          subParts(idxManifest, sub).partition(p => tset(partSource(p)))
+        val all = if (m == m0) rows else rows.unionByName(cat.readManifestParts(
+          idx, idxManifest, idxSchema(sub, idCol, sourceCol), others, sub))
+        GroupBatch(sub, bucketed(all, col(key), m, key, sourceCol),
+          "_graft_part", if (m == m0) old else old ++ others)
+      }
     val batches = if (idxManifest.contains("conf/0")) base
       else base :+ confBatch(out.sparkSession, minWords, winnowW, buckets)
-    cat.overwriteGroupIf(indexTable(table), batches, -1L)
+    cat.overwriteGroupIf(idx, batches, -1L)
     ()
-  }
-
-  /** Bucket, lay out, and enumerate one index sub-table's commit batch:
-    * rows gain the `_graft_part` partition value (route leaf + '#' +
-    * source), shuffle so each bucket partition lands in ONE task (one
-    * file per bucket dir), and sort within partitions by the probe key so
-    * parquet row groups cover narrow key ranges (the at-scale
-    * footer-stats path). The touched partition set = existing index parts
-    * of the touched SOURCES (so emptied buckets drop from the manifest —
-    * including legacy source-only part values during migration) ∪ the new
-    * rows' own part values (one bounded collect, ≤ touched sources ×
-    * buckets).
-    */
-  private def idxBatch(sub: String, rows: DataFrame, key: Column,
-      sortKey: String, sourceCol: String, splits: Set[(Long, Long)],
-      b: Long, existing: Seq[String], touched: Seq[String]): GroupBatch = {
-    val route = routeUdf(splits, b)
-    val df = rows.withColumn("_graft_part",
-        concat(route(key), lit("#"), col(sourceCol)))
-      .repartition(col("_graft_part"))
-      .sortWithinPartitions(col("_graft_part"), col(sortKey))
-    val tset = touched.toSet
-    val old = existing.filter(p => tset.contains(partSource(p)))
-    GroupBatch(sub, df, "_graft_part", old.distinct)
   }
 
   private def confBatch(spark: org.apache.spark.sql.SparkSession,
@@ -596,27 +534,6 @@ object CorpusStore {
     GroupBatch("conf", conf, "p", Seq("0"))
   }
 
-  /** the informational payload of one split-registry partition (the
-    * REGISTRY is the part key `splits/<space>.<m>.<i>` itself; the row
-    * just makes the partition non-empty so the commit registers it)
-    */
-  private def registrySchema: org.apache.spark.sql.types.StructType = {
-    import org.apache.spark.sql.types._
-    StructType(Seq(StructField("space", StringType),
-      StructField("m", LongType), StructField("i", LongType),
-      StructField("_graft_part", StringType)))
-  }
-
-  private def registryBatch(spark: org.apache.spark.sql.SparkSession,
-      space: String, m: Long, i: Long): GroupBatch = {
-    import org.apache.spark.sql.Row
-    val key = s"$space.$m.$i"
-    val df = spark.createDataFrame(
-      spark.sparkContext.parallelize(Seq(Row(space, m, i, key)), 1),
-      registrySchema)
-    GroupBatch("splits", df, "_graft_part", Seq(key))
-  }
-
   /** Build (or rebuild) the dedup index group for an EXISTING corpus
     * table from its current committed text — the migration path for
     * stores committed before the indexes existed, for index-shape pin
@@ -624,12 +541,11 @@ object CorpusStore {
     * over the stored corpus, one atomic group commit covering every
     * stored source (plus any stale index partitions of sources no longer
     * in the store, which are dropped). The store is re-based FLAT at the
-    * new base modulus: the split registry is cleared and any split or
-    * legacy data partitions rewrite to `%05d#source`. Returns the
-    * committed index version. writeDeduped / ingestBatch maintain the
-    * index incrementally and [[maintainBuckets]] grows the geometry one
-    * leaf at a time — this full rebuild is never needed in the steady
-    * state.
+    * new base modulus: data partitions of any other modulus or layout
+    * (legacy source-named ones included) rewrite to `<b>.<i>#source`.
+    * Returns the committed index version. writeDeduped / ingestBatch
+    * maintain the index incrementally and grow both moduli with the
+    * store — this full rebuild is never needed in the steady state.
     */
   def rebuildIndexes(cat: Catalog, table: String, idCol: String,
       textCol: String, sourceCol: String, minWords: Int = 50,
@@ -644,68 +560,24 @@ object CorpusStore {
         sum(length(col(textCol)))).head()
       val storedBytes =
         if (bytesRow.isNullAt(0)) 0L else bytesRow.getLong(0)
-      val bucketsEff = if (buckets > 0) buckets
+      val b = if (buckets > 0) buckets
         else BucketSizing.deriveBase(storedBytes,
           BucketSizing.baseBucketBytes(full.sparkSession))
-      // migrate the DATA layout when needed: legacy source-partitioned
-      // parts, split leaves (flattened back to the base), or a
-      // bucket-count pin change (part names are how dirty buckets
-      // resolve, so data bucketing must track the conf pin). Every
-      // existing part is in the overwrite set so old names drop.
+      // every existing part is in the overwrite set so old names drop
       val dataMf = cat.partitionManifest(table)
-      val oldB = confPins(cat, table, cat.snapshot(indexTable(table))._2)
-        .flatMap(_._3)
-      val flatShape = "\\d{5}#.*"
-      val needRewrite = dataMf.nonEmpty &&
-        (dataMf.keysIterator.exists(!_.matches(flatShape)) ||
-          !oldB.contains(bucketsEff.toLong))
-      if (needRewrite)
-        commitDataParts(cat, table, full, idCol, sourceCol, bucketsEff,
-          Set.empty, dataMf.keys.toSeq)
+      if (!dataMf.keys.forall(BucketSizing.labelModulus(_).contains(b)))
+        commitDataParts(cat, table, full, idCol, sourceCol, b,
+          dataMf.keys.toSeq)
       val stored = full.select(col(idCol), col(sourceCol), col(textCol))
       val manifest = cat.snapshot(indexTable(table))._2
-      val toks = SubstringDedup.tokenFrame(
-        stored.select(col(idCol), col(textCol)), idCol, textCol)
-      val gramRows = SubstringDedup
-        .winnowedGramKeys(toks, idCol, minWords, winnowW)
-        .select(col("gram_h.h1").as("h1"), col("gram_h.h2").as("h2"),
-          col(idCol))
-        .join(stored.select(col(idCol), col(sourceCol)), Seq(idCol))
-        .select(col("h1"), col("h2"), col(idCol), col(sourceCol))
-      val docRows = stored.select(col(idCol), col(sourceCol))
-      val hashRows = stored.select(thCol(textCol).as("th"), col(idCol),
-        col(sourceCol))
-      // touched = EVERY existing index partition (whatever its layout —
-      // the pre-bucketing source-only names included, so legacy and
-      // vanished-source entries drop) ∪ the rebuilt rows' own parts; a
-      // full rebuild REPLACES the (minWords, w, b) pin (this IS the
-      // migration path for changing the index shape) — conf overwritten,
-      // not verified — and CLEARS the split registry (flat rebase).
-      // idxBatch's existing-parts filter keys on touched SOURCES, so hand
-      // it every stored source plus every source an existing part names.
-      val b = bucketsEff.toLong
-      val storedSources = stored.select(col(sourceCol)).distinct()
-        .collect().map(_.getString(0)).toSeq
-      def allSources(sub: String) =
-        (storedSources ++ subParts(manifest, sub).map(partSource)).distinct
-      val flat = Set.empty[(Long, Long)]
-      var batches = Seq(
-        idxBatch(SpGrams, gramRows, col("h1"), "h1", sourceCol, flat, b,
-          subParts(manifest, SpGrams), allSources(SpGrams)),
-        idxBatch(SpDocs, docRows, col(idCol), idCol, sourceCol, flat, b,
-          subParts(manifest, SpDocs), allSources(SpDocs)),
-        idxBatch(SpHashes, hashRows, col("th"), "th", sourceCol, flat, b,
-          subParts(manifest, SpHashes), allSources(SpHashes)),
-        confBatch(stored.sparkSession, minWords, winnowW, bucketsEff))
-      val splitKeys = subParts(manifest, "splits")
-      if (splitKeys.nonEmpty) {
-        // an all-touched batch with no staged rows drops every registry key
-        val empty = stored.sparkSession.createDataFrame(
-          stored.sparkSession.sparkContext
-            .emptyRDD[org.apache.spark.sql.Row], registrySchema)
-        batches = batches :+ GroupBatch("splits", empty, "_graft_part",
-          splitKeys)
-      }
+      // every existing index partition (whatever its layout or source) is
+      // overwritten, and the (minWords, w, b) pin REPLACED, not verified:
+      // this IS the migration path for changing the index shape
+      val batches = indexRows(stored, idCol, textCol, sourceCol, minWords,
+          winnowW).map { case (sub, rows, key) =>
+          GroupBatch(sub, bucketed(rows, col(key), b, key, sourceCol),
+            "_graft_part", subParts(manifest, sub))
+        } :+ confBatch(stored.sparkSession, minWords, winnowW, b)
       cat.overwriteGroupIf(indexTable(table), batches, -1L)
     } finally { full.unpersist(); () }
   }
@@ -793,9 +665,10 @@ object CorpusStore {
     *    O(source) (the r15 hot-source finding);
     *  6. the index group's touched bucket partitions merge incrementally
     *    ([[mergeIndexes]]) and the high-water mark advances in the SAME
-    *    commit; then, when `targetBucketBytes` > 0, any bucket this
-    *    batch touched that grew past the target is split in place
-    *    ([[maintainBuckets]] — O(one bucket) per split, never O(store)).
+    *    commit. A table whose pinned bytes have outgrown its modulus is
+    *    rewritten whole at the grown modulus in its commit (the layout
+    *    note above) — the data table and the index group each by its own
+    *    bytes.
     *
     * Rows with a null id or source are DROPPED with a warning before any
     * probe (r16 ADVICE: an NPE here would poison the at-least-once replay
@@ -824,29 +697,28 @@ object CorpusStore {
     * bounded stale-row window).
     *
     * Scale shape: all three probes read ONLY the index bucket partitions
-    * on the batch's own route chains (winnowed gram keys / doc ids /
-    * text hashes — the pruning is lossless: a matching index row's
-    * partition provably lies on some batch key's chain), hash-joined
-    * against the broadcast batch keys. With leaf buckets held near
-    * `targetBucketBytes` by one-leaf splits, per-batch probe I/O is
-    * O(batch keys × target bucket bytes) — the B-tree-leaf bound of the
-    * reference's indexed cluster_values probe (Storage.java:370-400) —
-    * not O(store index), at any store size and with NO full-rewrite
-    * event ever. The data write rewrites only dirty bucket partitions;
-    * confirmation re-reads are bounded by hit docs.
+    * the batch's own keys name (winnowed gram keys / doc ids / text hashes
+    * under the group's modulus — the pruning is lossless: a matching index
+    * row lies in its key's bucket), hash-joined against the broadcast
+    * batch keys. With buckets held near `baseBucketBytes` by growth,
+    * per-batch probe I/O is O(batch keys × bucket bytes) — the B-tree-leaf
+    * bound of the reference's indexed cluster_values probe
+    * (Storage.java:370-400) — not O(store index). The data write rewrites
+    * only dirty bucket partitions; confirmation re-reads are bounded by
+    * hit docs.
     */
   def ingestBatch(cat: Catalog, table: String, batch: DataFrame,
       batchId: Long, idCol: String, textCol: String, sourceCol: String,
       minWords: Int = 50, minDocs: Int = 2, winnowW: Int = 8,
-      buckets: Int = 0, targetBucketBytes: Long = 0L): Long = {
+      buckets: Int = 0): Long = {
     val spark = batch.sparkSession
     val log = org.slf4j.LoggerFactory.getLogger(getClass)
     // fail fast BEFORE any job, probe, or commit: index-shape pins, the
     // half-indexed-store guard, and the data-layout guard (r16 verdict
     // item 5: these used to run after the empty-batch Spark job). The
-    // pinned index snapshot below serves the whole batch: conf pins
-    // (cached — no job), split registry and high-water mark (manifest
-    // keys — no job).
+    // pinned snapshots below serve the whole batch: conf pins (cached —
+    // no job), both moduli and the high-water mark (manifest keys — no
+    // job).
     // buckets = 0 (AUTO, the default): adopt the store's pinned base
     // modulus — geometry is a store property, so ingest callers never
     // need to know it; an explicit value keeps the refuse-on-mismatch
@@ -868,7 +740,8 @@ object CorpusStore {
       }
     requireIndexReady(cat, table, idxManifest, minWords, winnowW,
       bucketsEff)
-    requireDataLayout(cat, table)
+    val (_, dataManifest) = cat.snapshot(table)
+    requireDataLayout(table, dataManifest)
     val stateIds = idxManifest.keysIterator.filter(_.startsWith("state/"))
       .map(_.stripPrefix("state/").toLong).toSeq
     val highWater = stateIds.maxOption.getOrElse(Long.MinValue)
@@ -894,64 +767,51 @@ object CorpusStore {
       .dropDuplicates(idCol)
       .persist(lvl)
     try {
-      val (_, dataManifest) = cat.snapshot(table)
-      val b = bucketsEff.toLong
-      val splitsAll = splitsOf(idxManifest)
-      val chData = chainUdf(splitsAll(SpData), b)
-      val chDocs = chainUdf(splitsAll(SpDocs), b)
-      val chHash = chainUdf(splitsAll(SpHashes), b)
+      // each table's modulus: probes read at the current one (dm0, im0),
+      // the two commits write at the grown one (dm, im)
+      val (dm0, dm) = moduli(cat, table, dataManifest, Seq(""), bucketsEff)
+      val (im0, im) = moduli(cat, indexTable(table), idxManifest, IdxSubs,
+        bucketsEff)
       val ok = col(idCol).isNotNull && col(sourceCol).isNotNull
+      val dataPart = partOf(col(idCol), dm0, sourceCol)
       // ONE stats job over the batch replaces r16's four separate
       // bounded collects (empty-check, id-buckets, fresh data parts,
-      // th-buckets): row count + malformed count + the route CHAINS of
-      // every batch key under the data/docs/hashes tries (each bounded
-      // by batch keys × trie depth)
-      def label(s: String): Unit =
-        spark.sparkContext.setJobDescription(
-          if (s == null) null else s"ingestBatch: $s")
-      label("batch stats + route chains")
-      val stats = incomingAll.agg(
-        count(lit(1)).as("n"),
-        sum(when(ok, 0L).otherwise(1L)).as("bad"),
-        collect_set(when(ok,
-          struct(chData(col(idCol)).as("c"), col(sourceCol).as("s"))))
-          .as("dataChains"),
-        collect_set(when(ok, chDocs(col(idCol)))).as("docsChains"),
-        collect_set(when(ok, chHash(thCol(textCol)))).as("hashChains"))
-        .head()
+      // th-buckets): row count + malformed count + the data partitions
+      // and docs/hashes bucket labels of every batch key (each bounded
+      // by batch keys)
+      val stats = Catalog.withJobLabel(spark, "ingestBatch: batch stats") {
+        incomingAll.agg(
+          count(lit(1)).as("n"),
+          sum(when(ok, 0L).otherwise(1L)).as("bad"),
+          collect_set(when(ok, dataPart)).as("dataParts"),
+          collect_set(when(ok, BucketSizing.label(col(idCol), im0)))
+            .as("docsLabels"),
+          collect_set(when(ok, BucketSizing.label(thCol(textCol), im0)))
+            .as("hashLabels"))
+          .head()
+      }
       if (stats.getLong(0) == 0L) return cat.version(table)
       if (stats.getLong(1) > 0L)
         log.warn(s"ingestBatch: batch $batchId for '$table' contains " +
           s"${stats.getLong(1)} row(s) with a null $idCol/$sourceCol - " +
           "dropped (a malformed record must not wedge the replay loop)")
-      val dataChainParts = stats.getSeq[org.apache.spark.sql.Row](2)
-        .flatMap(r => r.getSeq[String](0).map(l => l + "#" + r.getString(1)))
-        .distinct
-      val docsLabels = stats.getSeq[Seq[String]](3).flatten.toSet
-      val hashLabels = stats.getSeq[Seq[String]](4).flatten.toSet
-      if (dataChainParts.isEmpty) { // every row was malformed: no-op
+      val batchParts = stats.getSeq[String](2)
+      val docsLabels = stats.getSeq[String](3).toSet
+      val hashLabels = stats.getSeq[String](4).toSet
+      if (batchParts.isEmpty) { // every row was malformed: no-op
         log.warn(s"ingestBatch: batch $batchId for '$table' had no valid " +
           "rows - nothing committed")
         return cat.version(table)
       }
       val incoming = incomingAll.filter(ok)
       val batchIds = incoming.select(col(idCol))
-      // label-match a sub's existing partitions against chain labels: a
-      // partition (m, i, source) can hold a matching key only if its own
-      // (m, i) lies on some batch key's chain — lossless whatever the
-      // split state (rows committed pre-split sit at an ancestor, which
-      // the chain also names)
+      // a sub's existing partitions (any source) in the buckets `labels`
+      // name
       def labelMatched(sub: String, labels: Set[String]): Seq[String] =
-        subParts(idxManifest, sub)
-          .filter(p => labels.contains(p.takeWhile(_ != '#')))
-      // chain parts of a bounded (key, source) frame — one collect each
-      def chainParts(df: DataFrame, chain: UserDefinedFunction,
-          key: Column, src: Column): Seq[String] =
-        df.agg(collect_set(struct(chain(key).as("c"), src.as("s"))))
-          .head().getSeq[org.apache.spark.sql.Row](0)
-          .flatMap(r =>
-            r.getSeq[String](0).map(l => l + "#" + r.getString(1)))
-          .distinct
+        subParts(idxManifest, sub).filter(p => labels(partLabel(p)))
+      // the data partitions holding a bounded (id, source) frame's rows
+      def dataPartsOf(df: DataFrame): Seq[String] =
+        df.agg(collect_set(dataPart)).head().getSeq[String](0)
       // The three index probes — docs-conflict, whole-doc hash dup, gram
       // — hit DISJOINT index sub-tables, and (r17, guide §2.6 "overlap
       // independent jobs") their bounded collects now run CONCURRENTLY
@@ -964,13 +824,11 @@ object CorpusStore {
       // hash-dropped doc's probe rows are filtered out at the bdocs join
       // below, and its extra gram hits only widen the context read.
       //
-      // DIRTY data partitions = every partition on the batch ids' route
-      // chains under the batch's OWN sources (leaf = where new rows land;
-      // ancestors = where a pre-split stored copy may sit), plus the
+      // DIRTY data partitions = the batch rows' own partitions, plus the
       // partitions holding a conflicting old copy (same id re-ingested
       // under a DIFFERENT source — found in the docs index; conflict docs
-      // are stored rows, so their chains under their OLD source name the
-      // partitions exactly).
+      // are stored rows, so their id and OLD source name the partition
+      // exactly) — or every partition when the commit grows the modulus.
       val docsIdx = cat.readManifestParts(indexTable(table), idxManifest,
         docsIndexSchema(idCol, sourceCol), labelMatched(SpDocs, docsLabels),
         SpDocs)
@@ -1003,7 +861,7 @@ object CorpusStore {
       // the batch. Only the ids this batch replaces are excluded (their
       // stale grams must not strip their own new versions). Both probe
       // sides winnow with the SAME pinned window; only the index buckets
-      // on the batch's own route chains are read.
+      // the batch's gram keys name are read.
       val batchToks = SubstringDedup.tokenFrame(
           incoming.select(col(idCol), col(textCol)), idCol, textCol)
         .persist(lvl) // feeds the probe grams AND the pre-strip
@@ -1011,24 +869,20 @@ object CorpusStore {
         .winnowedGramKeys(batchToks, idCol, minWords, winnowW)
         .select(col("gram_h.h1").as("h1"), col("gram_h.h2").as("h2"))
         .distinct()
-        .persist(lvl) // consumed by the chain collect AND the probe join
-      val chGrams = chainUdf(splitsAll(SpGrams), b)
+        .persist(lvl) // consumed by the label collect AND the probe join
       import scala.concurrent.{Await, Future}
       import scala.concurrent.duration.Duration
       implicit val probeExecutor = probeEc
-      val fConflict = Future {
-        label("docs-index conflict probe")
-        chainParts(conflictFrame, chData, col(idCol), col(sourceCol))
+      def probe[T](what: String)(body: => T): Future[T] =
+        Future(Catalog.withJobLabel(spark, s"ingestBatch: $what")(body))
+      val fConflict = probe("docs-index conflict probe") {
+        dataPartsOf(conflictFrame)
       }
-      val fCand = Future {
-        label("hash-dup candidate parts")
-        chainParts(cand, chData, col(idCol), col(sourceCol))
-      }
-      val fGram = Future {
-        label("gram probe")
+      val fCand = probe("hash-dup candidate parts")(dataPartsOf(cand))
+      val fGram = probe("gram probe") {
         val gramLabels = batchKeys
-          .agg(collect_set(chGrams(col("h1")))).head()
-          .getSeq[Seq[String]](0).flatten.toSet
+          .agg(collect_set(BucketSizing.label(col("h1"), im0))).head()
+          .getSeq[String](0).toSet
         val gramsIdx = cat.readManifestParts(indexTable(table),
           idxManifest, gramIndexSchema(idCol, sourceCol),
           labelMatched(SpGrams, gramLabels), SpGrams)
@@ -1036,12 +890,13 @@ object CorpusStore {
           .select(col(idCol), col(sourceCol)).distinct()
           .join(broadcast(batchIds), Seq(idCol), "left_anti")
           .persist(lvl) // consumed by the part collect AND the id semi-join
-        (hs, chainParts(hs, chData, col(idCol), col(sourceCol)))
+        (hs, dataPartsOf(hs))
       }
       val conflictParts = Await.result(fConflict, Duration.Inf)
       val candParts = Await.result(fCand, Duration.Inf)
       val (hits, hitParts) = Await.result(fGram, Duration.Inf)
-      val dirtyParts = (dataChainParts ++ conflictParts).distinct
+      val dirtyParts = if (dm != dm0) dataManifest.keys.toSeq
+        else (batchParts ++ conflictParts).distinct
       // dirty-part stored rows split into REPLACED (ids this batch
       // re-ingests — the old copies leave the store, and their index
       // entries merge out below) and PASS-THROUGH bucket neighbours,
@@ -1083,10 +938,12 @@ object CorpusStore {
         // a lost-executor recompute is impossible, but a failed ingest
         // job just fails the commit and the at-least-once replay redoes
         // the batch (the state-mark protocol).
-        label("pre-strip checkpoint")
-        val pre = SubstringDedup.keepOneStripped(batchToks,
-            SubstringDedup.removeAllVerdicts(preSpans, idCol), idCol)
-          .localCheckpoint(true)
+        val pre = Catalog.withJobLabel(spark,
+            "ingestBatch: pre-strip checkpoint") {
+          SubstringDedup.keepOneStripped(batchToks,
+              SubstringDedup.removeAllVerdicts(preSpans, idCol), idCol)
+            .localCheckpoint(true)
+        }
         // the batch-only working set: normalize-dedup (min id) +
         // keep-one strip WITHIN the batch — stored rows never join it,
         // so per-batch compute is O(batch), never O(source)
@@ -1103,29 +960,26 @@ object CorpusStore {
           val preAudit = pre.select(col(idCol),
             col("n_tokens_before").as("_graft_pre_b"),
             col("n_spans_removed").as("_graft_pre_r"))
-          label("batch strip checkpoint")
-          val batchOut = strippedF.join(preAudit, Seq(idCol), "left")
-            .select(col(idCol), col(sourceCol), col(textCol),
-              coalesce(col("_graft_pre_b"), col("n_tokens_before"))
-                .as("n_tokens_before"),
-              col("n_tokens_after"),
-              (col("n_spans_removed") +
-                coalesce(col("_graft_pre_r"), lit(0L)))
-                .as("n_spans_removed"))
-            // lineage cut (see `pre`): the data write + three index
-            // merges all start from a flat scan of the batch rows
-            .localCheckpoint(true)
-          label(null)
+          val batchOut = Catalog.withJobLabel(spark,
+              "ingestBatch: batch strip checkpoint") {
+            strippedF.join(preAudit, Seq(idCol), "left")
+              .select(col(idCol), col(sourceCol), col(textCol),
+                coalesce(col("_graft_pre_b"), col("n_tokens_before"))
+                  .as("n_tokens_before"),
+                col("n_tokens_after"),
+                (col("n_spans_removed") +
+                  coalesce(col("_graft_pre_r"), lit(0L)))
+                  .as("n_spans_removed"))
+              // lineage cut (see `pre`): the data write + three index
+              // merges all start from a flat scan of the batch rows
+              .localCheckpoint(true)
+          }
           val v = commitDataParts(cat, table,
-            passThrough.unionByName(batchOut), idCol, sourceCol,
-            bucketsEff, splitsAll(SpData), dirtyParts)
-          val idxTouched = mergeIndexes(cat, table, idxManifest, splitsAll,
-            batchOut, replaced, batchIds, batchId, idCol, textCol,
-            sourceCol, minWords, winnowW, bucketsEff)
-          if (targetBucketBytes > 0L)
-            maintainBuckets(cat, table, idCol, textCol, sourceCol,
-              targetBucketBytes,
-              Some(idxTouched + (SpData -> dirtyParts)))
+            passThrough.unionByName(batchOut), idCol, sourceCol, dm,
+            dirtyParts)
+          mergeIndexes(cat, table, idxManifest, im0, im, batchOut, replaced,
+            batchIds, batchId, idCol, textCol, sourceCol, minWords, winnowW,
+            bucketsEff)
           v
         } finally { cleanup() }
       } finally {
@@ -1136,18 +990,18 @@ object CorpusStore {
   }
 
   /** Incremental index maintenance for one ingest commit: for each
-    * sub-table, the touched partitions are exactly those on the route
-    * chains of the NEW rows' keys (batch's committed docs) or the
-    * REPLACED docs' OLD keys — old keys recomputed from the old stored
-    * text read off the dirty data partitions with the same deterministic
-    * functions and pins, so the removal set's partitions are exact. Each
-    * touched partition's next content = its current rows minus ALL batch
-    * ids, plus the new rows (re-routed to the current leaves, so
-    * half-split ancestors heal). The high-water mark advances as the
-    * `state/<batchId>` manifest key IN the same atomic group commit (r16
-    * verdict item 3: one fewer table claim per batch). O(batch +
-    * replaced), never O(source). Returns the touched partitions per sub
-    * (the split trigger's candidate set).
+    * sub-table, the touched partitions are exactly those the NEW rows'
+    * keys (batch's committed docs) or the REPLACED docs' OLD keys land in
+    * under the group's modulus `m0` — old keys recomputed from the old
+    * stored text read off the dirty data partitions with the same
+    * deterministic functions and pins, so the removal set's partitions
+    * are exact. Each touched partition's next content = its current rows
+    * minus ALL batch ids, plus the new rows. When the group grows to
+    * modulus `m`, every partition is touched and re-routed. The
+    * high-water mark advances as the `state/<batchId>` manifest key IN
+    * the same atomic group commit (r16 verdict item 3: one fewer table
+    * claim per batch). O(batch + replaced), never O(source), outside a
+    * growth commit.
     *
     * Crash window: a replay after a crash between the data commit and
     * this merge can no longer read a replaced doc's OLD text (the data
@@ -1157,63 +1011,44 @@ object CorpusStore {
     * by the next [[rebuildIndexes]].
     */
   private def mergeIndexes(cat: Catalog, table: String,
-      manifest: Map[String, Long], splitsAll: Map[String, Set[(Long, Long)]],
-      batchOut: DataFrame, replaced: DataFrame, batchIds: DataFrame,
-      batchId: Long, idCol: String, textCol: String, sourceCol: String,
-      minWords: Int, winnowW: Int, buckets: Int)
-      : Map[String, Seq[String]] = {
-    val b = buckets.toLong
+      manifest: Map[String, Long], m0: Int, m: Int, batchOut: DataFrame,
+      replaced: DataFrame, batchIds: DataFrame, batchId: Long,
+      idCol: String, textCol: String, sourceCol: String, minWords: Int,
+      winnowW: Int, buckets: Int): Unit = {
     val spark = batchOut.sparkSession
-    def gramsOf(df: DataFrame) =
-      SubstringDedup.winnowedGramKeys(
-          SubstringDedup.tokenFrame(df.select(col(idCol), col(textCol)),
-            idCol, textCol), idCol, minWords, winnowW)
-        .select(col("gram_h.h1").as("h1"), col("gram_h.h2").as("h2"),
-          col(idCol))
-        .join(df.select(col(idCol), col(sourceCol)), Seq(idCol))
-        .select(col("h1"), col("h2"), col(idCol), col(sourceCol))
-    def hashesOf(df: DataFrame) =
-      df.select(thCol(textCol).as("th"), col(idCol), col(sourceCol))
-    val subs: Seq[(String, DataFrame, DataFrame, String, String)] = Seq(
-      // (sub, newRows, oldRows, keyCol, sortKey)
-      (SpGrams, gramsOf(batchOut), gramsOf(replaced), "h1", "h1"),
-      (SpDocs, batchOut.select(col(idCol), col(sourceCol)),
-        replaced.select(col(idCol), col(sourceCol)), idCol, idCol),
-      (SpHashes, hashesOf(batchOut), hashesOf(replaced), "th", "th"))
-    // ONE job collects every sub's candidate partitions (new keys' chains
-    // ∪ old keys' chains, each under its row's source) — r16 ran six
-    // separate collects here
-    val tagged = subs.map { case (sub, nw, old, key, _) =>
-      val ch = chainUdf(splitsAll(sub), b)
-      nw.unionByName(old).select(lit(sub).as("_graft_sub"),
-        ch(col(key)).as("_graft_chain"), col(sourceCol).as("_graft_src"))
-    }.reduce(_.unionByName(_))
-    spark.sparkContext.setJobDescription("mergeIndexes: candidate parts")
-    val candRows = tagged
-      .agg(collect_set(struct(col("_graft_sub"), col("_graft_chain"),
-        col("_graft_src")))).head()
-      .getSeq[org.apache.spark.sql.Row](0)
-    spark.sparkContext.setJobDescription(null)
-    val candidates: Map[String, Seq[String]] = candRows
-      .groupBy(_.getString(0))
-      .map { case (sub, rows) =>
-        sub -> rows.flatMap(r =>
-          r.getSeq[String](1).map(l => l + "#" + r.getString(2))).distinct
+    val idx = indexTable(table)
+    def rowsOf(df: DataFrame) =
+      indexRows(df, idCol, textCol, sourceCol, minWords, winnowW)
+    // (sub, newRows, oldRows, key)
+    val subs = rowsOf(batchOut).zip(rowsOf(replaced)).map {
+      case ((sub, nw, key), (_, old, _)) => (sub, nw, old, key)
+    }
+    // ONE job collects every sub's candidate partitions (new keys' ∪ old
+    // keys' buckets, each under its row's source) — r16 ran six separate
+    // collects here
+    val candidates: Map[String, Seq[String]] =
+      if (m != m0) IdxSubs.map(s => s -> subParts(manifest, s)).toMap
+      else {
+        val tagged = subs.map { case (sub, nw, old, key) =>
+          nw.select(col(key), col(sourceCol))
+            .unionByName(old.select(col(key), col(sourceCol)))
+            .select(lit(sub).as("_graft_sub"),
+              partOf(col(key), m0, sourceCol).as("_graft_p"))
+        }.reduce(_.unionByName(_))
+        Catalog.withJobLabel(spark, "mergeIndexes: candidate parts") {
+          tagged.agg(collect_set(struct(col("_graft_sub"), col("_graft_p"))))
+            .head()
+        }.getSeq[org.apache.spark.sql.Row](0).groupBy(_.getString(0))
+          .map { case (sub, rows) => sub -> rows.map(_.getString(1)) }
       }
-    def merged(sub: String, newRows: DataFrame, keyCol: String,
-        sortKey: String,
-        schema: org.apache.spark.sql.types.StructType): GroupBatch = {
+    val merged = subs.map { case (sub, nw, _, key) =>
       val parts = candidates.getOrElse(sub, Seq.empty)
-      val route = routeUdf(splitsAll(sub), b)
-      val content = cat.readManifestParts(indexTable(table), manifest,
-          schema, parts, sub)
+      val content = cat.readManifestParts(idx, manifest,
+          idxSchema(sub, idCol, sourceCol), parts, sub)
         .join(broadcast(batchIds), Seq(idCol), "left_anti")
-        .unionByName(newRows)
-        .withColumn("_graft_part",
-          concat(route(col(keyCol)), lit("#"), col(sourceCol)))
-        .repartition(col("_graft_part"))
-        .sortWithinPartitions(col("_graft_part"), col(sortKey))
-      GroupBatch(sub, content, "_graft_part", parts.distinct)
+        .unionByName(nw)
+      GroupBatch(sub, bucketed(content, col(key), m, key, sourceCol),
+        "_graft_part", parts)
     }
     // the high-water mark: one tiny partition whose KEY is the batch id;
     // prior marks drop in the same commit (monotone single key)
@@ -1228,40 +1063,30 @@ object CorpusStore {
           org.apache.spark.sql.types.StringType))))
     val stateBatch = GroupBatch("state", stateDf, "_graft_part",
       (oldState :+ batchId.toString).distinct)
-    val base = Seq(
-      merged(SpGrams, subs(0)._2, "h1", "h1",
-        gramIndexSchema(idCol, sourceCol)),
-      merged(SpDocs, subs(1)._2, idCol, idCol,
-        docsIndexSchema(idCol, sourceCol)),
-      merged(SpHashes, subs(2)._2, "th", "th",
-        hashIndexSchema(idCol, sourceCol)),
-      stateBatch)
+    val base = merged :+ stateBatch
     val batches = if (manifest.contains("conf/0")) base
       else base :+ confBatch(spark, minWords, winnowW, buckets)
-    cat.overwriteGroupIf(indexTable(table), batches, -1L)
-    candidates
+    cat.overwriteGroupIf(idx, batches, -1L)
+    ()
   }
 
   /** Diagnostic: the exact I/O footprint the three index probes (and the
     * dirty-data resolution) of `batch` would read at the store's CURRENT
-    * bucket geometry — per space: (partitions named by the batch's route
-    * chains, their bytes, total partitions, total bytes). Pure metadata
-    * (one stats job over the batch + driver-side filesystem sizes; no
-    * index data is read). This is how the bucket-geometry ledger in NOTES
-    * measures the pruning win instead of inferring it: compare bytesNamed
-    * against bytesTotal at two geometries for the same batch.
+    * moduli — per space: (partitions named by the batch's keys, their
+    * bytes, total partitions, total bytes). Pure metadata (two stats jobs
+    * over the batch + driver-side filesystem sizes; no index data is
+    * read). This is how the bucket-layout ledger in NOTES measures the
+    * pruning win instead of inferring it: compare bytesNamed against
+    * bytesTotal. `buckets` is the floor for a store with no labels yet.
     */
   def probeFootprint(cat: Catalog, table: String, batch: DataFrame,
       idCol: String, textCol: String, sourceCol: String, minWords: Int,
       winnowW: Int, buckets: Int): Map[String, (Long, Long, Long, Long)] = {
-    val (_, idxManifest) = cat.snapshot(indexTable(table))
-    val (_, dataManifest) = cat.snapshot(table)
-    val b = buckets.toLong
-    val splitsAll = splitsOf(idxManifest)
-    val chData = chainUdf(splitsAll(SpData), b)
-    val chDocs = chainUdf(splitsAll(SpDocs), b)
-    val chHash = chainUdf(splitsAll(SpHashes), b)
-    val chGrams = chainUdf(splitsAll(SpGrams), b)
+    val idx = indexTable(table)
+    val (_, imf) = cat.snapshot(idx)
+    val (_, dmf) = cat.snapshot(table)
+    val dm = modulusIn(table, dmf, Seq(""), buckets)
+    val im = modulusIn(idx, imf, IdxSubs, buckets)
     val incoming = batch.select(col(idCol).cast("long").as(idCol),
       col(sourceCol).cast("string").as(sourceCol),
       col(textCol).cast("string").as(textCol))
@@ -1273,190 +1098,25 @@ object CorpusStore {
         idCol, minWords, winnowW)
       .select(col("gram_h.h1").as("h1")).distinct()
     val stats = incoming.agg(
-      collect_set(struct(chData(col(idCol)).as("c"),
-        col(sourceCol).as("s"))).as("dataChains"),
-      collect_set(chDocs(col(idCol))).as("docsChains"),
-      collect_set(chHash(thCol(textCol))).as("hashChains")).head()
-    val gramLabels = gramKeys.agg(collect_set(chGrams(col("h1")))).head()
-      .getSeq[Seq[String]](0).flatten.toSet
-    val dataParts = stats.getSeq[org.apache.spark.sql.Row](0)
-      .flatMap(r => r.getSeq[String](0).map(l => l + "#" + r.getString(1)))
-      .distinct
-    val docsLabels = stats.getSeq[Seq[String]](1).flatten.toSet
-    val hashLabels = stats.getSeq[Seq[String]](2).flatten.toSet
-    def sub(space: String, labels: Set[String]) = {
-      val all = subParts(idxManifest, space)
-      val named = all.filter(p => labels.contains(p.takeWhile(_ != '#')))
-      val sz = cat.partitionBytes(indexTable(table), idxManifest, all, space)
-      space -> ((named.size.toLong, named.map(p => sz.getOrElse(p, 0L)).sum,
-        all.size.toLong, sz.values.sum))
+      collect_set(partOf(col(idCol), dm, sourceCol)),
+      collect_set(BucketSizing.label(col(idCol), im)),
+      collect_set(BucketSizing.label(thCol(textCol), im))).head()
+    val gramLabels = gramKeys.agg(collect_set(BucketSizing.label(col("h1"),
+      im))).head().getSeq[String](0).toSet
+    def footprint(name: String, mf: Map[String, Long], sub: String,
+        named: String => Boolean) = {
+      val all = subParts(mf, sub)
+      val sz = cat.partitionBytes(name, mf, all, sub)
+      val hit = all.filter(named)
+      (hit.size.toLong, hit.map(sz.getOrElse(_, 0L)).sum, all.size.toLong,
+        sz.values.sum)
     }
-    val dAll = dataManifest.keys.toSeq.filter(isBucketedPart)
-    val dNamed = dataParts.filter(dAll.toSet.contains)
-    val dSz = cat.partitionBytes(table, dataManifest, dAll)
-    Map(sub(SpGrams, gramLabels), sub(SpDocs, docsLabels),
-      sub(SpHashes, hashLabels),
-      SpData -> ((dNamed.size.toLong, dNamed.map(p => dSz.getOrElse(p, 0L)).sum,
-        dAll.size.toLong, dSz.values.sum)))
-  }
-
-  // ---------------- incremental bucket growth (r16 verdict item 1) ----
-
-  /** the deepest modulus a bucket may split to (a pathological bucket
-    * whose keys are ALL one value stops here instead of looping);
-    * overridable via spark.graft.store.maxBucketFactor (× base modulus)
-    */
-  private def maxModulus(spark: org.apache.spark.sql.SparkSession,
-      b: Long): Long =
-    b * spark.conf.getOption("spark.graft.store.maxBucketFactor")
-      .map(_.toLong).getOrElse(65536L)
-
-  /** Split ONE bucket (m, i) of `space` in place: the bucket's rows
-    * re-route into children (2m, i) and (2m, i+m), and the split is
-    * recorded as the registry key `splits/<space>.<m>.<i>` in the index
-    * group's manifest. I/O is O(that bucket) — never O(store).
-    *
-    * Atomicity: for the three index spaces the children rewrite and the
-    * registry key land in ONE group commit. The data space needs two
-    * commits (registry in the index group, rows in the data table) in
-    * registry-FIRST order; a crash between them leaves a registered but
-    * physically unsplit bucket, which every reader handles (partitions
-    * match by their own modulus) and the next commit touching that
-    * bucket heals (its rewrite re-routes the ancestor's rows into the
-    * leaves). Splitting an already-registered node is the explicit
-    * repair for that window: it re-runs the rewrite.
-    */
-  def splitBucket(cat: Catalog, table: String, space: String, m: Long,
-      i: Long, idCol: String, textCol: String, sourceCol: String): Unit = {
-    val spark = cat.spark
-    val (_, idxManifest) = cat.snapshot(indexTable(table))
-    val pins = confPins(cat, table, idxManifest).getOrElse(
-      sys.error(s"corpus table '$table' has no index conf - nothing to split"))
-    val b = pins._3.getOrElse(
-      sys.error(s"corpus table '$table' carries a pre-winnowing index"))
-    require(Seq(SpData, SpDocs, SpGrams, SpHashes).contains(space),
-      s"unknown bucket space '$space'")
-    require(2 * m <= maxModulus(spark, b),
-      s"bucket ($m, $i) of '$space' is at the max split depth " +
-        "(spark.graft.store.maxBucketFactor)")
-    val splits1 = splitsOf(idxManifest)(space) + ((m, i))
-    val route = routeUdf(splits1, b)
-    if (space == SpData) {
-      // registry first (see atomicity note), then the bucket rewrite
-      cat.overwriteGroupIf(indexTable(table),
-        Seq(registryBatch(spark, space, m, i)), -1L)
-      val dataMf = cat.partitionManifest(table)
-      val parents = dataMf.keysIterator
-        .filter(p => isBucketedPart(p) && partModIdx(p, b) == ((m, i)))
-        .toSeq
-      if (parents.nonEmpty) {
-        val rows = cat.readManifestParts(table, dataMf,
-          storedSchema(idCol, sourceCol, textCol), parents)
-        commitDataParts(cat, table, rows, idCol, sourceCol, b.toInt,
-          splits1, parents)
-      }
-      ()
-    } else {
-      val parents = subParts(idxManifest, space)
-        .filter(p => partModIdx(p, b) == ((m, i)))
-      val (schema, keyCol, sortKey) = space match {
-        case SpGrams => (gramIndexSchema(idCol, sourceCol), "h1", "h1")
-        case SpDocs => (docsIndexSchema(idCol, sourceCol), idCol, idCol)
-        case _ => (hashIndexSchema(idCol, sourceCol), "th", "th")
-      }
-      val content = cat.readManifestParts(indexTable(table), idxManifest,
-          schema, parents, space)
-        .withColumn("_graft_part",
-          concat(route(col(keyCol)), lit("#"), col(sourceCol)))
-        .repartition(col("_graft_part"))
-        .sortWithinPartitions(col("_graft_part"), col(sortKey))
-      cat.overwriteGroupIf(indexTable(table),
-        Seq(GroupBatch(space, content, "_graft_part", parents.distinct),
-          registryBatch(spark, space, m, i)), -1L)
-      ()
-    }
-  }
-
-  /** Grow the bucket geometry in place — the incremental replacement for
-    * "rebuildIndexes re-buckets as the store grows" (r16 verdict item 1):
-    * measure each leaf bucket's TOTAL bytes across sources (filesystem
-    * metadata only) and [[splitBucket]] any bucket over `targetBytes`,
-    * repeating on children still oversized. Per split, I/O is the one
-    * bucket's rows (~targetBytes) — the store NEVER sees a full rewrite.
-    * `candidates` restricts the measurement to the named partitions per
-    * space (ingestBatch passes its own touched sets, so the steady-state
-    * check is O(batch)); None measures every bucket (the one-off
-    * maintenance sweep). Returns the number of splits performed.
-    *
-    * Sizing rule (the r16 soak lesson, measured): pick `targetBytes` for
-    * bucket BYTES a probe should read per matched key — not for a
-    * row-count ratio. Too-small targets multiply per-commit file and
-    * listing overhead; the local soaks put the crossover where a batch's
-    * chains name <~10% of leaves.
-    */
-  def maintainBuckets(cat: Catalog, table: String, idCol: String,
-      textCol: String, sourceCol: String, targetBytes: Long,
-      candidates: Option[Map[String, Seq[String]]] = None): Int = {
-    val spark = cat.spark
-    val (_, idxManifest0) = cat.snapshot(indexTable(table))
-    val pins = confPins(cat, table, idxManifest0)
-    if (pins.isEmpty || pins.get._3.isEmpty) return 0
-    val b = pins.get._3.get
-    requireDataLayout(cat, table)
-    val maxM = maxModulus(spark, b)
-    // oversized (space, m, i) groups among a restriction of each space's
-    // partitions (None = every partition of the space)
-    def oversized(restrict: Option[Map[String, Seq[String]]])
-        : Seq[(String, Long, Long)] = {
-      val (_, imf) = cat.snapshot(indexTable(table))
-      val dmf = cat.partitionManifest(table)
-      Seq(SpData, SpDocs, SpGrams, SpHashes).flatMap { space =>
-        val all =
-          if (space == SpData) dmf.keys.toSeq.filter(isBucketedPart)
-          else subParts(imf, space)
-        val parts = restrict match {
-          case Some(c) =>
-            val want = c.getOrElse(space, Seq.empty).toSet
-            all.filter(want.contains)
-          case None => all
-        }
-        val bytes =
-          if (space == SpData) cat.partitionBytes(table, dmf, parts)
-          else cat.partitionBytes(indexTable(table), imf, parts, space)
-        bytes.toSeq.groupBy { case (p, _) => partModIdx(p, b) }
-          .map { case (mi, ps) => (mi, ps.map(_._2).sum) }
-          .collect { case ((m, i), sz)
-              if sz > targetBytes && 2 * m <= maxM =>
-            (space, m, i)
-          }.toSeq
-      }.distinct
-    }
-    var n = 0
-    var work = oversized(candidates)
-    while (work.nonEmpty) {
-      work.foreach { case (space, m, i) =>
-        splitBucket(cat, table, space, m, i, idCol, textCol, sourceCol)
-        n += 1
-      }
-      // re-measure ONLY the fresh children of this round's splits
-      val nodesBySpace = work.groupBy(_._1)
-        .map { case (sp, ws) => sp -> ws.map(w => (w._2, w._3)).toSet }
-      val childCand: Map[String, Seq[String]] = {
-        val (_, imf) = cat.snapshot(indexTable(table))
-        val dmf = cat.partitionManifest(table)
-        nodesBySpace.map { case (space, nodes) =>
-          def isChild(p: String): Boolean = {
-            val (m2, i2) = partModIdx(p, b)
-            m2 > b && nodes.contains((m2 / 2, i2 % (m2 / 2)))
-          }
-          val all =
-            if (space == SpData) dmf.keys.toSeq.filter(isBucketedPart)
-            else subParts(imf, space)
-          space -> all.filter(isChild)
-        }
-      }
-      work = oversized(Some(childCand))
-    }
-    n
+    def labelled(labels: Set[String]) = (p: String) => labels(partLabel(p))
+    Map(SpData -> footprint(table, dmf, "", stats.getSeq[String](0).toSet),
+      SpDocs -> footprint(idx, imf, SpDocs,
+        labelled(stats.getSeq[String](1).toSet)),
+      SpHashes -> footprint(idx, imf, SpHashes,
+        labelled(stats.getSeq[String](2).toSet)),
+      SpGrams -> footprint(idx, imf, SpGrams, labelled(gramLabels)))
   }
 }

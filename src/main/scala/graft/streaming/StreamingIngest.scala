@@ -996,25 +996,21 @@ object StreamingIngest {
     * in production so batch ids survive restarts — a fresh query without
     * a checkpoint restarts ids at 0, which the high-water mark would
     * treat as replays of an old run; use a fresh table (or checkpoint)
-    * per logical stream. Expects (idCol, sourceCol, textCol) rows.
-    * `targetBucketBytes` > 0 turns on in-place bucket splitting after
-    * each commit ([[graft.storage.CorpusStore.maintainBuckets]]), so a
-    * long-lived stream's store grows its geometry one leaf at a time
-    * instead of ever needing a full re-bucket rewrite.
+    * per logical stream. Expects (idCol, sourceCol, textCol) rows. The
+    * store's bucket layout grows with its bytes inside the commits
+    * themselves, so a long-lived stream needs no maintenance pass.
     */
   def streamIntoCorpusStore(records: DataFrame,
       cat: graft.storage.Catalog, table: String, idCol: String,
       textCol: String, sourceCol: String, minWords: Int = 50,
       minDocs: Int = 2, winnowW: Int = 8, buckets: Int = 0,
-      checkpointDir: Option[String] = None,
-      targetBucketBytes: Long = 0L)
+      checkpointDir: Option[String] = None)
       : org.apache.spark.sql.streaming.StreamingQuery = {
     val base = records.writeStream
       .outputMode(OutputMode.Append())
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         graft.storage.CorpusStore.ingestBatch(cat, table, batch, batchId,
-          idCol, textCol, sourceCol, minWords, minDocs, winnowW, buckets,
-          targetBucketBytes)
+          idCol, textCol, sourceCol, minWords, minDocs, winnowW, buckets)
         ()
       }
     checkpointDir.fold(base)(d => base.option("checkpointLocation", d)).start()

@@ -19,24 +19,11 @@ import org.apache.spark.sql.functions._
   * the bucket count sized to the store, per-batch probe I/O is O(batch
   * keys × bucket size), not O(store index). This tool puts a NUMBER on
   * that so the store-size slope is observed, not inferred — run it on
-  * the 10× and 100× wordsalt dirs and compare (scale `buckets` with the
-  * store to model the fixed-bucket-bytes deployment policy).
-  *
-  * With a 5th arg `targetBucketBytes` > 0, the run continues into the
-  * r17 GEOMETRY experiment (r16 verdict items 1+2): measure each probe's
-  * exact byte footprint at the flat layout ([[graft.storage.CorpusStore
-  * .probeFootprint]] — named vs total partition bytes, for the soak
-  * batch AND a single-doc batch), grow the store's bucket trie in place
-  * with `maintainBuckets` (every split rewrites ONE bucket), re-measure
-  * both footprints, and time one more dup-probing ingest on the split
-  * geometry. The pruning win is read off `bytesNamed/bytesTotal` before
-  * vs after — and its regime is explicit: pruning pays once a batch's
-  * keys name fewer leaves than exist (single-doc probes), while a batch
-  * with more keys than leaves reads ~everything at either geometry (the
-  * O(batch keys × bucket bytes) bound's other side).
+  * the 10× and 100× wordsalt dirs and compare (`buckets` is the floor of
+  * the store's moduli, which grow with its bytes).
   *
   * Usage: runMain graft.tools.CorpusStoreBench [sfDir] [batchSize]
-  *   [winnowW] [buckets] [targetBucketBytes]
+  *   [winnowW] [buckets]
   */
 object CorpusStoreBench {
   def main(args: Array[String]): Unit = {
@@ -44,7 +31,6 @@ object CorpusStoreBench {
     val batchSize = args.lift(1).map(_.toInt).getOrElse(200)
     val winnowW = args.lift(2).map(_.toInt).getOrElse(8)
     val buckets = args.lift(3).map(_.toInt).getOrElse(16)
-    val targetBytes = args.lift(4).map(_.toLong).getOrElse(0L)
     val loadBefore = graft.Bench.loadavgJson()
     val spark = graft.Bench.benchSession("graft-corpus-store-bench")
     spark.sparkContext.setLogLevel("ERROR")
@@ -143,49 +129,6 @@ object CorpusStoreBench {
     val gramRows = cat.readGroupOr("c__idx", idxManifest, "grams",
       graft.storage.CorpusStore.gramIndexSchema("doc_id", "source")).count()
 
-    // ---- geometry experiment (targetBucketBytes > 0) ----
-    val one = dup.limit(1)
-      .select((col("doc_id") + 30000000L).as("doc_id"),
-        lit("soak_one").as("source"), col("text"))
-      .persist()
-    def fp(batch: org.apache.spark.sql.DataFrame): String = {
-      val m = graft.storage.CorpusStore.probeFootprint(cat, "c", batch,
-        "doc_id", "text", "source", 50, winnowW, buckets)
-      m.toSeq.sortBy(_._1).map { case (sp, (pn, bn, pt, bt)) =>
-        s""""$sp":{"parts_named":$pn,"bytes_named":$bn,""" +
-          s""""parts_total":$pt,"bytes_total":$bt}"""
-      }.mkString("{", ",", "}")
-    }
-    val geomJson = if (targetBytes <= 0L) "" else {
-      one.count()
-      val fpFlatBatch = fp(dup)
-      val fpFlatOne = fp(one)
-      var nSplits = 0
-      val tSplit = time {
-        nSplits = graft.storage.CorpusStore.maintainBuckets(cat, "c",
-          "doc_id", "text", "source", targetBytes)
-      }
-      val fpSplitBatch = fp(dup)
-      val fpSplitOne = fp(one)
-      // one more dup-probing ingest ON the split geometry: correctness +
-      // wall with the trie in play (unique prefixes again, new source)
-      val dup2 = dup.select((col("doc_id") + 40000000L).as("doc_id"),
-        lit("soak_dup2").as("source"),
-        concat(lit("zr"), col("doc_id").cast("string"), lit("a zr"),
-          col("doc_id").cast("string"), lit("b "), col("text")).as("text"))
-        .persist()
-      dup2.count()
-      val tDup2 = time {
-        graft.storage.CorpusStore.ingestBatch(cat, "c", dup2, 3L,
-          "doc_id", "text", "source", winnowW = winnowW, buckets = buckets,
-          targetBucketBytes = targetBytes)
-      }
-      f""","geometry":{"target_bucket_bytes":$targetBytes,""" +
-        f""""n_splits":$nSplits,"split_sweep_sec":$tSplit%.2f,""" +
-        f""""ingest_dup_split_sec":$tDup2%.2f,""" +
-        s""""flat_batch":$fpFlatBatch,"flat_one":$fpFlatOne,""" +
-        s""""split_batch":$fpSplitBatch,"split_one":$fpSplitOne}"""
-    }
     println(f"""{"metric":"corpus_store_soak","store_sec":$tStore%.2f,""" +
       f""""n_stored":$nStored,"gram_index_rows":$gramRows,""" +
       f""""winnow_w":$winnowW,"buckets":$buckets,""" +
@@ -193,7 +136,7 @@ object CorpusStoreBench {
       f""""ingest_fresh_sec":$tFresh%.2f,"ingest_hot_sec":$tHot%.2f,""" +
       f""""ingest_dup_jobs":$dupJobs,"ingest_fresh_jobs":$freshJobs,""" +
       f""""ingest_hot_jobs":$hotJobs,""" +
-      f""""sf":"$dir"""" + geomJson +
+      f""""sf":"$dir"""" +
       graft.Bench.sentinelJson(spark, loadBefore) + "}")
     spark.stop()
   }

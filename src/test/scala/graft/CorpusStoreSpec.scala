@@ -103,7 +103,7 @@ class CorpusStoreSpec extends AnyFunSuite {
     CorpusStore.writeDeduped(cat, "c", docs, "doc_id", "text", "source",
       minWords = 5, winnowW = 1)
     val parts = cat.partitionManifest("c").keySet
-    assert(parts == Set("00000#web", "00000#books"), parts.toString)
+    assert(parts == Set("1.0#web", "1.0#books"), parts.toString)
     // AUTO ingest adopts the pinned b = 1 (no caller geometry knowledge);
     // an explicit mismatching value is still refused
     val b = Seq((9L, "wiki", s"qq rr $passage ss tt uu vv"))
@@ -113,7 +113,7 @@ class CorpusStoreSpec extends AnyFunSuite {
     val nine = cat.readPartitionedOr("c", storedSchema).collect()
       .find(_.getLong(0) == 9L).get
     assert(nine.getString(2) == "qq rr ss tt uu vv", nine.toString)
-    assert(cat.partitionManifest("c").keySet.contains("00000#wiki"))
+    assert(cat.partitionManifest("c").keySet.contains("1.0#wiki"))
     val e = intercept[IllegalArgumentException] {
       CorpusStore.ingestBatch(cat, "c",
         Seq((10L, "wiki", "more words arriving"))
@@ -199,14 +199,14 @@ class CorpusStoreSpec extends AnyFunSuite {
     // doc 1's text REPLACED (same source) — its old grams are rebuilt out
     // of the index by the commit, but simulate a crashed index commit by
     // rewriting the data table directly (in its bucketed part — doc 1 at
-    // 16 buckets lands in 00001#web) and leaving the index stale
+    // 16 buckets lands in 16.1#web) and leaving the index stale
     val newText = "fresh content with no trace of that old passage text"
     val replaced = Seq((1L, "web", newText, 10L, 10L, 0L))
       .toDF("doc_id", "source", "text", "n_tokens_before",
         "n_tokens_after", "n_spans_removed")
-      .withColumn("_graft_part", lit("00001#web"))
+      .withColumn("_graft_part", lit("16.1#web"))
     cat.overwritePartitions("c", replaced, "_graft_part",
-      Seq("00001#web"))
+      Seq("16.1#web"))
     // a 'wiki' batch duplicating the OLD (gone) passage: the stale gram
     // index still lists it under doc 1, but confirmation re-grams doc 1's
     // CURRENT text and finds nothing — the batch doc must pass through
@@ -352,14 +352,16 @@ class CorpusStoreSpec extends AnyFunSuite {
       .toDF("doc_id", "source", "text")
     CorpusStore.writeDeduped(cat, "c", stored, "doc_id", "text", "source",
       minWords = 5, winnowW = 3, buckets = 4)
-    // index partitions carry the bucket#source layout with bucket < b
+    // index partitions carry the <b>.<bucket>#source layout with bucket < b
     val (_, mf) = cat.snapshot("c__idx")
     val gramParts = mf.keys.filter(_.startsWith("grams/"))
       .map(_.stripPrefix("grams/")).toSeq
     assert(gramParts.nonEmpty)
     assert(gramParts.forall { p =>
       val i = p.indexOf('#')
-      i > 0 && p.take(i).forall(_.isDigit) && p.take(i).toLong < 4L &&
+      val bucket = p.take(i).stripPrefix("4.")
+      i > 0 && p.startsWith("4.") && bucket.nonEmpty &&
+        bucket.forall(_.isDigit) && bucket.toLong < 4L &&
         Set("web", "books").contains(p.drop(i + 1))
     }, gramParts.toString)
     // batch from a NEW source duplicating the stored internal span: only
@@ -430,7 +432,7 @@ class CorpusStoreSpec extends AnyFunSuite {
       (2L, "web", s"one two three $passage four five six seven"))
       .toDF("doc_id", "source", "text")
     // explicit buckets = 16: the stale-entry rewrite below names
-    // 00001#web directly (see the confirmation test's geometry note)
+    // 16.1#web directly (see the confirmation test's geometry note)
     CorpusStore.ingestBatch(cat, "c", b0, 0L, "doc_id", "text", "source",
       minWords = 5, winnowW = 1, buckets = 16)
     // a new-source batch: doc 9 exactly duplicates the SHORT stored doc
@@ -453,9 +455,9 @@ class CorpusStoreSpec extends AnyFunSuite {
     val replacedRow = Seq((1L, "web", "now something else", 3L, 3L, 0L))
       .toDF("doc_id", "source", "text", "n_tokens_before",
         "n_tokens_after", "n_spans_removed")
-      .withColumn("_graft_part", lit("00001#web"))
+      .withColumn("_graft_part", lit("16.1#web"))
     cat.overwritePartitions("c", replacedRow, "_graft_part",
-      Seq("00001#web"))
+      Seq("16.1#web"))
     val b2 = Seq((12L, "wiki", "tiny doc"))
       .toDF("doc_id", "source", "text")
     CorpusStore.ingestBatch(cat, "c", b2, 2L, "doc_id", "text", "source",
@@ -482,8 +484,8 @@ class CorpusStoreSpec extends AnyFunSuite {
     CorpusStore.ingestBatch(cat, "c", b1, 1L, "doc_id", "text", "source",
       minWords = 5, winnowW = 1, buckets = 4)
     val after = cat.partitionManifest("c")
-    assert(after("00001#web") == before("00001#web") + 1)
-    (before.keySet - "00001#web").foreach { p =>
+    assert(after("4.1#web") == before("4.1#web") + 1)
+    (before.keySet - "4.1#web").foreach { p =>
       assert(after(p) == before(p), s"clean bucket $p was rewritten")
     }
     // and the replaced doc really was replaced
@@ -523,154 +525,6 @@ class CorpusStoreSpec extends AnyFunSuite {
     assert(nine.getString(2) == "qq rr ss tt uu vv", nine.toString)
   }
 
-  test("splitBucket: one bucket splits in place across all spaces, content " +
-      "identical, probes and upserts keep working across the split") {
-    import spark.implicits._
-    val cat = fresh()
-    val b0 = (1L to 8L).map(i => (i, "web",
-        if (i == 1L) s"one two $passage three four"
-        else s"document number $i has its own distinct words w${i}a w${i}b"))
-      .toDF("doc_id", "source", "text")
-    CorpusStore.ingestBatch(cat, "c", b0, 0L, "doc_id", "text", "source",
-      minWords = 5, winnowW = 1, buckets = 4)
-    val before = cat.readPartitionedOr("c", storedSchema)
-      .collect().map(_.toSeq).toSet
-    // split data bucket (4, 1) — ids 1 and 5 — and one bucket of every
-    // index space (the probes below must route across the splits)
-    CorpusStore.splitBucket(cat, "c", "data", 4L, 1L, "doc_id", "text",
-      "source")
-    (0L to 3L).foreach { i =>
-      CorpusStore.splitBucket(cat, "c", "grams", 4L, i, "doc_id", "text",
-        "source")
-      CorpusStore.splitBucket(cat, "c", "hashes", 4L, i, "doc_id", "text",
-        "source")
-    }
-    CorpusStore.splitBucket(cat, "c", "docs", 4L, 1L, "doc_id", "text",
-      "source")
-    // layout: the split data bucket's parent is gone, children carry the
-    // <m>.<i> shape; the registry keys are manifest part keys
-    val dataParts = cat.partitionManifest("c").keySet
-    assert(!dataParts.contains("00001#web"), dataParts.toString)
-    assert(dataParts.contains("8.1#web") || dataParts.contains("8.5#web"),
-      dataParts.toString)
-    val (_, imf) = cat.snapshot("c__idx")
-    assert(imf.contains("splits/data.4.1"), imf.keySet.toString)
-    assert(imf.contains("splits/grams.4.0"), imf.keySet.toString)
-    // content byte-identical after every split
-    assert(cat.readPartitionedOr("c", storedSchema)
-      .collect().map(_.toSeq).toSet == before)
-    // gram probe across the split: a new-source dup of doc 1's passage
-    // (its grams now live in split leaves) must still be caught
-    val b1 = Seq(
-      (19L, "wiki", s"qq rr $passage ss tt"),
-      // and a whole-doc exact dup (hash index, split leaves) must drop
-      (20L, "wiki", s"one two $passage three four"))
-      .toDF("doc_id", "source", "text")
-    CorpusStore.ingestBatch(cat, "c", b1, 1L, "doc_id", "text", "source",
-      minWords = 5, winnowW = 1, buckets = 4)
-    val rows = cat.readPartitionedOr("c", storedSchema).collect()
-      .map(r => r.getLong(0) -> (r.getString(1), r.getString(2))).toMap
-    assert(rows(19L)._2 == "qq rr ss tt", rows.toString)
-    assert(!rows.contains(20L), rows.keySet.toString)
-    // same-id upsert INTO a split data bucket (id 5 → leaf 8.5) + the
-    // docs-index conflict path across its split (id 1 moves source)
-    val b2 = Seq(
-      (5L, "web", "replacement text for doc five right here"),
-      (1L, "wiki", "doc one moved to wiki with brand new words"))
-      .toDF("doc_id", "source", "text")
-    CorpusStore.ingestBatch(cat, "c", b2, 2L, "doc_id", "text", "source",
-      minWords = 5, winnowW = 1, buckets = 4)
-    val after = cat.readPartitionedOr("c", storedSchema).collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getString(2)))
-    assert(after.count(_._1 == 1L) == 1, after.toString)
-    assert(after.find(_._1 == 1L).get._2 == "wiki")
-    assert(after.find(_._1 == 5L).get._3 ==
-      "replacement text for doc five right here")
-  }
-
-  test("maintainBuckets: oversized buckets split automatically during " +
-      "ingest, untouched buckets keep their files") {
-    import spark.implicits._
-    spark.conf.set("spark.graft.store.maxBucketFactor", "4")
-    try {
-      val cat = fresh()
-      val b0 = (1L to 16L).map(i => (i, "web",
-          s"document number $i has its own distinct words w${i}a w${i}b"))
-        .toDF("doc_id", "source", "text")
-      // targetBytes=1: every non-empty bucket is oversized; the factor-4
-      // cap stops the trie at modulus 16
-      CorpusStore.ingestBatch(cat, "c", b0, 0L, "doc_id", "text", "source",
-        minWords = 5, winnowW = 1, buckets = 4, targetBucketBytes = 1L)
-      val (_, imf) = cat.snapshot("c__idx")
-      val splitKeys = imf.keySet.filter(_.startsWith("splits/"))
-      assert(splitKeys.exists(_.startsWith("splits/data.4.")),
-        splitKeys.toString)
-      assert(splitKeys.exists(_.startsWith("splits/data.8.")),
-        "expected a second-level split under the factor-4 cap: " +
-          splitKeys.toString)
-      assert(!splitKeys.exists(_.startsWith("splits/data.16.")),
-        "the max-depth cap must hold: " + splitKeys.toString)
-      // content survives the whole cascade
-      val rows = cat.readPartitionedOr("c", storedSchema).collect()
-        .map(r => r.getLong(0) -> r.getString(2)).toMap
-      assert(rows.keySet == (1L to 16L).toSet, rows.keySet.toString)
-      // steady state: a later one-doc batch touches only its own chain —
-      // leaf parts of other ids keep their data versions
-      val before = cat.partitionManifest("c")
-      val b1 = Seq((5L, "web", "replacement text for doc five right here"))
-        .toDF("doc_id", "source", "text")
-      CorpusStore.ingestBatch(cat, "c", b1, 1L, "doc_id", "text", "source",
-        minWords = 5, winnowW = 1, buckets = 4, targetBucketBytes = 1L)
-      val after = cat.partitionManifest("c")
-      // id 5's chain: (4,1) → (8,5) → (16,5); every OTHER residue-class
-      // leaf is untouched
-      val chain5 = Set("00001#web", "8.5#web", "16.5#web")
-      (before.keySet -- chain5).foreach { p =>
-        assert(after.get(p) == before.get(p),
-          s"clean bucket $p was rewritten")
-      }
-      assert(cat.readPartitionedOr("c", storedSchema).collect()
-        .find(_.getLong(0) == 5L).get.getString(2) ==
-        "replacement text for doc five right here")
-    } finally spark.conf.unset("spark.graft.store.maxBucketFactor")
-  }
-
-  test("a half-split data bucket (registry committed, rewrite crashed) " +
-      "heals on the next touching ingest") {
-    import spark.implicits._
-    import graft.storage.GroupBatch
-    val cat = fresh()
-    val b0 = (1L to 8L).map(i => (i, "web",
-        s"document number $i has its own distinct words w${i}a w${i}b"))
-      .toDF("doc_id", "source", "text")
-    CorpusStore.ingestBatch(cat, "c", b0, 0L, "doc_id", "text", "source",
-      minWords = 5, winnowW = 1, buckets = 4)
-    // simulate the data-split crash window: the registry key lands in the
-    // index group but the bucket rewrite never ran — parent 00001#web
-    // still physically holds ids 1 and 5
-    val reg = Seq(("data", 4L, 1L, "data.4.1"))
-      .toDF("space", "m", "i", "_graft_part")
-    cat.overwriteGroupIf("c__idx",
-      Seq(GroupBatch("splits", reg, "_graft_part", Seq("data.4.1"))), -1L)
-    // a batch replacing id 5 routes to leaf 8.5 — but id 1's surviving
-    // row sits in the ancestor, which the chain match must pull into the
-    // dirty set, re-route, and empty out
-    val b1 = Seq((5L, "web", "replacement text for doc five right here"))
-      .toDF("doc_id", "source", "text")
-    CorpusStore.ingestBatch(cat, "c", b1, 1L, "doc_id", "text", "source",
-      minWords = 5, winnowW = 1, buckets = 4)
-    val parts = cat.partitionManifest("c").keySet
-    assert(!parts.contains("00001#web"),
-      s"ancestor must empty into the leaves: $parts")
-    assert(parts.contains("8.1#web") && parts.contains("8.5#web"),
-      parts.toString)
-    val rows = cat.readPartitionedOr("c", storedSchema).collect()
-      .map(r => r.getLong(0) -> r.getString(2)).toMap
-    assert(rows.keySet == (1L to 8L).toSet, rows.keySet.toString)
-    assert(rows(5L) == "replacement text for doc five right here")
-    assert(rows(1L).startsWith("document number 1"), rows(1L))
-  }
-
   test("high-water mark: manifest-encoded, replays skipped, one key per " +
       "batch") {
     import spark.implicits._
@@ -695,43 +549,161 @@ class CorpusStoreSpec extends AnyFunSuite {
       keys.toString)
   }
 
-  test("probeFootprint: route-chain pruning names a strict subset of the " +
-      "index partitions for a small batch, before and after splits") {
-    import spark.implicits._
-    val cat = fresh()
+  /** a catalog whose session targets `bytes` per bucket, so its store
+    * outgrows its moduli within a few commits
+    */
+  private def tinyCatalog(bytes: Long): Catalog = {
+    val tiny = spark.newSession()
+    tiny.conf.set("spark.graft.store.baseBucketBytes", bytes.toString)
+    new Catalog(tiny, Files.createTempDirectory("graft-corpus").toString,
+      "t")
+  }
+
+  /** the moduli the labels `<m>.<i>#source` of table "c" carry: (data
+    * table, index group across its grams/docs/hashes subs)
+    */
+  private def moduli(cat: Catalog): (Set[Int], Set[Int]) = {
+    def ms(labels: Iterable[String]) =
+      labels.map(_.takeWhile(_ != '.').toInt).toSet
+    val idx = cat.snapshot("c__idx")._2.keys
+      .filter(k => Seq("grams/", "docs/", "hashes/").exists(k.startsWith))
+      .map(k => k.drop(k.indexOf('/') + 1))
+    (ms(cat.partitionManifest("c").keys), ms(idx))
+  }
+
+  test("probeFootprint: a small batch names a strict subset of the grown " +
+      "buckets") {
+    val cat = tinyCatalog(1024)
+    val tiny = cat.spark
+    import tiny.implicits._
     val b0 = (1L to 16L).map(i => (i, "web",
         s"document number $i has its own distinct words w${i}a w${i}b"))
       .toDF("doc_id", "source", "text")
+    // the first commit finds no bytes yet: both tables start at the floor
     CorpusStore.ingestBatch(cat, "c", b0, 0L, "doc_id", "text", "source",
       minWords = 5, winnowW = 1, buckets = 8)
+    assert(moduli(cat) == ((Set(8), Set(8))))
     val one = Seq((99L, "wiki", "a tiny probe document with nine words"))
       .toDF("doc_id", "source", "text")
-    def check(): Unit = {
-      val fp = CorpusStore.probeFootprint(cat, "c", one, "doc_id", "text",
-        "source", 5, 1, 8)
-      val (dn, db, dt, dbt) = fp("docs")
-      assert(dn == 1L && dt == 8L, fp.toString) // 1 id → 1 of 8 buckets
-      assert(db > 0L && db < dbt, fp.toString)
-      val (hn, _, ht, _) = fp("hashes")
-      assert(hn == 1L && ht == 8L, fp.toString) // 1 text hash
-      val (gn, _, gt, _) = fp("grams")
-      // a 9-token doc has ≤5 5-gram positions → at most 5 of 8 buckets
-      assert(gn <= 5L && gn < gt, fp.toString)
-    }
-    check()
-    // after splitting every docs/hashes bucket the totals double but the
-    // batch still names one leaf per key — the named fraction HALVES
-    (0L to 7L).foreach { i =>
-      CorpusStore.splitBucket(cat, "c", "docs", 8L, i, "doc_id", "text",
-        "source")
-      CorpusStore.splitBucket(cat, "c", "hashes", 8L, i, "doc_id", "text",
-        "source")
-    }
-    val fp2 = CorpusStore.probeFootprint(cat, "c", one, "doc_id", "text",
+    def fp() = CorpusStore.probeFootprint(cat, "c", one, "doc_id", "text",
       "source", 5, 1, 8)
+    val fp1 = fp()
+    val (dn, db, dt, dbt) = fp1("docs")
+    assert(dn == 1L && dt == 8L, fp1.toString) // 1 id → 1 of 8 buckets
+    assert(db > 0L && db < dbt, fp1.toString)
+    val (hn, _, ht, _) = fp1("hashes")
+    assert(hn == 1L && ht == 8L, fp1.toString) // 1 text hash
+    val (gn, _, gt, _) = fp1("grams")
+    // a 9-token doc has ≤5 5-gram positions → at most 5 of 8 buckets
+    assert(gn <= 5L && gn < gt, fp1.toString)
+    // the next commit finds both tables past 8 buckets of 1 KiB: each
+    // grows, and every bucket is rewritten at the larger modulus
+    CorpusStore.ingestBatch(cat, "c",
+      Seq((17L, "web", "one more document with its own distinct words"))
+        .toDF("doc_id", "source", "text"),
+      1L, "doc_id", "text", "source", minWords = 5, winnowW = 1, buckets = 8)
+    val (dms, ims) = moduli(cat)
+    assert(dms.size == 1 && dms.head > 8 && ims.size == 1 && ims.head > 8,
+      (dms, ims).toString)
+    // the totals grow with the modulus while the batch still names one
+    // bucket per key
+    val fp2 = fp()
     val (dn2, _, dt2, _) = fp2("docs")
-    assert(dt2 == 16L, fp2.toString)
-    assert(dn2 <= 2L, fp2.toString) // leaf + (empty) ancestor at most
+    assert(dn2 <= 1L && dt2 > 8L, fp2.toString)
+    val (hn2, _, ht2, _) = fp2("hashes")
+    assert(hn2 <= 1L && ht2 > 8L, fp2.toString)
+    val (gn2, _, gt2, _) = fp2("grams")
+    assert(gn2 <= 5L && gn2 < gt2, fp2.toString)
+  }
+
+  test("both moduli grow with the store's bytes; contents match the " +
+      "default layout") {
+    // the same commits go to a store at a tiny bucket target and one at
+    // the default target (one bucket throughout): the stored rows and a
+    // snapshot diff must agree
+    val grown = tinyCatalog(8192)
+    val plain = fresh()
+    val rnd = new scala.util.Random(11)
+    def words(n: Int) = Seq.fill(n)("w" + rnd.nextInt(5000)).mkString(" ")
+    val stored = scala.collection.mutable.ArrayBuffer.empty[(Long, String, String)]
+    // batch i: 12 new docs over 3 sources, then (from the second batch)
+    // a doc repeating a stored doc's passage, a normalized exact dup of
+    // a stored doc, and a stored doc re-ingested under another source
+    def batch(i: Int): Seq[(Long, String, String)] = {
+      val news = (0 until 12).map(j =>
+        ((i * 100 + j).toLong, s"s${j % 3}", words(30)))
+      val extra = if (stored.isEmpty) Nil else {
+        def pick() = stored(rnd.nextInt(stored.size))
+        val (_, _, t1) = pick()
+        val (_, _, t2) = pick()
+        val (id3, src3, _) = pick()
+        Seq(((i * 100 + 50).toLong, "s1",
+            s"zz ${t1.split(' ').slice(5, 15).mkString(" ")} yy"),
+          ((i * 100 + 51).toLong, "s2", t2.toUpperCase),
+          (id3, if (src3 == "s0") "s1" else "s0", words(30)))
+      }
+      stored ++= news
+      news ++ extra
+    }
+    def frame(cat: Catalog, rows: Seq[(Long, String, String)]) = {
+      val session = cat.spark
+      import session.implicits._
+      rows.toDF("doc_id", "source", "text")
+    }
+    val dataSeen = scala.collection.mutable.ArrayBuffer(1)
+    val idxSeen = scala.collection.mutable.ArrayBuffer(1)
+    def commit(rows: Seq[(Long, String, String)],
+        write: (Catalog, org.apache.spark.sql.DataFrame) => Long): Unit = {
+      Seq(grown, plain).foreach(c => write(c, frame(c, rows)))
+      val (dms, ims) = moduli(grown)
+      assert(dms.size == 1 && ims.size == 1,
+        s"each manifest carries only one modulus's labels: $dms, $ims")
+      if (dms.head != dataSeen.last) dataSeen += dms.head
+      if (ims.head != idxSeen.last) idxSeen += ims.head
+      assert(moduli(plain) == ((Set(1), Set(1))))
+    }
+    commit(batch(0), (c, df) => CorpusStore.writeDeduped(c, "c", df,
+      "doc_id", "text", "source", minWords = 5, winnowW = 1, buckets = 1))
+    var i = 0
+    def step(): Unit = {
+      i += 1
+      // every third commit re-stores one new source in full (the
+      // writeDeduped path, which leaves the other sources' rows as they
+      // are unless it grows the modulus)
+      if (i % 3 == 0)
+        commit(batch(i).take(12).map(r => (r._1, s"full$i", r._3)), (c, df) =>
+          CorpusStore.writeDeduped(c, "c", df, "doc_id", "text", "source",
+            minWords = 5, winnowW = 1, buckets = 1))
+      else
+        commit(batch(i), (c, df) => CorpusStore.ingestBatch(c, "c", df, i,
+          "doc_id", "text", "source", minWords = 5, winnowW = 1,
+          buckets = 1))
+    }
+    while ((dataSeen.last < 4 || idxSeen.last < 4) && i < 12) step()
+    assert(dataSeen.last >= 4 && idxSeen.last >= 4,
+      s"both moduli doubled at least twice: $dataSeen, $idxSeen")
+    step() // one more commit on the grown layout
+    Seq(dataSeen, idxSeen).foreach { seen =>
+      assert(seen.toSeq.sliding(2).forall(w => w(1) > w(0) && w(1) % w(0) == 0),
+        s"a modulus only grows, by powers of two: $seen")
+    }
+    def rows(c: Catalog) = c.readPartitionedOr("c", storedSchema).collect()
+      .map(_.toSeq).toSet
+    assert(rows(grown).size > 40 && rows(grown) == rows(plain),
+      s"$i commits, moduli $dataSeen, $idxSeen")
+    val v = grown.version("c")
+    assert(plain.version("c") == v)
+    def diff(c: Catalog) = CorpusStore.diffVersions(c, "c", v - 1, v,
+      "doc_id", "source", "text").collect().map(_.toSeq).toSet
+    assert(diff(grown) == diff(plain))
+    // the grown store still prunes: a one-doc batch names one bucket of
+    // each index sub and at most one data partition
+    val fp = CorpusStore.probeFootprint(grown, "c",
+      frame(grown, Seq((9999L, "s0", words(30)))), "doc_id", "text",
+      "source", 5, 1, 1)
+    fp.foreach { case (space, (named, _, total, _)) =>
+      assert(named < total && total > 1L, s"$space: $fp")
+    }
   }
 
   test("ingestBatch drops null-id/source rows instead of wedging the " +

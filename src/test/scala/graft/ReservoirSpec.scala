@@ -443,6 +443,39 @@ class ReservoirSpec extends AnyFunSuite {
     assert(atBucketsOf >= 1 && atBucketsOf <= 2, jobs.mkString("\n"))
   }
 
+  test("a staging write's job label does not outlive the staging write") {
+    val r = freshReservoir()
+    r.ingest(batchDf(rec("S1", "SRC", 1, Seq("a"))))
+    val jobs = jobsOf(r.ingest(batchDf(rec("S2", "SRC", 1, Seq("a", "b")),
+      rec("S3", "SRC2", 1, Seq("c")))))
+    val staged = jobs.filter(_._1.startsWith("stage "))
+    assert(staged.exists(_._1 == "stage records/data"), jobs.mkString("\n"))
+    // jobs after the records commit (the pool step's reads, clustering,
+    // the pool's own staging) carry no stale label
+    assert(staged.forall(_._2.contains("Catalog.")), jobs.mkString("\n"))
+    assert(jobs.dropWhile(!_._1.startsWith("stage records"))
+      .exists(j => !j._1.startsWith("stage ")), jobs.mkString("\n"))
+  }
+
+  test("no cached frame outlives an ingest, a lookup, an OAI page or a " +
+      "corpus-store ingest") {
+    import spark.implicits._
+    spark.catalog.clearCache()
+    val r = freshReservoir()
+    r.ingest(batchDf(rec("S1", "SRC", 1, Seq("a")), rec("S2", "SRC", 1, Seq("a", "b")),
+      rec("S3", "SRC2", 1, Seq("c"))))
+    val id = r.clusters("issn", "localId = S1").collect().head.getString(0)
+    r.clusterById("issn", id).collect()
+    r.listRecords("issn", limit = 1000)
+    val cat = new graft.storage.Catalog(spark,
+      Files.createTempDirectory("graft-corpus").toString, "t")
+    graft.storage.CorpusStore.ingestBatch(cat, "c",
+      Seq((1L, "web", "the quick brown fox jumps over the lazy dog"))
+        .toDF("doc_id", "source", "text"),
+      0L, "doc_id", "text", "source", minWords = 5)
+    assert(spark.sharedState.cacheManager.isEmpty)
+  }
+
   test("a pool in the former fixed-64 layout fails loudly, naming the pool") {
     import spark.implicits._
     val r = freshReservoir()
