@@ -538,8 +538,11 @@ final class Reservoir(val spark: SparkSession, root: String, tenant: String) {
     clusterDocs(pageState, recs, broadcast(pageIds.toDF("clusterId")))
   }
 
-  def clusterById(pool: String, clusterId: String): DataFrame =
-    clusters(pool, s"""clusterId = "$clusterId"""")
+  def clusterById(pool: String, clusterId: String): DataFrame = {
+    // a quoted CQL term: `\` escapes the next character, `"` ends it
+    val term = clusterId.replace("\\", "\\\\").replace("\"", "\\\"")
+    clusters(pool, s"""clusterId = "$term"""")
+  }
 
   /** POST /reservoir/clusters/touch — bump datestamps of matching clusters */
   def touch(pool: String, cqlQuery: String): Long = {
@@ -672,10 +675,13 @@ final class Reservoir(val spark: SparkSession, root: String, tenant: String) {
   /** One cluster as an OAI record (the GetRecord verb): None when the pool
     * has no such cluster (OaiService.java:352-386).
     */
-  def getOaiRecord(pool: String, clusterId: String): Option[OaiItem] =
-    loadState(pool).state.meta.filter(col("clusterId") === clusterId)
+  def getOaiRecord(pool: String, clusterId: String): Option[OaiItem] = {
+    // one snapshot for the datestamp and the members, as listRecords pins
+    val state = loadState(pool).state
+    state.meta.filter(col("clusterId") === clusterId)
       .collect().headOption.map { r =>
         mkOaiItem(clusterId, r.getTimestamp(1),
-          clusterDocMap(pool, Seq(clusterId)), withMetadata = true)
+          clusterDocMap(pool, Seq(clusterId), Some(state)), withMetadata = true)
       }
+  }
 }

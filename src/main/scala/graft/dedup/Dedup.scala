@@ -11,21 +11,23 @@ import graft.text.TextFunctions
   * path), n-gram Jaccard verification, and SimHash.
   *
   * Scale design: the only shuffles are (a) the band-bucket exchange, keyed by
-  * (band, bandHash) — O(docs × bands) rows, and (b) the candidate-pair join.
-  * Signatures are computed with higher-order functions per row (no explode of
-  * shingles across rows), so the pre-LSH stage is shuffle-free and codegen'd.
+  * the band-qualified key — O(docs × bands) rows, and (b) the candidate-pair
+  * join. Signatures come from native per-row kernels (no explode of
+  * shingles across rows), so the pre-LSH stage is shuffle-free. Every
+  * MinHash-LSH caller shingles, bands, pairs and clusters through one path:
+  * [[docShingles]], [[bandKeys]], [[candidatePairs]], [[nearDupComponents]].
   * All-pairs Jaccard is intentionally NOT the default: candidates come from
   * LSH buckets, keeping the pair count near-linear for realistic corpora.
   */
 object Dedup {
 
   // ---- single-pass scalar kernels -------------------------------------
-  // The pure-Column formulations below (minhashSignature/lshBandHashes)
-  // document the algorithm and match the SQL oracle 1:1, but Catalyst
-  // re-evaluates outer expressions inside every higher-order-function
-  // lambda (the shingle array would be rebuilt once per seed), which is a
-  // 10-100× slowdown. The hot paths therefore use these Scala kernels —
-  // one pass per row, byte-identical md5 hex output.
+  // The pure-Column formulations of the signature and the bands (the
+  // test-scope DedupHof) document the algorithm and match the SQL oracle
+  // 1:1, but Catalyst re-evaluates outer expressions inside every
+  // higher-order-function lambda (the shingle array would be rebuilt once
+  // per seed), which is a 10-100× slowdown. Every caller therefore uses
+  // these Scala kernels — one pass per row, byte-identical md5 hex output.
 
   private val md5tl = new ThreadLocal[java.security.MessageDigest] {
     override def initialValue(): java.security.MessageDigest =
@@ -34,7 +36,8 @@ object Dedup {
 
   private val hexChars = "0123456789abcdef".toCharArray
 
-  private def md5Hex(s: String): String = {
+  /** lowercase hex md5 of the UTF-8 bytes (one thread-local digest) */
+  private[graft] def md5Hex(s: String): String = {
     val d = md5tl.get()
     d.reset()
     val bytes = d.digest(s.getBytes("UTF-8"))
@@ -108,7 +111,7 @@ object Dedup {
     java.nio.ByteBuffer.wrap(d.digest(s.getBytes("UTF-8"))).getLong
   }
 
-  /** k min-hashes over a shingle set (identical to minhashSignature) */
+  /** k min-hashes over a shingle set */
   def minhashOf(shingles: Seq[String], k: Int): Seq[String] =
     minhashOfBytes(shingles.map(_.getBytes("UTF-8")).toArray, k)
 
@@ -160,7 +163,7 @@ object Dedup {
     }.mkString("[", ",\n  ", "]")
   }
 
-  /** banded hashes of a signature (identical to lshBandHashes) */
+  /** banded hashes of a signature: `"<band>:<md5 of its rows>"` */
   def bandHashesOf(sig: Seq[String], bands: Int, rows: Int): Seq[String] =
     (0 until bands).map(j =>
       j.toString + ":" + md5Hex(sig.slice(j * rows, j * rows + rows).mkString(",")))
@@ -180,6 +183,61 @@ object Dedup {
   def minhashBands(sh: Column, k: Int, bands: Int): Column =
     graft.expressions.DedupExpressions.minhashBands(sh, k, bands)
 
+  // ---- the MinHash-LSH path shared by every near-duplicate caller -----
+
+  /** The doc-shingle prelude: `(doc_id, sh, extra…)` over `df`, `sh` the
+    * distinct `shingleLen`-word shingles, documents without one dropped.
+    * The scan is spread by [[graft.operators.Parallelism.ensure]] before
+    * the per-row kernels run; `extra` columns come from the same scan and
+    * may read `textCol`.
+    */
+  private[graft] def docShingles(df: DataFrame, idCol: String,
+      textCol: String, shingleLen: Int, extra: Column*): DataFrame =
+    graft.operators.Parallelism.ensure(
+        df.select(col(idCol).as("doc_id"), col(textCol)))
+      .select(col("doc_id") +: shingles(col(textCol), shingleLen).as("sh")
+        +: extra: _*)
+      .filter(size(col("sh")) > 0)
+
+  /** `(doc_id, key)`: one row per MinHash band of a `(doc_id, sh)` frame,
+    * the key band-qualified (`"<band>:<md5>"`) */
+  private[graft] def bandKeys(docs: DataFrame, numHashes: Int,
+      bands: Int): DataFrame =
+    docs.select(col("doc_id"),
+      explode(minhashBands(col("sh"), numHashes, bands)).as("key"))
+
+  /** The candidate-pair kernel: distinct `(id1, id2)`, id1 < id2, of the
+    * documents sharing a key in a `(doc_id, key)` band frame.
+    * `maxBucketSize` drops every bucket above the cap before the
+    * self-join (see [[nearDuplicatesMinhashLsh]]); the default keeps all.
+    */
+  private[graft] def candidatePairs(banded: DataFrame,
+      maxBucketSize: Int = Int.MaxValue): DataFrame = {
+    val gated =
+      if (maxBucketSize == Int.MaxValue) banded
+      else {
+        // per-bucket counts share the self-join's key partitioning, so
+        // this adds no extra exchange of the banded frame
+        val ok = banded.groupBy("key").agg(count(lit(1)).as("_n"))
+          .filter(col("_n") <= maxBucketSize).select("key")
+        banded.join(ok, "key")
+      }
+    gated.as("x").join(gated.as("y"),
+        col("x.key") === col("y.key") && col("x.doc_id") < col("y.doc_id"))
+      .select(col("x.doc_id").as("id1"), col("y.doc_id").as("id2"))
+      .distinct()
+  }
+
+  /** Near-duplicate components of a `(doc_id, sh)` frame: the reference's
+    * record↔match-value connected components with the documents' MinHash
+    * band keys as the match values. Returns `(id, component)`.
+    */
+  private[graft] def nearDupComponents(docs: DataFrame, numHashes: Int,
+      bands: Int): DataFrame =
+    graft.cluster.Clusterize.connectedComponents(
+      bandKeys(docs, numHashes, bands).withColumnRenamed("doc_id", "id"),
+      edgesDistinct = true)
+
   /** Annotate each row with an exact-dup hash and the duplicate count. */
   def exactDuplicates(df: DataFrame, text: Column, id: Column): DataFrame = {
     val h = md5(text)
@@ -188,36 +246,6 @@ object Dedup {
       .withColumn("dup_count", count(lit(1)).over(w))
       .withColumn("keep", row_number().over(w.orderBy(id)) === 1)
   }
-
-  /** MinHash signature of a shingle array — the declarative twin of the
-    * scalar kernel (DedupKernelSpec pins equivalence): md5's first 16 hex
-    * chars parsed to an unsigned 64-bit base (`conv`), multiply-add mixed
-    * per seed in decimal(38,0) arithmetic (the product fits: a < 2^62,
-    * base < 2^64), reduced with a numeric min, emitted as the unsigned
-    * decimal string. Pure per-row computation.
-    */
-  def minhashSignature(sh: Column, k: Int): Column = {
-    val two64 = new java.math.BigDecimal(java.math.BigInteger.ONE.shiftLeft(64))
-    val elems = (0 until k).map { s =>
-      val (a, b) = mixConst(s)
-      val aDec = lit(new java.math.BigDecimal(java.lang.Long.toUnsignedString(a)))
-      val bDec = lit(new java.math.BigDecimal(java.lang.Long.toUnsignedString(b)))
-      array_min(transform(sh, w => {
-        val base = conv(substring(md5(w), 1, 16), 16, 10).cast("decimal(20,0)")
-        (aDec.cast("decimal(38,0)") * base + bDec) % lit(two64)
-      })).cast("decimal(20,0)").cast("string")
-    }
-    array(elems: _*)
-  }
-
-  /** LSH band hashes: the signature is cut into `bands` bands of `rows`
-    * minhashes; each band is hashed. Docs sharing any band hash become
-    * candidate pairs.
-    */
-  def lshBandHashes(sig: Column, bands: Int, rows: Int): Column =
-    transform(sequence(lit(0), lit(bands - 1)), j =>
-      struct(j.as("band"),
-        md5(concat_ws(",", slice(sig, j * rows + 1, lit(rows)))).as("bhash")))
 
   /** Full MinHash-LSH near-duplicate pipeline over (id, text):
     * shingle → sign → band → bucket-join → Jaccard-verify ≥ threshold.
@@ -240,27 +268,10 @@ object Dedup {
       bands: Int = 4,
       threshold: Double = 0.5,
       maxBucketSize: Int = Int.MaxValue): DataFrame = {
-    val docs = graft.operators.Parallelism.ensure(
-        df.select(col(idCol).as("doc_id"), col(textCol)))
-      .select(col("doc_id"), shingles(col(textCol), shingleLen).as("sh"))
-      .filter(size(col("sh")) > 0)
-    val banded = docs.select(col("doc_id"),
-      explode(minhashBands(col("sh"), numHashes, bands)).as("bhash"))
-    val gated =
-      if (maxBucketSize == Int.MaxValue) banded
-      else {
-        // per-bucket counts share the self-join's bhash partitioning, so
-        // this adds no extra exchange of the banded frame
-        val ok = banded.groupBy("bhash").agg(count(lit(1)).as("_n"))
-          .filter(col("_n") <= maxBucketSize).select("bhash")
-        banded.join(ok, "bhash")
-      }
-    val candidates = gated.as("x").join(gated.as("y"),
-        col("x.bhash") === col("y.bhash")
-          && col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("id1"), col("y.doc_id").as("id2"))
-      .distinct()
-    jaccardVerify(candidates, docs, threshold)
+    val docs = docShingles(df, idCol, textCol, shingleLen)
+    jaccardVerify(
+      candidatePairs(bandKeys(docs, numHashes, bands), maxBucketSize),
+      docs, threshold)
   }
 
   /** Exact set-Jaccard on candidate pairs against the shingle sets. */
@@ -285,27 +296,18 @@ object Dedup {
     * Σmax needs no union enumeration: Σmax = S₁ + S₂ − Σmin with Σmin over
     * SHARED tokens only (min is 0 elsewhere), so the only pair-keyed work
     * is the shared-token equi-join, partial-agg'd. Candidates come from
-    * the same banded minhash equi-join as q25; the text scans once into a
-    * persisted (id, text) frame feeding shingles and token tfs.
+    * the same banded minhash equi-join as q25; the text scans once into
+    * the persisted doc-shingle frame, which carries each document's tokens
+    * for the tfs (a document without a shingle is in no candidate pair).
     */
   def weightedJaccardAudit(df: DataFrame, idCol: String, textCol: String,
       shingleLen: Int = 3, numHashes: Int = 16,
       bands: Int = 4): DataFrame = {
-    val base = graft.operators.Parallelism.ensure(
-        df.select(col(idCol).as("doc_id"), col(textCol).as("_graft_text")))
+    val docs = docShingles(df, idCol, textCol, shingleLen,
+        TextFunctions.tokens(col(textCol)).as("_graft_tok"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val docs = base
-      .select(col("doc_id"), shingles(col("_graft_text"), shingleLen).as("sh"))
-      .filter(size(col("sh")) > 0)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val banded = docs.select(col("doc_id"),
-      explode(minhashBands(col("sh"), numHashes, bands)).as("bhash"))
-    val cands = banded.as("x").join(banded.as("y"),
-        col("x.bhash") === col("y.bhash") && col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("id1"), col("y.doc_id").as("id2"))
-      .distinct()
-    val tf = base.select(col("doc_id"),
-        explode(graft.text.TextFunctions.tokens(col("_graft_text"))).as("token"))
+    val cands = candidatePairs(bandKeys(docs, numHashes, bands))
+    val tf = docs.select(col("doc_id"), explode(col("_graft_tok")).as("token"))
       .filter(col("token") =!= "")
       .groupBy(col("doc_id"), col("token")).agg(count(lit(1)).as("tf"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -362,17 +364,14 @@ object Dedup {
       .select(col("_graft_cid"), md5(col(textCol)).as("_graft_h"))
     val exact = cHash.join(broadcast(bHash), "_graft_h")
       .groupBy("_graft_bid").agg(min("_graft_cid").as("_graft_exact"))
-    val bDocs = batch
-      .select(col(idCol).as("_graft_bid"), shingles(col(textCol), shingleLen).as("_graft_bsh"))
-      .filter(size(col("_graft_bsh")) > 0)
-    val cDocs = graft.operators.Parallelism.ensure(
-        corpus.select(col(idCol).as("_graft_cid"), col(textCol)))
-      .select(col("_graft_cid"), shingles(col(textCol), shingleLen).as("_graft_csh"))
-      .filter(size(col("_graft_csh")) > 0)
-    val bBand = bDocs.select(col("_graft_bid"),
-      explode(minhashBands(col("_graft_bsh"), numHashes, bands)).as("_graft_bh"))
-    val cBand = cDocs.select(col("_graft_cid"),
-      explode(minhashBands(col("_graft_csh"), numHashes, bands)).as("_graft_bh"))
+    val bSh = docShingles(batch, idCol, textCol, shingleLen)
+    val cSh = docShingles(corpus, idCol, textCol, shingleLen)
+    val bDocs = bSh.select(col("doc_id").as("_graft_bid"), col("sh").as("_graft_bsh"))
+    val cDocs = cSh.select(col("doc_id").as("_graft_cid"), col("sh").as("_graft_csh"))
+    val bBand = bandKeys(bSh, numHashes, bands)
+      .select(col("doc_id").as("_graft_bid"), col("key").as("_graft_bh"))
+    val cBand = bandKeys(cSh, numHashes, bands)
+      .select(col("doc_id").as("_graft_cid"), col("key").as("_graft_bh"))
     val cand = cBand.join(broadcast(bBand), "_graft_bh")
       .select(col("_graft_bid"), col("_graft_cid")).distinct()
     val near = cDocs
@@ -399,10 +398,7 @@ object Dedup {
     */
   def allPairsJaccard(df: DataFrame, idCol: String, textCol: String,
       shingleLen: Int, threshold: Double): DataFrame = {
-    val docs = graft.operators.Parallelism.ensure(
-        df.select(col(idCol).as("doc_id"), col(textCol)))
-      .select(col("doc_id"), shingles(col(textCol), shingleLen).as("sh"))
-      .filter(size(col("sh")) > 0)
+    val docs = docShingles(df, idCol, textCol, shingleLen)
     val words = docs.select(col("doc_id"), explode(col("sh")).as("w"))
     val sizes = docs.select(col("doc_id"), size(col("sh")).as("n"))
     val inter = words.as("a").join(words.as("b"),
@@ -428,27 +424,17 @@ object Dedup {
     * candidate is the dominant cost).
     *
     * Scale shape: identical to [[nearDuplicatesMinhashLsh]] — candidates
-    * from the band-bucket equi-join, signatures computed once per doc
-    * (native kernel), per-pair work is two bound-array scalars (component
-    * match count, array_intersect). No all-pairs stage.
+    * from the shared band-bucket kernel ([[candidatePairs]]), each doc's
+    * signature computed once by the native [[minhashSig]] kernel into the
+    * persisted shingle frame, per-pair work is two bound-array scalars
+    * (component match count, array_intersect). No all-pairs stage.
     */
   def minhashEstimateAudit(df: DataFrame, idCol: String, textCol: String,
       shingleLen: Int = 3, numHashes: Int = 16, bands: Int = 4): DataFrame = {
-    val docs = graft.operators.Parallelism.ensure(
-        df.select(col(idCol).as("doc_id"), col(textCol)))
-      .select(col("doc_id"), shingles(col(textCol), shingleLen).as("sh"))
-      .filter(size(col("sh")) > 0)
-      .select(col("doc_id"), col("sh"),
-        minhashSignature(col("sh"), numHashes).as("sig"))
+    val docs = docShingles(df, idCol, textCol, shingleLen)
+      .withColumn("sig", minhashSig(col("sh"), numHashes))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val banded = docs.select(col("doc_id"),
-      explode(lshBandHashes(col("sig"), bands, numHashes / bands)).as("bhash"))
-    val candidates = banded.as("x").join(banded.as("y"),
-        col("x.bhash") === col("y.bhash")
-          && col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("id1"), col("y.doc_id").as("id2"))
-      .distinct()
-    candidates
+    candidatePairs(bandKeys(docs, numHashes, bands))
       .join(docs.select(col("doc_id").as("id1"), col("sh").as("_graft_sh1"),
         col("sig").as("_graft_sg1")), "id1")
       .join(docs.select(col("doc_id").as("id2"), col("sh").as("_graft_sh2"),
@@ -478,29 +464,17 @@ object Dedup {
     *
     * Parity is the decimal-string value mod 2 — both engines parse the
     * same unsigned-decimal signature components, so the bits (and the
-    * estimate) are engine-exact. Candidates, scan shape, and the exact
-    * verify are identical to [[minhashEstimateAudit]].
+    * estimate) are engine-exact. The bits come from the native
+    * [[minhashSig]] kernel; candidates, scan shape, and the exact verify
+    * are identical to [[minhashEstimateAudit]].
     */
   def bbitMinhashAudit(df: DataFrame, idCol: String, textCol: String,
       shingleLen: Int = 3, numHashes: Int = 16, bands: Int = 4): DataFrame = {
-    val docs = graft.operators.Parallelism.ensure(
-        df.select(col(idCol).as("doc_id"), col(textCol)))
-      .select(col("doc_id"), shingles(col(textCol), shingleLen).as("sh"))
-      .filter(size(col("sh")) > 0)
-      .select(col("doc_id"), col("sh"),
-        minhashSignature(col("sh"), numHashes).as("sig"))
-      .select(col("doc_id"), col("sh"), col("sig"),
-        transform(col("sig"),
-          h => (h.cast("decimal(20,0)") % 2).cast("int")).as("bits"))
+    val docs = docShingles(df, idCol, textCol, shingleLen)
+      .withColumn("bits", transform(minhashSig(col("sh"), numHashes),
+        h => (h.cast("decimal(20,0)") % 2).cast("int")))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val banded = docs.select(col("doc_id"),
-      explode(lshBandHashes(col("sig"), bands, numHashes / bands)).as("bhash"))
-    val candidates = banded.as("x").join(banded.as("y"),
-        col("x.bhash") === col("y.bhash")
-          && col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("id1"), col("y.doc_id").as("id2"))
-      .distinct()
-    candidates
+    candidatePairs(bandKeys(docs, numHashes, bands))
       .join(docs.select(col("doc_id").as("id1"), col("sh").as("_graft_sh1"),
         col("bits").as("_graft_b1")), "id1")
       .join(docs.select(col("doc_id").as("id2"), col("sh").as("_graft_sh2"),
@@ -574,10 +548,7 @@ object Dedup {
     // explode is evaluated twice (vocabulary branch + prefix branch),
     // and hashing at the explode measurably charged q96's small-prefix
     // case twice for nothing.
-    val docs = graft.operators.Parallelism.ensure(
-        df.select(col(idCol).as("doc_id"), col(textCol)))
-      .select(col("doc_id"), shingles(col(textCol), shingleLen).as("sh"))
-      .filter(size(col("sh")) > 0)
+    val docs = docShingles(df, idCol, textCol, shingleLen)
       .withColumn("_graft_shh", transform(col("sh"), w => xxhash64(w)))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val words = docs.select(col("doc_id"), size(col("sh")).as("n"),
@@ -644,10 +615,7 @@ object Dedup {
   def containmentJoin(df: DataFrame, idCol: String, textCol: String,
       shingleLen: Int, threshold: Double,
       maxDf: Option[Long] = None): DataFrame = {
-    val docs = graft.operators.Parallelism.ensure(
-        df.select(col(idCol).as("doc_id"), col(textCol)))
-      .select(col("doc_id"), shingles(col(textCol), shingleLen).as("sh"))
-      .filter(size(col("sh")) > 0)
+    val docs = docShingles(df, idCol, textCol, shingleLen)
       .withColumn("_graft_shh", transform(col("sh"), w => xxhash64(w)))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     containmentJoinFromShingles(docs, threshold, maxDf)
@@ -719,20 +687,19 @@ object Dedup {
     * a signature-only screening pass is safe for a given corpus. Jaccard
     * signatures systematically UNDER-estimate containment of small-into-
     * large docs (J shrinks as |b| grows); err_ppm makes that visible.
+    * One persisted shingle frame feeds the exact join and the native
+    * [[minhashSig]] signatures.
     */
   def containmentEstimateAudit(df: DataFrame, idCol: String, textCol: String,
       shingleLen: Int = 3, numHashes: Int = 16,
       threshold: Double = 0.8): DataFrame = {
-    val shingled = graft.operators.Parallelism.ensure(
-        df.select(col(idCol).as("doc_id"), col(textCol)))
-      .select(col("doc_id"), shingles(col(textCol), shingleLen).as("sh"))
-      .filter(size(col("sh")) > 0)
+    val shingled = docShingles(df, idCol, textCol, shingleLen)
       .withColumn("_graft_shh", transform(col("sh"), w => xxhash64(w)))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val pairs = containmentJoinFromShingles(shingled, threshold)
     val docs = shingled
       .select(col("doc_id"), size(col("sh")).cast("long").as("n"),
-        minhashSignature(col("sh"), numHashes).as("sig"))
+        minhashSig(col("sh"), numHashes).as("sig"))
     pairs
       .join(docs.select(col("doc_id").as("contained_id"),
         col("n").as("_graft_n1"), col("sig").as("_graft_sg1")), "contained_id")
@@ -751,12 +718,13 @@ object Dedup {
 
   /** Mergeable per-group MinHash sketches + gram-space similarity audit —
     * the shard-wise processing story at 100 TB: each document's signature
-    * is computed once by the per-row kernel, per-group sketches are the
-    * ELEMENTWISE UNSIGNED MIN of member signatures (a min-merge is the
-    * signature of the union of the gram sets — associative, commutative,
-    * constant-size, so shards sketch independently and merge in a
-    * partial-agg'd groupBy), and any two groups' gram-space Jaccard is then
-    * estimated from sketch agreement WITHOUT touching the corpus again.
+    * is computed once by the native [[minhashSig]] kernel, per-group
+    * sketches are the ELEMENTWISE UNSIGNED MIN of member signatures (a
+    * min-merge is the signature of the union of the gram sets —
+    * associative, commutative, constant-size, so shards sketch
+    * independently and merge in a partial-agg'd groupBy), and any two
+    * groups' gram-space Jaccard is then estimated from sketch agreement
+    * WITHOUT touching the corpus again.
     * The audit emits the exact gram-space Jaccard next to the estimate —
     * the evidence for how much to trust sketch-only comparisons (k=16
     * gives ±~12% absolute; scale k for tighter bounds).
@@ -767,12 +735,10 @@ object Dedup {
   def sourceSketchSimilarity(df: DataFrame, textCol: String,
       groupCol: String, shingleLen: Int, k: Int): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
-    val base = graft.operators.Parallelism.ensure(
-        df.select(col(groupCol).as("src"), col(textCol)))
-      .select(col("src"), shingles(col(textCol), shingleLen).as("sh"))
-      .filter(size(col("sh")) > 0)
+    val base = docShingles(df, groupCol, textCol, shingleLen)
+      .withColumnRenamed("doc_id", "src")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val sigs = base.select(col("src"), minhashSignature(col("sh"), k).as("sig"))
+    val sigs = base.select(col("src"), minhashSig(col("sh"), k).as("sig"))
     val minCols = (0 until k).map(i =>
       min(element_at(col("sig"), i + 1).cast("decimal(20,0)")).as(s"_m$i"))
     val sketches = sigs.groupBy(col("src")).agg(minCols.head, minCols.tail: _*)

@@ -36,8 +36,8 @@ object LshPlanner {
     * side). One shingle scan feeds BOTH sides (the q119 lesson): the exact
     * pair set is the shared-shingle equi-join (never all-pairs — pairs
     * with zero shared shingles have jaccard 0 and can't reach
-    * `minJacPpm`), the candidate set is the band-bucket equi-join with
-    * the SAME per-row kernels q25 ships.
+    * `minJacPpm`), the candidate set is the band-bucket equi-join q25
+    * ships ([[Dedup.candidatePairs]]).
     *
     * At 100 TB the exact side is the expensive half — run the audit on a
     * hash-sampled slice (q39) exactly like the ANN recall audit; the
@@ -47,10 +47,7 @@ object LshPlanner {
       shingleLen: Int, numHashes: Int, bands: Int,
       minJacPpm: Long): DataFrame = {
     require(minJacPpm > 0 && minJacPpm <= 1000000L, s"bad minJacPpm $minJacPpm")
-    val sh = graft.operators.Parallelism.ensure(
-        docs.select(col(idCol).as("doc_id"), col(textCol)))
-      .select(col("doc_id"), Dedup.shingles(col(textCol), shingleLen).as("sh"))
-      .filter(size(col("sh")) > 0)
+    val sh = Dedup.docShingles(docs, idCol, textCol, shingleLen)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val words = sh.select(col("doc_id"), size(col("sh")).as("n"),
       explode(col("sh")).as("w"))
@@ -62,12 +59,7 @@ object LshPlanner {
       .select(col("id1"), col("id2"),
         expr("(inter * 1000000) div (_n1 + _n2 - inter)").as("jac_ppm"))
       .filter(col("jac_ppm") >= minJacPpm)
-    val banded = sh.select(col("doc_id"),
-      explode(Dedup.minhashBands(col("sh"), numHashes, bands)).as("key"))
-    val cands = banded.as("a").join(banded.as("b"),
-        col("a.key") === col("b.key") && col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("id1"), col("b.doc_id").as("id2"))
-      .distinct()
+    val cands = Dedup.candidatePairs(Dedup.bandKeys(sh, numHashes, bands))
       .withColumn("_caught", lit(1L))
     exact.join(cands, Seq("id1", "id2"), "left")
       .na.fill(0L, Seq("_caught"))

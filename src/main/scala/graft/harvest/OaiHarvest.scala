@@ -63,7 +63,7 @@ object OaiHarvest {
           case XMLStreamConstants.START_ELEMENT =>
             r.getLocalName match {
               case "record" if inMetadata =>
-                marc = Some(parseMarc(r))
+                marc = Some(MarcXml.parseRecord(r))
               case "record" =>
                 identifier = ""; datestamp = ""; deleted = false; marc = None
               case "header" =>
@@ -95,37 +95,6 @@ object OaiHarvest {
       }
     } finally r.close()
     OaiResponse(records.result(), token, error)
-  }
-
-  /** parse the nested MARCXML record element (delegates to MarcXml's
-    * record-level parsing by re-scanning the subtree)
-    */
-  private def parseMarc(r: javax.xml.stream.XMLStreamReader): MarcRecord = {
-    // serialize the subtree back to a string and reuse the MARCXML parser —
-    // page sizes are bounded (≤ limit records), so this stays cheap
-    val sb = new StringBuilder
-    var depth = 1
-    sb.append("<record>")
-    while (depth > 0 && r.hasNext) {
-      r.next() match {
-        case XMLStreamConstants.START_ELEMENT =>
-          depth += 1
-          sb.append('<').append(r.getLocalName)
-          (0 until r.getAttributeCount).foreach { i =>
-            sb.append(' ').append(r.getAttributeLocalName(i)).append("=\"")
-              .append(MarcXml.encodeXmlText(r.getAttributeValue(i))).append('"')
-          }
-          sb.append('>')
-        case XMLStreamConstants.CHARACTERS =>
-          sb.append(MarcXml.encodeXmlText(r.getText))
-        case XMLStreamConstants.END_ELEMENT =>
-          depth -= 1
-          if (depth > 0) sb.append("</").append(r.getLocalName).append('>')
-      }
-    }
-    sb.append("</record>")
-    MarcXml.parseCollection(sb.toString).headOption
-      .getOrElse(MarcRecord(None, Nil))
   }
 }
 

@@ -42,8 +42,11 @@ object MarcXml {
     out.result()
   }
 
-  /** Parse one record, positioned on its START_ELEMENT. */
-  private def parseRecord(r: XMLStreamReader): MarcRecord = {
+  /** Parse one record, positioned on its START_ELEMENT; returns with the
+    * reader on the record's END_ELEMENT. Events other than elements and
+    * text (comments, processing instructions) are skipped.
+    */
+  private[graft] def parseRecord(r: XMLStreamReader): MarcRecord = {
     var leader: Option[String] = None
     val fields = Seq.newBuilder[MarcField]
     var depth = 1

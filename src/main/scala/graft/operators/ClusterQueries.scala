@@ -1,5 +1,6 @@
 package graft.operators
 
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
@@ -18,38 +19,46 @@ import graft.text.TextFunctions
   */
 object ClusterQueries {
 
+  /** The near-duplicate components q30, q74, q95, q113 and q227 share:
+    * the documents' 3-word shingles, 16 minhashes in 4 bands, connected
+    * through shared band keys. Returns `(doc_id, component, extra…)`;
+    * `extra` columns come from the shingle scan and may read `text`.
+    */
+  private def nearDupComponents(t: Tables, extra: Column*): DataFrame = {
+    val docs = Dedup.docShingles(t.documents, "doc_id", "text", 3, extra: _*)
+    val cc = Dedup.nearDupComponents(docs, numHashes = 16, bands = 4)
+      .withColumnRenamed("id", "doc_id")
+    if (extra.isEmpty) cc else cc.join(docs.drop("sh"), "doc_id")
+  }
+
+  /** DuckDB twin of [[nearDupComponents]]: `lbl(doc_id, comp)`, the
+    * min-label propagation over the band-key graph (min(comp) per doc is
+    * its component) */
+  private val nearDupCte =
+    s"""WITH RECURSIVE
+       |${TextDedupQueries.shinglesCte},
+       |signed AS (
+       |  SELECT doc_id, ${Dedup.minhashSigSql("sh", 16)} AS sig
+       |  FROM docs),
+       |banded AS (SELECT doc_id, unnest(range(0, 4)) AS band, sig FROM signed),
+       |bh AS (
+       |  SELECT doc_id, CAST(band AS VARCHAR) || ':' ||
+       |    ${TextDedupQueries.bandMd5Sql} AS key
+       |  FROM banded),
+       |lbl AS (
+       |  SELECT doc_id, doc_id AS comp FROM (SELECT DISTINCT doc_id FROM bh)
+       |  UNION
+       |  SELECT b2.doc_id, l.comp
+       |  FROM lbl l JOIN bh b1 ON b1.doc_id = l.doc_id JOIN bh b2 ON b2.key = b1.key)""".stripMargin
+
   val all: Seq[Q] = Seq(
     Q("q30_cluster_near_dups",
       (s, d) => {
-        val t = Tables(s, d)
-        val docs = Parallelism.ensure(t.documents.select(col("doc_id"), col("text")))
-          .select(col("doc_id"), Dedup.shingles(col("text"), 3).as("sh"))
-          .filter(size(col("sh")) > 0)
-        val banded = docs.select(col("doc_id").as("id"),
-          explode(Dedup.minhashBands(col("sh"), 16, 4)).as("key"))
-        Clusterize.connectedComponents(banded, edgesDistinct = true)
-          .select(col("id").as("doc_id"), col("component").as("cluster_rep"))
+        nearDupComponents(Tables(s, d))
+          .select(col("doc_id"), col("component").as("cluster_rep"))
           .orderBy(col("doc_id"))
       },
-      Some(s"""WITH RECURSIVE
-             |docs AS (
-             |  SELECT doc_id, list_distinct(list_transform(range(1, len(t)-1),
-             |    i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])) AS sh
-             |  FROM (SELECT doc_id, regexp_split_to_array(text, '\\s+') AS t FROM documents)
-             |  WHERE len(t) >= 3),
-             |signed AS (
-             |  SELECT doc_id, ${Dedup.minhashSigSql("sh", 16)} AS sig
-             |  FROM docs),
-             |banded AS (SELECT doc_id, unnest(range(0, 4)) AS band, sig FROM signed),
-             |bh AS (
-             |  SELECT doc_id, CAST(band AS VARCHAR) || ':' ||
-             |    md5(array_to_string(list_slice(sig, CAST(band*4+1 AS INT), CAST(band*4+4 AS INT)), ',')) AS key
-             |  FROM banded),
-             |lbl AS (
-             |  SELECT doc_id, doc_id AS comp FROM (SELECT DISTINCT doc_id FROM bh)
-             |  UNION
-             |  SELECT b2.doc_id, l.comp
-             |  FROM lbl l JOIN bh b1 ON b1.doc_id = l.doc_id JOIN bh b2 ON b2.key = b1.key)
+      Some(s"""$nearDupCte
              |SELECT doc_id, min(comp) AS cluster_rep FROM lbl
              |GROUP BY doc_id ORDER BY doc_id""".stripMargin),
       headline = true),
@@ -58,37 +67,13 @@ object ClusterQueries {
     // on the same side (the split-level complement of decontamination)
     Q("q74_leakage_safe_split",
       (s, d) => {
-        val t = Tables(s, d)
-        val docs = Parallelism.ensure(t.documents.select(col("doc_id"), col("text")))
-          .select(col("doc_id"), Dedup.shingles(col("text"), 3).as("sh"))
-          .filter(size(col("sh")) > 0)
-        val banded = docs.select(col("doc_id").as("id"),
-          explode(Dedup.minhashBands(col("sh"), 16, 4)).as("key"))
         graft.sampling.Sampling.groupSplit(
-            Clusterize.connectedComponents(banded, edgesDistinct = true)
-              .select(col("id").as("doc_id"), col("component").as("group")),
+            nearDupComponents(Tables(s, d))
+              .select(col("doc_id"), col("component").as("group")),
             "group", testFraction = 0.2, salt = "split")
           .orderBy(col("doc_id"))
       },
-      Some(s"""WITH RECURSIVE
-             |docs AS (
-             |  SELECT doc_id, list_distinct(list_transform(range(1, len(t)-1),
-             |    i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])) AS sh
-             |  FROM (SELECT doc_id, regexp_split_to_array(text, '\\s+') AS t FROM documents)
-             |  WHERE len(t) >= 3),
-             |signed AS (
-             |  SELECT doc_id, ${Dedup.minhashSigSql("sh", 16)} AS sig
-             |  FROM docs),
-             |banded AS (SELECT doc_id, unnest(range(0, 4)) AS band, sig FROM signed),
-             |bh AS (
-             |  SELECT doc_id, CAST(band AS VARCHAR) || ':' ||
-             |    md5(array_to_string(list_slice(sig, CAST(band*4+1 AS INT), CAST(band*4+4 AS INT)), ',')) AS key
-             |  FROM banded),
-             |lbl AS (
-             |  SELECT doc_id, doc_id AS comp FROM (SELECT DISTINCT doc_id FROM bh)
-             |  UNION
-             |  SELECT b2.doc_id, l.comp
-             |  FROM lbl l JOIN bh b1 ON b1.doc_id = l.doc_id JOIN bh b2 ON b2.key = b1.key),
+      Some(s"""$nearDupCte,
              |grp AS (SELECT doc_id, min(comp) AS grp FROM lbl GROUP BY doc_id)
              |SELECT doc_id, grp AS "group",
              |  CASE WHEN substr(md5('split:' || CAST(grp AS VARCHAR)), 1, 8)
@@ -101,35 +86,11 @@ object ClusterQueries {
     // too-lax banding collapsing the corpus into one giant component
     Q("q95_cluster_sizes",
       (s, d) => {
-        val t = Tables(s, d)
-        val docs = Parallelism.ensure(t.documents.select(col("doc_id"), col("text")))
-          .select(col("doc_id"), Dedup.shingles(col("text"), 3).as("sh"))
-          .filter(size(col("sh")) > 0)
-        val banded = docs.select(col("doc_id").as("id"),
-          explode(Dedup.minhashBands(col("sh"), 16, 4)).as("key"))
         Clusterize.componentSizeHistogram(
-            Clusterize.connectedComponents(banded, edgesDistinct = true), "component")
+            nearDupComponents(Tables(s, d)), "component")
           .orderBy(col("cluster_size"))
       },
-      Some(s"""WITH RECURSIVE
-             |docs AS (
-             |  SELECT doc_id, list_distinct(list_transform(range(1, len(t)-1),
-             |    i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])) AS sh
-             |  FROM (SELECT doc_id, regexp_split_to_array(text, '\\s+') AS t FROM documents)
-             |  WHERE len(t) >= 3),
-             |signed AS (
-             |  SELECT doc_id, ${Dedup.minhashSigSql("sh", 16)} AS sig
-             |  FROM docs),
-             |banded AS (SELECT doc_id, unnest(range(0, 4)) AS band, sig FROM signed),
-             |bh AS (
-             |  SELECT doc_id, CAST(band AS VARCHAR) || ':' ||
-             |    md5(array_to_string(list_slice(sig, CAST(band*4+1 AS INT), CAST(band*4+4 AS INT)), ',')) AS key
-             |  FROM banded),
-             |lbl AS (
-             |  SELECT doc_id, doc_id AS comp FROM (SELECT DISTINCT doc_id FROM bh)
-             |  UNION
-             |  SELECT b2.doc_id, l.comp
-             |  FROM lbl l JOIN bh b1 ON b1.doc_id = l.doc_id JOIN bh b2 ON b2.key = b1.key),
+      Some(s"""$nearDupCte,
              |comp AS (SELECT doc_id, min(comp) AS cluster_rep FROM lbl GROUP BY doc_id),
              |sizes AS (SELECT cluster_rep, CAST(count(*) AS BIGINT) AS cluster_size
              |  FROM comp GROUP BY cluster_rep)
@@ -143,18 +104,9 @@ object ClusterQueries {
     // partial-agg'd max(struct) per component after CC; quality is per-row.
     Q("q113_cluster_representative",
       (s, d) => {
-        val t = Tables(s, d)
-        val docs = Parallelism.ensure(t.documents.select(col("doc_id"), col("text")))
-          .select(col("doc_id"), Dedup.shingles(col("text"), 3).as("sh"),
-            TextFunctions.tokens(col("text")).as("w"))
-          .filter(size(col("sh")) > 0)
-        val banded = docs.select(col("doc_id").as("id"),
-          explode(Dedup.minhashBands(col("sh"), 16, 4)).as("key"))
-        val quality = docs.select(col("doc_id"),
-          expr("(CAST(size(array_distinct(w)) AS BIGINT) * 1000000) div size(w)")
-            .as("q_ppm"))
-        Clusterize.connectedComponents(banded, edgesDistinct = true)
-          .join(quality, col("id") === col("doc_id"))
+        nearDupComponents(Tables(s, d), TextFunctions.tokens(col("text")).as("w"))
+          .withColumn("q_ppm",
+            expr("(CAST(size(array_distinct(w)) AS BIGINT) * 1000000) div size(w)"))
           .groupBy(col("component"))
           .agg(count(lit(1)).as("cluster_size"),
             max(struct(col("q_ppm"), (-col("doc_id")).as("_negid"))).as("_best"))
@@ -162,25 +114,7 @@ object ClusterQueries {
             col("_best.q_ppm").as("rep_q_ppm"), col("cluster_size"))
           .orderBy(col("component"))
       },
-      Some(s"""WITH RECURSIVE
-             |docs AS (
-             |  SELECT doc_id, list_distinct(list_transform(range(1, len(t)-1),
-             |    i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])) AS sh
-             |  FROM (SELECT doc_id, regexp_split_to_array(text, '\\s+') AS t FROM documents)
-             |  WHERE len(t) >= 3),
-             |signed AS (
-             |  SELECT doc_id, ${Dedup.minhashSigSql("sh", 16)} AS sig
-             |  FROM docs),
-             |banded AS (SELECT doc_id, unnest(range(0, 4)) AS band, sig FROM signed),
-             |bh AS (
-             |  SELECT doc_id, CAST(band AS VARCHAR) || ':' ||
-             |    md5(array_to_string(list_slice(sig, CAST(band*4+1 AS INT), CAST(band*4+4 AS INT)), ',')) AS key
-             |  FROM banded),
-             |lbl AS (
-             |  SELECT doc_id, doc_id AS comp FROM (SELECT DISTINCT doc_id FROM bh)
-             |  UNION
-             |  SELECT b2.doc_id, l.comp
-             |  FROM lbl l JOIN bh b1 ON b1.doc_id = l.doc_id JOIN bh b2 ON b2.key = b1.key),
+      Some(s"""$nearDupCte,
              |comp AS (SELECT doc_id, min(comp) AS component FROM lbl GROUP BY doc_id),
              |q AS (SELECT doc_id,
              |    (CAST(len(list_distinct(t)) AS BIGINT) * 1000000) // CAST(len(t) AS BIGINT) AS q_ppm
@@ -374,13 +308,8 @@ object ClusterQueries {
     Q("q227_canonical_policy",
       (s, d) => {
         val t = Tables(s, d)
-        val docs = Parallelism.ensure(t.documents.select(col("doc_id"), col("text")))
-          .select(col("doc_id"), Dedup.shingles(col("text"), 3).as("sh"))
-          .filter(size(col("sh")) > 0)
-        val banded = docs.select(col("doc_id").as("id"),
-          explode(Dedup.minhashBands(col("sh"), 16, 4)).as("key"))
-        val cc = Clusterize.connectedComponents(banded, edgesDistinct = true)
-          .select(col("id").as("doc_id"), col("component").as("cluster_rep"))
+        val cc = nearDupComponents(t)
+          .select(col("doc_id"), col("component").as("cluster_rep"))
         val nTok = t.documents.select(col("doc_id"),
           size(filter(TextFunctions.tokens(col("text")),
             x => x =!= lit(""))).cast("long").as("n_tok"))
@@ -412,25 +341,7 @@ object ClusterQueries {
               .otherwise(0L).as("swapped"))
           .orderBy(col("cluster_rep"))
       },
-      Some(s"""WITH RECURSIVE
-              |docs AS (
-              |  SELECT doc_id, list_distinct(list_transform(range(1, len(t)-1),
-              |    i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])) AS sh
-              |  FROM (SELECT doc_id, regexp_split_to_array(text, '\\s+') AS t FROM documents)
-              |  WHERE len(t) >= 3),
-              |signed AS (
-              |  SELECT doc_id, ${Dedup.minhashSigSql("sh", 16)} AS sig
-              |  FROM docs),
-              |banded AS (SELECT doc_id, unnest(range(0, 4)) AS band, sig FROM signed),
-              |bh AS (
-              |  SELECT doc_id, CAST(band AS VARCHAR) || ':' ||
-              |    md5(array_to_string(list_slice(sig, CAST(band*4+1 AS INT), CAST(band*4+4 AS INT)), ',')) AS key
-              |  FROM banded),
-              |lbl AS (
-              |  SELECT doc_id, doc_id AS comp FROM (SELECT DISTINCT doc_id FROM bh)
-              |  UNION
-              |  SELECT b2.doc_id, l.comp
-              |  FROM lbl l JOIN bh b1 ON b1.doc_id = l.doc_id JOIN bh b2 ON b2.key = b1.key),
+      Some(s"""$nearDupCte,
               |cc AS (SELECT doc_id, min(comp) AS cluster_rep FROM lbl
               |  GROUP BY doc_id),
               |nt AS (SELECT doc_id, CAST(len(list_filter(

@@ -435,9 +435,7 @@ object CorpusAuditQueries {
           .orderBy(col("contained_id"), col("container_id"))
       },
       Some(s"""WITH ${TextDedupQueries.shinglesCte},
-              |signed AS (
-              |  SELECT doc_id, sh, ${Dedup.minhashSigSql("sh", 16)} AS sig
-              |  FROM docs),
+              |${TextDedupQueries.signedCte},
               |w AS (SELECT doc_id, unnest(sh) AS w FROM docs),
               |sz AS (SELECT doc_id, CAST(len(sh) AS BIGINT) AS n FROM docs),
               |i AS (SELECT a.doc_id AS contained_id, b.doc_id AS container_id,

@@ -490,19 +490,8 @@ object CorpusReportQueries {
           .orderBy(col("id1"), col("id2"))
       },
       Some(s"""WITH ${TextDedupQueries.shinglesCte},
-              |signed AS (
-              |  SELECT doc_id, sh, ${graft.dedup.Dedup.minhashSigSql("sh", 16)} AS sig
-              |  FROM docs),
-              |banded AS (
-              |  SELECT doc_id, unnest(range(0, 4)) AS band, sig FROM signed),
-              |bh AS (
-              |  SELECT doc_id, band,
-              |    md5(array_to_string(list_slice(sig, CAST(band*4+1 AS INT), CAST(band*4+4 AS INT)), ',')) AS bhash
-              |  FROM banded),
-              |cand AS (
-              |  SELECT DISTINCT a.doc_id AS id1, b.doc_id AS id2
-              |  FROM bh a JOIN bh b ON a.band = b.band AND a.bhash = b.bhash
-              |    AND a.doc_id < b.doc_id),
+              |${TextDedupQueries.signedCte},
+              |${TextDedupQueries.lshCandCte("signed")},
               |tf AS (SELECT doc_id, token, CAST(count(*) AS BIGINT) AS tf
               |  FROM (SELECT doc_id, unnest(regexp_split_to_array(text, '\\s+')) AS token
               |        FROM documents)
@@ -540,23 +529,12 @@ object CorpusReportQueries {
           .orderBy(col("id1"), col("id2"))
       },
       Some(s"""WITH ${TextDedupQueries.shinglesCte},
-              |signed AS (
-              |  SELECT doc_id, sh, ${graft.dedup.Dedup.minhashSigSql("sh", 16)} AS sig
-              |  FROM docs),
+              |${TextDedupQueries.signedCte},
               |wb AS (SELECT doc_id, sh,
               |    list_transform(sig, s -> CAST(CAST(s AS UBIGINT) % 2 AS INT)) AS bits,
               |    sig
               |  FROM signed),
-              |banded AS (
-              |  SELECT doc_id, unnest(range(0, 4)) AS band, sig FROM wb),
-              |bh AS (
-              |  SELECT doc_id, band,
-              |    md5(array_to_string(list_slice(sig, CAST(band*4+1 AS INT), CAST(band*4+4 AS INT)), ',')) AS bhash
-              |  FROM banded),
-              |cand AS (
-              |  SELECT DISTINCT a.doc_id AS id1, b.doc_id AS id2
-              |  FROM bh a JOIN bh b ON a.band = b.band AND a.bhash = b.bhash
-              |    AND a.doc_id < b.doc_id),
+              |${TextDedupQueries.lshCandCte("wb")},
               |m AS (SELECT id1, id2,
               |    CAST(len(list_filter(range(1, 17),
               |      j -> d1.bits[CAST(j AS INT)] = d2.bits[CAST(j AS INT)]))

@@ -98,6 +98,63 @@ object TextDedupQueries {
       |  FROM (SELECT doc_id, regexp_split_to_array(text, '\s+') AS t FROM documents)
       |  WHERE len(t) >= 3)""".stripMargin
 
+  /** each doc's 16-element signature over [[shinglesCte]], shingles kept */
+  private[operators] val signedCte =
+    s"""signed AS (
+       |  SELECT doc_id, sh, ${Dedup.minhashSigSql("sh", 16)} AS sig
+       |  FROM docs)""".stripMargin
+
+  /** the md5 of band `band`'s 4 rows of `sig` — the DuckDB twin of
+    * [[Dedup.bandHashesOf]] without the band prefix */
+  private[operators] val bandMd5Sql =
+    "md5(array_to_string(list_slice(sig, CAST(band*4+1 AS INT), CAST(band*4+4 AS INT)), ','))"
+
+  /** the band-bucket candidate pairs `cand(id1, id2)` over the `sig`
+    * column of CTE `from` — the DuckDB twin of [[Dedup.candidatePairs]] */
+  private[operators] def lshCandCte(from: String): String =
+    s"""banded AS (
+       |  SELECT doc_id, unnest(range(0, 4)) AS band, sig FROM $from),
+       |bh AS (
+       |  SELECT doc_id, band,
+       |    $bandMd5Sql AS bhash
+       |  FROM banded),
+       |cand AS (
+       |  SELECT DISTINCT a.doc_id AS id1, b.doc_id AS id2
+       |  FROM bh a JOIN bh b ON a.band = b.band AND a.bhash = b.bhash
+       |    AND a.doc_id < b.doc_id)""".stripMargin
+
+  /** q169/q178's recall curve over a `docs(doc_id, sh)` CTE: the exact
+    * shared-shingle pairs, the band-bucket candidates, and recall per
+    * Jaccard decile — the DuckDB twin of
+    * [[graft.dedup.LshPlanner.empiricalRecallCurve]] */
+  private val lshRecallSql =
+    s"""w AS (SELECT doc_id, len(sh) AS n, unnest(sh) AS w FROM docs),
+       |ex AS (SELECT a.doc_id AS id1, b.doc_id AS id2,
+       |    CAST(count(*) AS BIGINT) AS inter,
+       |    max(a.n) AS n1, max(b.n) AS n2
+       |  FROM w a JOIN w b ON a.w = b.w AND a.doc_id < b.doc_id
+       |  GROUP BY 1, 2),
+       |j AS (SELECT id1, id2,
+       |    (inter * 1000000) // (n1 + n2 - inter) AS jac_ppm
+       |  FROM ex
+       |  WHERE (inter * 1000000) // (n1 + n2 - inter) >= 50000),
+       |signed AS (SELECT doc_id, ${Dedup.minhashSigSql("sh", 16)} AS sig
+       |  FROM docs),
+       |banded AS (SELECT doc_id, unnest(range(0, 4)) AS band, sig FROM signed),
+       |bh AS (SELECT doc_id, CAST(band AS VARCHAR) || ':' ||
+       |    md5(array_to_string(list_slice(sig, CAST(band*4+1 AS INT),
+       |      CAST(band*4+4 AS INT)), ',')) AS key
+       |  FROM banded),
+       |cand AS (SELECT DISTINCT b1.doc_id AS id1, b2.doc_id AS id2
+       |  FROM bh b1 JOIN bh b2 ON b1.key = b2.key AND b1.doc_id < b2.doc_id),
+       |f AS (SELECT j.jac_ppm,
+       |    CASE WHEN cand.id1 IS NULL THEN 0 ELSE 1 END AS caught
+       |  FROM j LEFT JOIN cand USING (id1, id2))
+       |SELECT jac_ppm // 100000 AS bucket, CAST(count(*) AS BIGINT) AS n_exact,
+       |  CAST(sum(caught) AS BIGINT) AS n_caught,
+       |  (CAST(sum(caught) AS BIGINT) * 1000000) // count(*) AS recall_ppm
+       |FROM f GROUP BY 1 ORDER BY 1""".stripMargin
+
   /** DuckDB replica of Similarity.annTopK's bucket computation, generated
     * from the same deterministic hyperplanes.
     */
@@ -302,19 +359,8 @@ object TextDedupQueries {
           .orderBy(col("id1"), col("id2"))
       },
       Some(s"""WITH $shinglesCte,
-              |signed AS (
-              |  SELECT doc_id, sh, ${Dedup.minhashSigSql("sh", 16)} AS sig
-              |  FROM docs),
-              |banded AS (
-              |  SELECT doc_id, unnest(range(0, 4)) AS band, sig FROM signed),
-              |bh AS (
-              |  SELECT doc_id, band,
-              |    md5(array_to_string(list_slice(sig, CAST(band*4+1 AS INT), CAST(band*4+4 AS INT)), ',')) AS bhash
-              |  FROM banded),
-              |cand AS (
-              |  SELECT DISTINCT a.doc_id AS id1, b.doc_id AS id2
-              |  FROM bh a JOIN bh b ON a.band = b.band AND a.bhash = b.bhash
-              |    AND a.doc_id < b.doc_id),
+              |$signedCte,
+              |${lshCandCte("signed")},
               |v AS (
               |  SELECT id1, id2,
               |    CAST(len(list_intersect(d1.sh, d2.sh)) AS DOUBLE)
@@ -1682,11 +1728,11 @@ object TextDedupQueries {
               |csig AS (SELECT doc_id, ${Dedup.minhashSigSql("sh", 16)} AS sig FROM c),
               |bbh AS (
               |  SELECT doc_id, band,
-              |    md5(array_to_string(list_slice(sig, CAST(band*4+1 AS INT), CAST(band*4+4 AS INT)), ',')) AS bhash
+              |    $bandMd5Sql AS bhash
               |  FROM (SELECT doc_id, unnest(range(0, 4)) AS band, sig FROM bsig)),
               |cbh AS (
               |  SELECT doc_id, band,
-              |    md5(array_to_string(list_slice(sig, CAST(band*4+1 AS INT), CAST(band*4+4 AS INT)), ',')) AS bhash
+              |    $bandMd5Sql AS bhash
               |  FROM (SELECT doc_id, unnest(range(0, 4)) AS band, sig FROM csig)),
               |cand AS (
               |  SELECT DISTINCT bbh.doc_id AS batch_id, cbh.doc_id AS corpus_id
@@ -1987,19 +2033,8 @@ object TextDedupQueries {
           .orderBy(col("id1"), col("id2"))
       },
       Some(s"""WITH $shinglesCte,
-              |signed AS (
-              |  SELECT doc_id, sh, ${Dedup.minhashSigSql("sh", 16)} AS sig
-              |  FROM docs),
-              |banded AS (
-              |  SELECT doc_id, unnest(range(0, 4)) AS band, sig FROM signed),
-              |bh AS (
-              |  SELECT doc_id, band,
-              |    md5(array_to_string(list_slice(sig, CAST(band*4+1 AS INT), CAST(band*4+4 AS INT)), ',')) AS bhash
-              |  FROM banded),
-              |cand AS (
-              |  SELECT DISTINCT a.doc_id AS id1, b.doc_id AS id2
-              |  FROM bh a JOIN bh b ON a.band = b.band AND a.bhash = b.bhash
-              |    AND a.doc_id < b.doc_id),
+              |$signedCte,
+              |${lshCandCte("signed")},
               |v AS (SELECT id1, id2,
               |    CAST(len(list_filter(range(1, 17),
               |      i -> d1.sig[CAST(i AS INT)] = d2.sig[CAST(i AS INT)])) AS BIGINT) AS matches,
@@ -2116,32 +2151,7 @@ object TextDedupQueries {
           .orderBy(col("bucket"))
       },
       Some(s"""WITH $shinglesCte,
-              |w AS (SELECT doc_id, len(sh) AS n, unnest(sh) AS w FROM docs),
-              |ex AS (SELECT a.doc_id AS id1, b.doc_id AS id2,
-              |    CAST(count(*) AS BIGINT) AS inter,
-              |    max(a.n) AS n1, max(b.n) AS n2
-              |  FROM w a JOIN w b ON a.w = b.w AND a.doc_id < b.doc_id
-              |  GROUP BY 1, 2),
-              |j AS (SELECT id1, id2,
-              |    (inter * 1000000) // (n1 + n2 - inter) AS jac_ppm
-              |  FROM ex
-              |  WHERE (inter * 1000000) // (n1 + n2 - inter) >= 50000),
-              |signed AS (SELECT doc_id, ${graft.dedup.Dedup.minhashSigSql("sh", 16)} AS sig
-              |  FROM docs),
-              |banded AS (SELECT doc_id, unnest(range(0, 4)) AS band, sig FROM signed),
-              |bh AS (SELECT doc_id, CAST(band AS VARCHAR) || ':' ||
-              |    md5(array_to_string(list_slice(sig, CAST(band*4+1 AS INT),
-              |      CAST(band*4+4 AS INT)), ',')) AS key
-              |  FROM banded),
-              |cand AS (SELECT DISTINCT b1.doc_id AS id1, b2.doc_id AS id2
-              |  FROM bh b1 JOIN bh b2 ON b1.key = b2.key AND b1.doc_id < b2.doc_id),
-              |f AS (SELECT j.jac_ppm,
-              |    CASE WHEN cand.id1 IS NULL THEN 0 ELSE 1 END AS caught
-              |  FROM j LEFT JOIN cand USING (id1, id2))
-              |SELECT jac_ppm // 100000 AS bucket, CAST(count(*) AS BIGINT) AS n_exact,
-              |  CAST(sum(caught) AS BIGINT) AS n_caught,
-              |  (CAST(sum(caught) AS BIGINT) * 1000000) // count(*) AS recall_ppm
-              |FROM f GROUP BY 1 ORDER BY 1""".stripMargin)),
+              |$lshRecallSql""".stripMargin)),
 
     // ---- the same recall audit over a deterministic hash-sampled slice
     // (the q39 draw): the exact arm's quadratic cost falls to ~f² of the
@@ -2162,31 +2172,6 @@ object TextDedupQueries {
               |    WHERE substr(md5('lr1:' || CAST(doc_id AS VARCHAR)), 1, 8)
               |      < '${graft.sampling.Sampling.fractionThreshold(0.5)}')
               |  WHERE len(t) >= 3),
-              |w AS (SELECT doc_id, len(sh) AS n, unnest(sh) AS w FROM docs),
-              |ex AS (SELECT a.doc_id AS id1, b.doc_id AS id2,
-              |    CAST(count(*) AS BIGINT) AS inter,
-              |    max(a.n) AS n1, max(b.n) AS n2
-              |  FROM w a JOIN w b ON a.w = b.w AND a.doc_id < b.doc_id
-              |  GROUP BY 1, 2),
-              |j AS (SELECT id1, id2,
-              |    (inter * 1000000) // (n1 + n2 - inter) AS jac_ppm
-              |  FROM ex
-              |  WHERE (inter * 1000000) // (n1 + n2 - inter) >= 50000),
-              |signed AS (SELECT doc_id, ${graft.dedup.Dedup.minhashSigSql("sh", 16)} AS sig
-              |  FROM docs),
-              |banded AS (SELECT doc_id, unnest(range(0, 4)) AS band, sig FROM signed),
-              |bh AS (SELECT doc_id, CAST(band AS VARCHAR) || ':' ||
-              |    md5(array_to_string(list_slice(sig, CAST(band*4+1 AS INT),
-              |      CAST(band*4+4 AS INT)), ',')) AS key
-              |  FROM banded),
-              |cand AS (SELECT DISTINCT b1.doc_id AS id1, b2.doc_id AS id2
-              |  FROM bh b1 JOIN bh b2 ON b1.key = b2.key AND b1.doc_id < b2.doc_id),
-              |f AS (SELECT j.jac_ppm,
-              |    CASE WHEN cand.id1 IS NULL THEN 0 ELSE 1 END AS caught
-              |  FROM j LEFT JOIN cand USING (id1, id2))
-              |SELECT jac_ppm // 100000 AS bucket, CAST(count(*) AS BIGINT) AS n_exact,
-              |  CAST(sum(caught) AS BIGINT) AS n_caught,
-              |  (CAST(sum(caught) AS BIGINT) * 1000000) // count(*) AS recall_ppm
-              |FROM f GROUP BY 1 ORDER BY 1""".stripMargin))
+              |$lshRecallSql""".stripMargin))
   )
 }

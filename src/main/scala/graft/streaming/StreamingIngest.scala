@@ -6,6 +6,8 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
+import graft.dedup.Dedup
+
 /** Structured Streaming surface (T1-T6): the reference's unbounded ingest
   * streams (Vert.x ReadStreams with demand-based backpressure) map onto
   * Spark's micro-batch model — backpressure is `maxFilesPerTrigger`/
@@ -77,6 +79,12 @@ object StreamingIngest {
 
   final case class DedupedDoc(docId: Long, text: String, firstSeen: Boolean)
 
+  /** the content-hash state key: md5 of the text, or of its normalized
+    * form ([[graft.dedup.Normalize.normalizeTextJvm]]) */
+  private def contentKey(normalized: Boolean): DocEvent => String =
+    if (normalized) e => Dedup.md5Hex(graft.dedup.Normalize.normalizeTextJvm(e.text))
+    else e => Dedup.md5Hex(e.text)
+
   /** Streaming exact dedup: per content-hash state remembers the first doc
     * id that carried the text; later arrivals are flagged duplicates — the
     * LLM-pipeline dedup operator on an unbounded stream (state is the
@@ -92,15 +100,8 @@ object StreamingIngest {
   def streamingExactDedup(docs: Dataset[DocEvent],
       normalized: Boolean = false): Dataset[DedupedDoc] = {
     import docs.sparkSession.implicits._
-    def md5(s: String): String = {
-      val d = java.security.MessageDigest.getInstance("MD5")
-      d.digest(s.getBytes("UTF-8")).map(b => f"${b & 0xff}%02x").mkString
-    }
-    val key: DocEvent => String =
-      if (normalized) e => md5(graft.dedup.Normalize.normalizeTextJvm(e.text))
-      else e => md5(e.text)
     docs
-      .groupByKey(key)
+      .groupByKey(contentKey(normalized))
       .flatMapGroupsWithState[Long, DedupedDoc](
         org.apache.spark.sql.streaming.OutputMode.Append(),
         GroupStateTimeout.NoTimeout) {
@@ -137,15 +138,8 @@ object StreamingIngest {
   def streamingDupWeights(docs: Dataset[DocEvent],
       normalized: Boolean = true): Dataset[DupWeight] = {
     import docs.sparkSession.implicits._
-    def md5(s: String): String = {
-      val d = java.security.MessageDigest.getInstance("MD5")
-      d.digest(s.getBytes("UTF-8")).map(b => f"${b & 0xff}%02x").mkString
-    }
-    val key: DocEvent => String =
-      if (normalized) e => md5(graft.dedup.Normalize.normalizeTextJvm(e.text))
-      else e => md5(e.text)
     docs
-      .groupByKey(key)
+      .groupByKey(contentKey(normalized))
       .flatMapGroupsWithState[Long, DupWeight](
         org.apache.spark.sql.streaming.OutputMode.Append(),
         GroupStateTimeout.NoTimeout) {
@@ -186,10 +180,6 @@ object StreamingIngest {
     import docs.sparkSession.implicits._
     val ws = java.util.regex.Pattern.compile(
       graft.text.TextFunctions.WhitespaceRegex)
-    def md5(s: String): String = {
-      val d = java.security.MessageDigest.getInstance("MD5")
-      d.digest(s.getBytes("UTF-8")).map(b => f"${b & 0xff}%02x").mkString
-    }
     docs
       .flatMap { e =>
         val w = ws.split(e.text)
@@ -198,7 +188,7 @@ object StreamingIngest {
           (e.docId, i, g.mkString(" "))
         }.toSeq
       }
-      .groupByKey(p => md5(p._3))
+      .groupByKey(p => Dedup.md5Hex(p._3))
       .flatMapGroupsWithState[(Long, Int), PassageVerdict](
         org.apache.spark.sql.streaming.OutputMode.Append(),
         GroupStateTimeout.NoTimeout) {
@@ -215,6 +205,50 @@ object StreamingIngest {
   final case class BandedDoc(docId: Long, bucket: String, sig: Seq[String])
 
   final case class CandidatePair(id1: Long, id2: Long, estJaccard: Double)
+
+  /** shingle, sign and band each arriving document with the batch scalar
+    * kernels — one row per (document, band bucket) */
+  private def bandDocs(docs: Dataset[DocEvent], shingleLen: Int,
+      numHashes: Int, bands: Int): Dataset[BandedDoc] = {
+    import docs.sparkSession.implicits._
+    docs.flatMap { e =>
+      val sh = Dedup.shinglesOf(e.text, shingleLen)
+      if (sh.isEmpty) Nil
+      else {
+        val sig = Dedup.minhashOf(sh, numHashes)
+        Dedup.bandHashesOf(sig, bands, numHashes / bands)
+          .map(b => BandedDoc(e.docId, b, sig))
+      }
+    }
+  }
+
+  /** The bucket step of both streaming LSH operators: in docId order, each
+    * arrival not yet a member (and while the bucket holds fewer than
+    * `maxBucketSize`) is compared with every member before it, pairing
+    * those whose signature agreement reaches `threshold`, then admitted.
+    * Returns the pairs and the admitted arrivals, for the caller's store.
+    */
+  private def compareAndAdmit(members: Seq[(Long, Seq[String])],
+      arrivals: Iterator[BandedDoc], threshold: Double,
+      maxBucketSize: Int): (Seq[CandidatePair], Seq[BandedDoc]) = {
+    var cur = members.toVector
+    val out = Seq.newBuilder[CandidatePair]
+    val admitted = Seq.newBuilder[BandedDoc]
+    arrivals.toSeq.sortBy(_.docId).foreach { d =>
+      if (!cur.exists(_._1 == d.docId) && cur.size < maxBucketSize) {
+        cur.foreach { case (oid, osig) =>
+          val agree = d.sig.zip(osig).count { case (a, b) => a == b }
+          val est = agree.toDouble / d.sig.length
+          if (est >= threshold)
+            out += CandidatePair(math.min(d.docId, oid),
+              math.max(d.docId, oid), est)
+        }
+        cur = cur :+ ((d.docId, d.sig))
+        admitted += d
+      }
+    }
+    (out.result(), admitted.result())
+  }
 
   /** Streaming MinHash-LSH near-duplicate detection — the stateful twin of
     * `Dedup.nearDuplicatesMinhashLsh`: each arriving document is shingled,
@@ -255,17 +289,7 @@ object StreamingIngest {
       maxBucketSize: Int = 1000, memberTtlMs: Long = 0L,
       clock: Option[() => Long] = None): Dataset[CandidatePair] = {
     import docs.sparkSession.implicits._
-    import graft.dedup.Dedup
-    val banded = docs.flatMap { e =>
-      val sh = Dedup.shinglesOf(e.text, shingleLen)
-      if (sh.isEmpty) Nil
-      else {
-        val sig = Dedup.minhashOf(sh, numHashes)
-        Dedup.bandHashesOf(sig, bands, numHashes / bands)
-          .map(b => BandedDoc(e.docId, b, sig))
-      }
-    }
-    banded
+    bandDocs(docs, shingleLen, numHashes, bands)
       .groupByKey(_.bucket)
       .flatMapGroupsWithState[Seq[(Long, Seq[String], Long)], CandidatePair](
         OutputMode.Append(), GroupStateTimeout.NoTimeout) {
@@ -274,21 +298,10 @@ object StreamingIngest {
             .getOrElse(state.getCurrentProcessingTimeMs())
           var members = state.getOption.getOrElse(Seq.empty)
           if (memberTtlMs > 0) members = members.filter(now - _._3 <= memberTtlMs)
-          val out = Seq.newBuilder[CandidatePair]
-          batch.toSeq.sortBy(_.docId).foreach { d =>
-            if (!members.exists(_._1 == d.docId) && members.size < maxBucketSize) {
-              members.foreach { case (oid, osig, _) =>
-                val agree = d.sig.zip(osig).count { case (a, b) => a == b }
-                val est = agree.toDouble / d.sig.length
-                if (est >= threshold)
-                  out += CandidatePair(math.min(d.docId, oid),
-                    math.max(d.docId, oid), est)
-              }
-              members = members :+ ((d.docId, d.sig, now))
-            }
-          }
-          state.update(members)
-          out.result().iterator
+          val (pairs, admitted) = compareAndAdmit(
+            members.map(m => (m._1, m._2)), batch, threshold, maxBucketSize)
+          state.update(members ++ admitted.map(d => (d.docId, d.sig, now)))
+          pairs.iterator
       }
   }
 
@@ -314,16 +327,6 @@ object StreamingIngest {
       numHashes: Int = 16, bands: Int = 4, threshold: Double = 0.5,
       maxBucketSize: Int = 1000): Dataset[CandidatePair] = {
     import docs.sparkSession.implicits._
-    import graft.dedup.Dedup
-    val banded = docs.flatMap { e =>
-      val sh = Dedup.shinglesOf(e.text, shingleLen)
-      if (sh.isEmpty) Nil
-      else {
-        val sig = Dedup.minhashOf(sh, numHashes)
-        Dedup.bandHashesOf(sig, bands, numHashes / bands)
-          .map(b => BandedDoc(e.docId, b, sig))
-      }
-    }
     val processor =
       new org.apache.spark.sql.streaming.StatefulProcessor[
           String, BandedDoc, CandidatePair] {
@@ -338,27 +341,17 @@ object StreamingIngest {
             tv: org.apache.spark.sql.streaming.TimerValues)
             : Iterator[CandidatePair] = {
           // the store already filtered expired members out of the read
-          var cur = members.get().toVector
-          val out = Seq.newBuilder[CandidatePair]
-          rows.toSeq.sortBy(_.docId).foreach { d =>
-            if (!cur.exists(_.docId == d.docId) && cur.size < maxBucketSize) {
-              cur.foreach { m =>
-                val agree = d.sig.zip(m.sig).count { case (a, b) => a == b }
-                val est = agree.toDouble / d.sig.length
-                if (est >= threshold)
-                  out += CandidatePair(math.min(d.docId, m.docId),
-                    math.max(d.docId, m.docId), est)
-              }
-              members.appendValue(LshMember(d.docId, d.sig))
-              cur = cur :+ LshMember(d.docId, d.sig)
-            }
-          }
-          out.result().iterator
+          val (pairs, admitted) = compareAndAdmit(
+            members.get().map(m => (m.docId, m.sig)).toSeq, rows, threshold,
+            maxBucketSize)
+          admitted.foreach(d => members.appendValue(LshMember(d.docId, d.sig)))
+          pairs.iterator
         }
       }
-    banded.groupByKey(_.bucket).transformWithState(processor,
-      org.apache.spark.sql.streaming.TimeMode.ProcessingTime(),
-      OutputMode.Append())
+    bandDocs(docs, shingleLen, numHashes, bands).groupByKey(_.bucket)
+      .transformWithState(processor,
+        org.apache.spark.sql.streaming.TimeMode.ProcessingTime(),
+        OutputMode.Append())
   }
 
   /** Streaming decontamination: drop stream documents sharing any word
@@ -370,7 +363,6 @@ object StreamingIngest {
   def streamingDecontaminate(docs: Dataset[DocEvent],
       bench: org.apache.spark.sql.DataFrame, textCol: String,
       n: Int = 3): Dataset[DocEvent] = {
-    import graft.dedup.Dedup
     val grams = bench.select(org.apache.spark.sql.functions.col(textCol))
       .na.drop().collect()
       .iterator.flatMap(r => Dedup.shinglesOf(r.getString(0), n)).toSet

@@ -6,7 +6,7 @@ import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.dedup.Dedup
+import graft.dedup.{Dedup, DedupHof}
 import graft.text.TextFunctions
 
 /** Property tests: the single-pass scalar kernels must agree exactly with
@@ -51,8 +51,8 @@ class DedupKernelSpec extends AnyFunSuite {
     val colSide = df.select(col("id"),
         TextFunctions.shingles(TextFunctions.tokens(col("text")), 3).as("sh"))
       .filter(size(col("sh")) > 0)
-      .withColumn("sig", Dedup.minhashSignature(col("sh"), 8))
-      .withColumn("bands", Dedup.lshBandHashes(col("sig"), 4, 2))
+      .withColumn("sig", DedupHof.minhashSignature(col("sh"), 8))
+      .withColumn("bands", DedupHof.lshBandHashes(col("sig"), 4, 2))
       .collect()
       .map(r => r.getLong(0) ->
         (r.getSeq[String](2), r.getSeq[org.apache.spark.sql.Row](3)))

@@ -68,6 +68,23 @@ class OaiHarvestSpec extends AnyFunSuite {
     assert(p1.resumptionToken.contains("MzM5OzE7Ozt2MS4w"))
   }
 
+  test("a record holding a comment and a processing instruction parses " +
+      "like the record without them") {
+    val plain = page(Seq(("r1", "2024-01-01", false), ("r2", "2024-01-02", false)),
+      Some("tok"))
+    val noisy = plain
+      .replace("<leader>", "<!-- harvested copy --><leader>")
+      .replace("<subfield code=\"a\">Title r1",
+        "<?cataloguer note?><subfield code=\"a\">Title r1")
+    assert(noisy.contains("<!--") && noisy.contains("<?cataloguer"))
+    val a = OaiHarvest.parseResponse(plain)
+    val b = OaiHarvest.parseResponse(noisy)
+    assert(a.records.length == 2 && a.records.forall(_.marc.isDefined))
+    assert(b == a)
+    assert(b.records.head.marc.exists(
+      _.firstSubfield("245", "a").contains("Title r1")))
+  }
+
   test("two-page harvest ingests all records and bumps the watermark") {
     val r = freshReservoir()
     val pages = Map(

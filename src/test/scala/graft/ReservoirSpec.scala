@@ -434,6 +434,29 @@ class ReservoirSpec extends AnyFunSuite {
     assert(listing(r.listRecords("issn", limit = 1000)).isEmpty)
   }
 
+  test("clusterById matches the id verbatim: quotes and backslashes cannot " +
+      "widen the query") {
+    val r = freshReservoir()
+    r.ingest(batchDf(
+      rec("S101", "SOURCE-1", 1, Seq("01")),
+      rec("S102", "SOURCE-1", 1, Seq("02")),
+      rec("T201", "SOURCE-2", 1, Seq("03"))))
+    val ids = r.clusters("issn").collect().map(_.getString(0))
+    assert(ids.length == 3)
+    for (evil <- Seq("""x" or sourceId = "SOURCE-1""",
+        """x\" or sourceId = \"SOURCE-1""", "\"", "\\", """x" or cql.allRecords = "1"""))
+      assert(r.clusterById("issn", evil).collect().isEmpty, evil)
+    ids.foreach { id =>
+      val hit = r.clusterById("issn", id).collect()
+      assert(hit.map(_.getString(0)).toSeq == Seq(id))
+      // GetRecord: the datestamp and members of one snapshot
+      val item = r.getOaiRecord("issn", id)
+      assert(item.exists(i => !i.deleted && i.metadataXml.isDefined), id)
+      assert(item.map(_.datestamp) == Some(hit.head.getTimestamp(1)))
+    }
+    assert(r.getOaiRecord("issn", "no-such-cluster").isEmpty)
+  }
+
   test("a pool step collects its dirty buckets in at most two Spark jobs") {
     val r = freshReservoir()
     r.ingest(batchDf(rec("S1", "SRC", 1, Seq("a")), rec("S2", "SRC", 1, Seq("b"))))

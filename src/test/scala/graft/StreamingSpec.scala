@@ -257,6 +257,40 @@ class StreamingSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
+  test("streaming and batch LSH agree on candidates: one uncapped micro-batch " +
+      "at threshold 0 pairs exactly the batch kernel's candidate pairs") {
+    import spark.implicits._
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    import graft.dedup.Dedup
+    import graft.streaming.StreamingIngest.{CandidatePair, DocEvent}
+    val words = Seq("alpha", "beta", "gamma", "delta", "epsilon", "zeta",
+      "eta", "theta")
+    val rnd = new scala.util.Random(7)
+    // near-copies of a few stems, so buckets collide without being identical
+    val docs = (1L to 40L).map { id =>
+      val stem = words.drop((id % 3).toInt) ++ words.take((id % 3).toInt)
+      val text = stem.map(w => if (rnd.nextInt(4) == 0) w + rnd.nextInt(3) else w)
+      DocEvent(id, text.mkString(" "))
+    } :+ DocEvent(41L, "too short") :+ DocEvent(42L, "")
+    val input = MemoryStream[DocEvent](spark)
+    val out = StreamingIngest.streamingNearDupLsh(input.toDS(),
+      threshold = 0.0, maxBucketSize = Int.MaxValue)
+    val q = out.writeStream.outputMode("append")
+      .format("memory").queryName("lsh_twin_out").start()
+    try {
+      input.addData(docs: _*)
+      q.processAllAvailable()
+      val streamed = spark.table("lsh_twin_out").as[CandidatePair].collect()
+        .map(p => (p.id1, p.id2)).toSet
+      val banded = Dedup.bandKeys(
+        Dedup.docShingles(docs.toDF(), "docId", "text", 3), 16, 4)
+      val batch = Dedup.candidatePairs(banded).collect()
+        .map(r => (r.getLong(0), r.getLong(1))).toSet
+      assert(batch.nonEmpty && batch.size < 40 * 39 / 2, batch.size.toString)
+      assert(streamed == batch)
+    } finally q.stop()
+  }
+
   test("streaming LSH member TTL evicts stale bucket members (windowed mode)") {
     import spark.implicits._
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
