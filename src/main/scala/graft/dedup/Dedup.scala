@@ -788,32 +788,11 @@ object Dedup {
 
   /** 16-bit SimHash over the token multiset. Bit b is set when the sum of
     * ±1 votes (per-token md5 bit b) is positive. Single-pass native kernel
-    * (one md5 per token); [[simhash16Hof]] is the executable spec it must
-    * match (DedupKernelSpec pins equality).
+    * (one md5 per token); `DedupHof.simhash16Hof` (test scope) is the
+    * executable spec it must match (DedupKernelSpec pins equality).
     */
   def simhash16(toks: Column): Column =
     graft.expressions.DedupExpressions.simhash16(toks)
-
-  /** The per-bit HOF formulation simhash16 had through r16 — SIXTEEN
-    * `aggregate` traversals, each re-computing `md5(w)` per token to read
-    * one nibble (measured 10× the query median at sf0.1; r17 optimization
-    * round). Kept as the executable spec of the bit semantics — pure
-    * built-in expressions, trivially auditable against the DuckDB oracle
-    * SQL, and the reference DedupKernelSpec compares the kernel to.
-    */
-  private[graft] def simhash16Hof(toks: Column): Column = {
-    def bitOf(w: Column, b: Int): Column = {
-      val nib = (instr(lit("0123456789abcdef"),
-        substring(md5(w), b / 4 + 1, 1)) - 1).cast("int")
-      val shifted = Seq(8, 4, 2, 1)(b % 4)
-      (nib / shifted).cast("int") % 2
-    }
-    (0 until 16).map { b =>
-      val votes = aggregate(toks, lit(0),
-        (acc, w) => acc + when(bitOf(w, b) === 1, 1).otherwise(-1))
-      when(votes > 0, lit(1 << b)).otherwise(lit(0))
-    }.reduce(_ + _)
-  }
 
   /** SimHash near-dup pairs: hamming distance ≤ maxHamming over 16-bit
     * simhashes, id1 < id2.

@@ -28,7 +28,7 @@ object MethodAgreement {
     val withH = graft.operators.Parallelism.ensure(
         df.select(col(idCol).cast("long").as("doc_id"), col(textCol).as("_t")))
       .select(col("doc_id"), md5(col("_t")).as("_rh"),
-        md5(Normalize.normalizeText(col("_t"))).as("_nh"))
+        Normalize.contentHash(col("_t")).as("_nh"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val rawG = withH.groupBy(col("_rh")).agg(count(lit(1)).as("_rc"))
     val nrmG = withH.groupBy(col("_nh")).agg(count(lit(1)).as("_nc"))

@@ -37,21 +37,35 @@ object Normalize {
         "[^a-z0-9 \\t\\n\\r\\f]+", " "),
       "[ \\t\\n\\r\\f]+", " "))
 
-  /** Executor-side JVM twin of [[normalizeText]] for typed streaming
-    * state keys ([[graft.streaming.StreamingIngest.streamingExactDedup]]):
-    * same ASCII casefold, the same Java-regex replaces Spark's
-    * `regexp_replace` runs, and a space-only trim (post-collapse the edges
-    * hold at most single spaces, so this equals Spark's `trim`). A spec
-    * pins column ≡ JVM on generated strings so the three engines (Spark
-    * SQL, DuckDB, streaming state) can never disagree on the canonical
-    * key.
+  /** The exact-dedup group key: md5 of the UTF-8 bytes of the normalized
+    * text (equal to `md5(normalizeText(text))`, whose implicit cast also
+    * encodes UTF-8). Every normalized exact-dedup caller, batch and
+    * streaming, groups on this one column; a null text hashes to null. */
+  private[graft] def contentHash(text: Column): Column =
+    md5(encode(normalizeText(text), "UTF-8"))
+
+  /** The canonical document per normalized content hash: the min-`idCol`
+    * row of each [[contentHash]] group, as `idCol` plus the `carried`
+    * columns (and the hash as `keyAs`, when given). ONE narrow aggregate —
+    * `min(struct(id, carried…))` picks the min-id row, since ids are
+    * unique and a struct orders by its fields in order — so normalize+md5
+    * runs once per document, nothing corpus-sized is persisted or joined
+    * back, and the one exchange carries (hash, id, carried…), never text.
+    * (Through r16 this was a persisted (id, carried, hash) frame, a
+    * min(id) aggregate, a join back on the hash and an `id = canon`
+    * filter: one persist, one join and one exchange more.) Callers that
+    * read the result more than once persist it.
     */
-  def normalizeTextJvm(s: String): String =
-    if (s == null) null
-    else s.map(c => if (c >= 'A' && c <= 'Z') (c + 32).toChar else c)
-      .replaceAll("[^a-z0-9 \\t\\n\\r\\f]+", " ")
-      .replaceAll("[ \\t\\n\\r\\f]+", " ")
-      .stripPrefix(" ").stripSuffix(" ")
+  private[graft] def canonicalDocs(docs: DataFrame, idCol: String,
+      textCol: String, carried: Seq[String],
+      keyAs: Option[String] = None): DataFrame = {
+    val fields = (idCol +: carried).map(col)
+    docs.select(fields :+ contentHash(col(textCol)).as("_graft_grp"): _*)
+      .groupBy(col("_graft_grp"))
+      .agg(min(struct(fields: _*)).as("_graft_c"))
+      .select((idCol +: carried).map(f => col(s"_graft_c.$f").as(f)) ++
+        keyAs.map(col("_graft_grp").as(_)): _*)
+  }
 
   /** DuckDB twin of [[normalizeText]] over a SQL expression */
   def normalizeSql(expr: String): String =
@@ -71,7 +85,7 @@ object Normalize {
     // probe (the q62/q119 single-scan lesson)
     val base = df.select(col(idCol).cast("long").as("doc_id"),
         md5(col(textCol)).as("_graft_rh"),
-        md5(normalizeText(col(textCol))).as("_graft_nh"))
+        contentHash(col(textCol)).as("_graft_nh"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val rawGroups = base.groupBy(col("_graft_rh"))
       .agg(count(lit(1)).as("raw_group_size"))

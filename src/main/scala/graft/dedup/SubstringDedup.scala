@@ -301,6 +301,15 @@ object SubstringDedup {
         col("span_words"), col("span_hash"),
         (col("_graft_rn") === 1).as("kept"))
 
+  /** The keep-one strip's spans → verdicts step over a token frame:
+    * [[crossDocSpans]] then [[dedupVerdicts]], the input every
+    * keep-one consumer ([[applyKeepOne]], [[keepOneStripped]],
+    * [[keepOneTokenFrame]]) reads alongside the same token frame.
+    */
+  private[graft] def keepOneVerdicts(toks: DataFrame, idCol: String,
+      minWords: Int = 50, minDocs: Int = 2): DataFrame =
+    dedupVerdicts(crossDocSpans(toks, idCol, minWords, minDocs), idCol)
+
   /** MATERIALIZE the keep-one policy — the step that actually emits
     * training data: re-slice every document's tokens dropping the words of
     * each `kept = false` span from [[dedupVerdicts]], leaving canonical

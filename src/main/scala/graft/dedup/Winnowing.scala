@@ -28,8 +28,9 @@ object Winnowing {
 
   /** distinct (idCol, fingerprint) rows per document; documents shorter
     * than k + w − 1 chars produce none. Runs the single-pass native kernel
-    * ([[graft.expressions.WinnowExpr]]); [[fingerprintsHof]] is the
-    * built-in-functions formulation it is property-pinned against.
+    * ([[graft.expressions.WinnowExpr]]); `DedupHof.fingerprintsHof` (test
+    * scope) is the built-in-functions formulation it is property-pinned
+    * against.
     */
   def fingerprints(df: DataFrame, idCol: String, textCol: String,
       k: Int = 5, w: Int = 4): DataFrame = {
@@ -41,27 +42,6 @@ object Winnowing {
       .select(col(idCol),
         explode(graft.expressions.DedupExpressions
           .winnowFingerprints(col(textCol), k, w)).as("fingerprint"))
-  }
-
-  /** [[fingerprints]] expressed purely in built-in functions — one `md5`
-    * per gram, `slice`+`array_min` per window. O(len·w) allocations per
-    * row vs the kernel's O(len); kept as the executable specification the
-    * kernel is property-tested against (and the shape the DuckDB oracle
-    * mirrors), not as the production path.
-    */
-  private[graft] def fingerprintsHof(df: DataFrame, idCol: String,
-      textCol: String, k: Int = 5, w: Int = 4): DataFrame = {
-    require(k >= 2 && w >= 1, s"bad k=$k w=$w")
-    val text = col(textCol)
-    val hashes: Column = transform(
-      sequence(lit(0), length(text) - k),
-      i => substring(md5(text.substr(i + 1, lit(k))), 1, 16))
-    df.filter(length(text) >= k + w - 1)
-      .select(col(idCol), hashes.as("_hs"))
-      .select(col(idCol), transform(
-        sequence(lit(0), size(col("_hs")) - w),
-        j => array_min(slice(col("_hs"), j + 1, lit(w)))).as("_mins"))
-      .select(col(idCol), explode(array_distinct(col("_mins"))).as("fingerprint"))
   }
 
   /** [[fingerprints]] with bounded per-row memory: the text is split into

@@ -45,7 +45,7 @@ object DedupExpressions {
     GraftSqlBridge.column(WinnowExpr(GraftSqlBridge.expression(text), k, w))
 
   /** tokens → 16-bit SimHash (single-pass native form of the per-bit HOF
-    * aggregate chain [[graft.dedup.Dedup.simhash16Hof]])
+    * aggregate chain `DedupHof.simhash16Hof`, test scope)
     */
   def simhash16(tokens: Column): Column =
     GraftSqlBridge.column(SimHash16Expr(GraftSqlBridge.expression(tokens)))
@@ -147,7 +147,7 @@ case class MinHashSigExpr(child: Expression, k: Int)
 
 /** Single-pass winnowing kernel: all k-gram md5 prefixes, the w-window
   * sliding minimum, and the per-document distinct in ONE traversal of the
-  * input bytes. The HOF formulation (`Winnowing.fingerprintsHof`, kept as
+  * input bytes. The HOF formulation (`DedupHof.fingerprintsHof`, kept as
   * the executable spec) pays per gram: a `substring` UTF8String copy, a
   * fresh MessageDigest inside Spark's `md5`, a 32-char hex UTF8String plus
   * its 16-char prefix copy, and per WINDOW a w-element `slice` array — all
@@ -256,7 +256,7 @@ object WinnowExpr {
 }
 
 /** Single-pass 16-bit SimHash kernel (r17 optimization round): the HOF
-  * formulation ([[graft.dedup.Dedup.simhash16Hof]], kept as the executable
+  * formulation (`DedupHof.simhash16Hof`, kept as the executable
   * spec) runs SIXTEEN `aggregate` traversals of the token array — one per
   * output bit — and each lambda evaluates a full `md5(w)` just to read one
   * hex nibble, so every token is digested 16 times (measured: q26 6.5 s at

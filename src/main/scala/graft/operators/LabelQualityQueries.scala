@@ -18,6 +18,13 @@ import graft.text.TextFunctions
   */
 object LabelQualityQueries {
 
+  /** the q200/q214 oracles' normalized exact dedup: `kept` is every
+    * column of `b` for each normalized-hash group's min doc_id */
+  private val canonKeptCte =
+    s"""${TextDedupQueries.canonCte},
+       |kept AS (SELECT b.* FROM b JOIN canon USING (grp)
+       |  WHERE doc_id = cid)""".stripMargin
+
   def all: Seq[Q] = Seq(
 
     // ---- kNN label-noise screen: per-probe agreement between its own
@@ -280,9 +287,8 @@ object LabelQualityQueries {
       (s, d) => {
         val t = Tables(s, d)
         t.documents
-          .select(md5(encode(
-            graft.dedup.Normalize.normalizeText(col("text")), "UTF-8"))
-            .as("h"), col("source"))
+          .select(graft.dedup.Normalize.contentHash(col("text")).as("h"),
+            col("source"))
           .groupBy(col("h"))
           .agg(count(lit(1)).as("group_size"),
             countDistinct(col("source")).as("n_sources"))
@@ -349,8 +355,7 @@ object LabelQualityQueries {
         val t = Tables(s, d)
         val keyed = t.documents.select(col("doc_id"), col("lang"),
           col("source"),
-          md5(encode(graft.dedup.Normalize.normalizeText(col("text")),
-            "UTF-8")).as("grp"))
+          graft.dedup.Normalize.contentHash(col("text")).as("grp"))
         graft.sampling.Sampling.cvFoldAssign(keyed, col("grp"), 5, "cv")
           .groupBy(col("fold"), col("source"))
           .agg(count(lit(1)).as("n_docs"),
@@ -386,23 +391,9 @@ object LabelQualityQueries {
     Q("q200_curation_v2",
       (s, d) => {
         val t = Tables(s, d)
-        // slim frames persisted (r14 composition finding): canon agg +
-        // probe otherwise EACH re-normalize the corpus, and madKeep
-        // references its input twice more
-        // r17: canonical row per grp = ONE narrow min(struct) aggregate
-        // (ids unique; struct order is field order) — no corpus-frame
-        // persist, no join-back (the q212 rewrite)
-        val kept = t.documents.select(col("doc_id"), col("lang"),
-            col("source"), col("n_chars"),
-            md5(encode(graft.dedup.Normalize.normalizeText(col("text")),
-              "UTF-8")).as("grp"))
-          .groupBy(col("grp"))
-          .agg(min(struct(col("doc_id"), col("lang"), col("source"),
-            col("n_chars"))).as("_graft_c"))
-          .select(col("_graft_c.doc_id").as("doc_id"),
-            col("_graft_c.lang").as("lang"),
-            col("_graft_c.source").as("source"),
-            col("_graft_c.n_chars").as("n_chars"), col("grp"))
+        // kept persisted: madKeep references its input twice more
+        val kept = graft.dedup.Normalize.canonicalDocs(t.documents,
+            "doc_id", "text", Seq("lang", "source", "n_chars"), Some("grp"))
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         val screened = graft.curation.RobustStats.madKeep(
           kept, "source", "n_chars", kTenths = 35)
@@ -421,9 +412,7 @@ object LabelQualityQueries {
         s"""WITH b AS (SELECT doc_id, lang, source, n_chars,
            |    md5(${graft.dedup.Normalize.normalizeSql("text")}) AS grp
            |  FROM documents),
-           |canon AS (SELECT grp, min(doc_id) AS cid FROM b GROUP BY grp),
-           |kept AS (SELECT b.* FROM b JOIN canon USING (grp)
-           |  WHERE doc_id = cid),
+           |$canonKeptCte,
            |r AS (SELECT source, n_chars,
            |    CAST(row_number() OVER (PARTITION BY source ORDER BY n_chars)
            |      AS BIGINT) AS rn,
@@ -747,26 +736,16 @@ object LabelQualityQueries {
         val toksL = TextFunctions.tokens(lower(col("text")))
         val stops = TextFunctions.DefaultStopwords
         val base = t.documents.select(col("doc_id"), col("lang"),
-          col("n_chars"),
-          md5(encode(graft.dedup.Normalize.normalizeText(col("text")),
-            "UTF-8")).as("grp"),
+          col("n_chars"), col("text"),
           TextFunctions.integralDiv(
             size(filter(toksL, x => x.isin(stops.map(v => v: Any): _*)))
               .cast("long") * 1000000L,
             greatest(size(toksL).cast("long"), lit(1L))).as("score"))
-        // r17: canonical row per grp = ONE narrow min(struct) aggregate
-        // (the q212 rewrite — normalize+md5+tokenize run exactly once per
-        // row inside this aggregate, so the separate base persist goes).
-        // kept stays persisted: calibratedKeep reads its input twice
-        // (threshold derivation + the final filter).
-        val kept = base
-          .groupBy(col("grp"))
-          .agg(min(struct(col("doc_id"), col("lang"), col("n_chars"),
-            col("score"))).as("_graft_c"))
-          .select(col("_graft_c.doc_id").as("doc_id"),
-            col("_graft_c.lang").as("lang"),
-            col("_graft_c.n_chars").as("n_chars"), col("grp"),
-            col("_graft_c.score").as("score"))
+        // normalize+md5+tokenize run exactly once per row inside the
+        // canonical aggregate; kept stays persisted: calibratedKeep reads
+        // its input twice (threshold derivation + the final filter)
+        val kept = graft.dedup.Normalize.canonicalDocs(base, "doc_id",
+            "text", Seq("lang", "n_chars", "score"), Some("grp"))
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         val screened = Conformal.calibratedKeep(kept, "doc_id",
           col("score"), col("lang") === "en", calFraction = 0.3,
@@ -795,9 +774,7 @@ object LabelQualityQueries {
            |      // greatest(CAST(len(regexp_split_to_array(lower(text),
            |        '\\s+')) AS BIGINT), 1) AS s
            |  FROM documents),
-           |canon AS (SELECT grp, min(doc_id) AS cid FROM b GROUP BY grp),
-           |kept AS (SELECT b.* FROM b JOIN canon USING (grp)
-           |  WHERE doc_id = cid),
+           |$canonKeptCte,
            |cb AS (SELECT *, (lang = 'en') AS lab,
            |    substr(md5('conf:' || CAST(doc_id AS VARCHAR)), 1, 8)
            |      < '$calThr' AS cal

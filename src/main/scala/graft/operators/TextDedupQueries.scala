@@ -91,6 +91,30 @@ object TextDedupQueries {
       |  FROM t LEFT JOIN ka USING (doc_id) LEFT JOIN nrm USING (doc_id))"""
       .stripMargin
 
+  /** DuckDB twin of [[graft.dedup.Normalize.canonicalDocs]]: `canon`
+    * holds each normalized-hash group's min doc_id, over a preceding `b`
+    * (one row per document, its [[graft.dedup.Normalize.contentHash]] twin
+    * as `grp`)
+    */
+  private[operators] val canonCte =
+    "canon AS (SELECT grp, min(doc_id) AS cid FROM b GROUP BY grp)"
+
+  /** the q212-family oracle prefix: normalized exact dedup of `documents`
+    * (`keptd`: doc_id, source, text of each canonical document), then the
+    * keep-one strip over the kept documents ([[keepOneStripCtes]]). The
+    * span and strip fragments are appended unmargined, so the caller's
+    * `stripMargin` treats them exactly as when they were spliced inline.
+    */
+  private val keptStripCtes =
+    s"""b AS (SELECT doc_id, source, text,
+       |    md5(${graft.dedup.Normalize.normalizeSql("text")}) AS grp
+       |  FROM documents),
+       |$canonCte,
+       |keptd AS (SELECT b.doc_id, b.source, b.text FROM b
+       |  JOIN canon USING (grp) WHERE doc_id = cid),
+       |""".stripMargin + substringSpansCteOn("keptd") + ",\n" +
+      keepOneStripCtes
+
   private[operators] val shinglesCte =
     """docs AS (
       |  SELECT doc_id, list_distinct(list_transform(range(1, len(t)-1),
@@ -605,7 +629,7 @@ object TextDedupQueries {
         val t = Tables(s, d)
         graft.dedup.MethodAgreement.bcubed(
             t.documents.select(
-              md5(graft.dedup.Normalize.normalizeText(col("text"))).as("p"),
+              graft.dedup.Normalize.contentHash(col("text")).as("p"),
               md5(col("text")).as("g")),
             col("p"), col("g"))
           .orderBy(col("n_items"))
@@ -703,9 +727,7 @@ object TextDedupQueries {
         val toks = graft.dedup.SubstringDedup
           .tokenFrame(t.documents, "doc_id", "text")
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val spans = graft.dedup.SubstringDedup.crossDocSpans(toks,
-          "doc_id", minWords = 50, minDocs = 2)
-        graft.dedup.SubstringDedup.dedupVerdicts(spans, "doc_id")
+        graft.dedup.SubstringDedup.keepOneVerdicts(toks, "doc_id")
           .orderBy(col("doc_id"), col("span_start"))
       },
       Some(s"""WITH ${substringSpansCte}
@@ -725,9 +747,8 @@ object TextDedupQueries {
         val toks = graft.dedup.SubstringDedup
           .tokenFrame(t.documents, "doc_id", "text")
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val spans = graft.dedup.SubstringDedup.crossDocSpans(toks,
-          "doc_id", minWords = 50, minDocs = 2)
-        val verdicts = graft.dedup.SubstringDedup.dedupVerdicts(spans, "doc_id")
+        val verdicts = graft.dedup.SubstringDedup.keepOneVerdicts(toks,
+          "doc_id")
         graft.dedup.SubstringDedup.applyKeepOne(toks, verdicts, "doc_id")
           .orderBy(col("doc_id"))
       },
@@ -744,38 +765,22 @@ object TextDedupQueries {
     Q("q212_curation_v3",
       (s, d) => {
         val t = Tables(s, d)
-        // Caching discipline (the r14 composition finding, StageProbe):
-        // Spark never dedupes common subplans, so every reference to the
-        // strip output would re-run the whole span chain. Persist the
-        // kept-id projection and the per-doc strip audit, and rebuild the
-        // kept TEXT via an id semi-join (no re-normalization). Cold 10×
-        // dropped ~54 s → ~stage sum.
-        //
-        // r17 optimization round: the canonical row per normalized hash
-        // comes from ONE narrow aggregate — min(struct(id, source)) picks
-        // the min-id row (ids unique; struct order is field order) — where
-        // the r14 shape materialized a persisted (id, source, grp) frame,
-        // aggregated it, joined it back on grp, and filtered id = canon.
-        // That drops a corpus-sized persist, a join, and an exchange from
-        // the pipeline's critical path: normalize+md5 now evaluates
-        // exactly once per document WITHOUT needing the cache, and the one
-        // exchange that remains carries (grp, id, source) — never text.
-        val keptIds = t.documents.select(col("doc_id"), col("source"),
-            md5(encode(graft.dedup.Normalize.normalizeText(col("text")),
-              "UTF-8")).as("grp"))
-          .groupBy(col("grp"))
-          .agg(min(struct(col("doc_id"), col("source"))).as("_graft_c"))
-          .select(col("_graft_c.doc_id").as("doc_id"),
-            col("_graft_c.source").as("source"))
+        // Caching discipline (the r14 composition finding): Spark never
+        // dedupes common subplans, so every reference to the strip output
+        // would re-run the whole span chain. Persist the kept-id projection
+        // and the per-doc strip audit, and rebuild the kept TEXT via an id
+        // semi-join (no re-normalization). Cold 10× dropped ~54 s → ~stage
+        // sum.
+        val keptIds = graft.dedup.Normalize.canonicalDocs(t.documents,
+            "doc_id", "text", Seq("source"))
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         val kept = t.documents.select(col("doc_id"), col("text"))
           .join(keptIds.select(col("doc_id")), "doc_id")
         val toks = graft.dedup.SubstringDedup
           .tokenFrame(kept, "doc_id", "text")
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val spans = graft.dedup.SubstringDedup.crossDocSpans(toks,
-          "doc_id", minWords = 50, minDocs = 2)
-        val verdicts = graft.dedup.SubstringDedup.dedupVerdicts(spans, "doc_id")
+        val verdicts = graft.dedup.SubstringDedup.keepOneVerdicts(toks,
+          "doc_id")
         val stripped = graft.dedup.SubstringDedup
           .applyKeepOne(toks, verdicts, "doc_id")
           .join(keptIds, "doc_id")
@@ -798,14 +803,7 @@ object TextDedupQueries {
           .orderBy(col("g"))
       },
       Some {
-        s"""WITH b AS (SELECT doc_id, source, text,
-           |    md5(${graft.dedup.Normalize.normalizeSql("text")}) AS grp
-           |  FROM documents),
-           |canon AS (SELECT grp, min(doc_id) AS cid FROM b GROUP BY grp),
-           |keptd AS (SELECT b.doc_id, b.source, b.text FROM b
-           |  JOIN canon USING (grp) WHERE doc_id = cid),
-           |${substringSpansCteOn("keptd")},
-           |$keepOneStripCtes,
+        s"""WITH $keptStripCtes,
            |j AS (SELECT st.*, k.source FROM stripped st
            |  JOIN keptd k USING (doc_id)),
            |r AS (SELECT source, n_tokens_after,
@@ -874,14 +872,7 @@ object TextDedupQueries {
           .orderBy(col("g"))
       },
       Some {
-        s"""WITH b AS (SELECT doc_id, source, text,
-           |    md5(${graft.dedup.Normalize.normalizeSql("text")}) AS grp
-           |  FROM documents),
-           |canon AS (SELECT grp, min(doc_id) AS cid FROM b GROUP BY grp),
-           |keptd AS (SELECT b.doc_id, b.source, b.text FROM b
-           |  JOIN canon USING (grp) WHERE doc_id = cid),
-           |${substringSpansCteOn("keptd")},
-           |$keepOneStripCtes,
+        s"""WITH $keptStripCtes,
            |j AS (SELECT st.*, k.source FROM stripped st
            |  JOIN keptd k USING (doc_id))
            |SELECT source AS g, CAST(count(*) AS BIGINT) AS n_docs,
@@ -934,14 +925,7 @@ object TextDedupQueries {
           .orderBy(col("doc_id"))
       },
       Some {
-        s"""WITH b AS (SELECT doc_id, source, text,
-           |    md5(${graft.dedup.Normalize.normalizeSql("text")}) AS grp
-           |  FROM documents),
-           |canon AS (SELECT grp, min(doc_id) AS cid FROM b GROUP BY grp),
-           |keptd AS (SELECT b.doc_id, b.source, b.text FROM b
-           |  JOIN canon USING (grp) WHERE doc_id = cid),
-           |${substringSpansCteOn("keptd")},
-           |$keepOneStripCtes,
+        s"""WITH $keptStripCtes,
            |kat AS (SELECT doc_id, string_agg(tok, ' ' ORDER BY p)
            |    AS text_after FROM keptt GROUP BY doc_id),
            |store0 AS (SELECT k.doc_id, k.source, st.n_tokens_before,
@@ -1027,14 +1011,7 @@ object TextDedupQueries {
           .orderBy(col("source"))
       },
       Some {
-        s"""WITH b AS (SELECT doc_id, source, text,
-           |    md5(${graft.dedup.Normalize.normalizeSql("text")}) AS grp
-           |  FROM documents),
-           |canon AS (SELECT grp, min(doc_id) AS cid FROM b GROUP BY grp),
-           |keptd AS (SELECT b.doc_id, b.source, b.text FROM b
-           |  JOIN canon USING (grp) WHERE doc_id = cid),
-           |${substringSpansCteOn("keptd")},
-           |$keepOneStripCtes,
+        s"""WITH $keptStripCtes,
            |kat AS (SELECT doc_id, string_agg(tok, ' ' ORDER BY p)
            |    AS text_after FROM keptt GROUP BY doc_id),
            |v1 AS (SELECT k.doc_id, k.source,
@@ -1203,9 +1180,8 @@ object TextDedupQueries {
             .gramStartsFromTokens(toks, "doc_id", "_graft_toks", 8))
           .select(col("g"), col("grams").as("grams_before"),
             col("risky").as("risky_before"))
-        val verdicts = graft.dedup.SubstringDedup.dedupVerdicts(
-          graft.dedup.SubstringDedup.crossDocSpans(toks, "doc_id",
-            minWords = 50, minDocs = 2), "doc_id")
+        val verdicts = graft.dedup.SubstringDedup.keepOneVerdicts(toks,
+          "doc_id")
         val after = census(graft.dedup.DupSpans.gramStartsFromTokens(
             graft.dedup.SubstringDedup.keepOneTokenFrame(toks, verdicts,
               "doc_id"), "doc_id", "_graft_toks", 8))
@@ -1304,26 +1280,17 @@ object TextDedupQueries {
         val s0 = nTok.join(srcOf, "doc_id").groupBy(col("source").as("g"))
           .agg(sum(col("n_tok")).as("tokens_raw"))
         // kept-id + strip-audit frames persisted: every reference
-        // otherwise re-runs the span chain (the r14 composition finding).
-        // Canonical row per normalized hash = ONE narrow min(struct)
-        // aggregate (the r17 q212 rewrite: no corpus-frame persist, no
-        // join-back, one exchange carrying (grp, id, source) — never text)
-        val keptIds = t.documents.select(col("doc_id"), col("source"),
-            md5(encode(graft.dedup.Normalize.normalizeText(col("text")),
-              "UTF-8")).as("grp"))
-          .groupBy(col("grp"))
-          .agg(min(struct(col("doc_id"), col("source"))).as("_graft_c"))
-          .select(col("_graft_c.doc_id").as("doc_id"),
-            col("_graft_c.source").as("source"))
+        // otherwise re-runs the span chain (the r14 composition finding)
+        val keptIds = graft.dedup.Normalize.canonicalDocs(t.documents,
+            "doc_id", "text", Seq("source"))
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         val s1 = nTok.join(keptIds, "doc_id")
           .groupBy(col("source").as("g"))
           .agg(sum(col("n_tok")).as("tokens_dedup"))
         val toksKept = tokAll.join(keptIds.select(col("doc_id")), "doc_id")
           .select(col("doc_id"), col("_graft_toks"))
-        val verdicts = graft.dedup.SubstringDedup.dedupVerdicts(
-          graft.dedup.SubstringDedup.crossDocSpans(toksKept, "doc_id",
-            minWords = 50, minDocs = 2), "doc_id")
+        val verdicts = graft.dedup.SubstringDedup.keepOneVerdicts(toksKept,
+          "doc_id")
         val stripped = graft.dedup.SubstringDedup
           .applyKeepOne(toksKept, verdicts, "doc_id")
           .join(keptIds, "doc_id")
@@ -1354,14 +1321,7 @@ object TextDedupQueries {
           .orderBy(col("g"))
       },
       Some {
-        s"""WITH b AS (SELECT doc_id, source, text,
-           |    md5(${graft.dedup.Normalize.normalizeSql("text")}) AS grp
-           |  FROM documents),
-           |canon AS (SELECT grp, min(doc_id) AS cid FROM b GROUP BY grp),
-           |keptd AS (SELECT b.doc_id, b.source, b.text FROM b
-           |  JOIN canon USING (grp) WHERE doc_id = cid),
-           |${substringSpansCteOn("keptd")},
-           |$keepOneStripCtes,
+        s"""WITH $keptStripCtes,
            |rawt AS (SELECT d.source AS g, CAST(sum(len(list_filter(
            |      regexp_split_to_array(text, '\\s+'), x -> x <> '')))
            |    AS BIGINT) AS tokens_raw
@@ -1474,27 +1434,18 @@ object TextDedupQueries {
     Q("q229_curation_lineage",
       (s, d) => {
         val t = Tables(s, d)
-        // canonical row per normalized hash = ONE narrow min(struct)
-        // aggregate (the r17 q212 rewrite); the lineage join below reads
-        // (doc_id, source) straight off the pruned parquet scan — the old
-        // persisted `base` frame existed only to amortize normalize, which
-        // now runs exactly once inside this aggregate
-        val keptIds = t.documents.select(col("doc_id"), col("source"),
-            md5(encode(graft.dedup.Normalize.normalizeText(col("text")),
-              "UTF-8")).as("grp"))
-          .groupBy(col("grp"))
-          .agg(min(struct(col("doc_id"), col("source"))).as("_graft_c"))
-          .select(col("_graft_c.doc_id").as("doc_id"),
-            col("_graft_c.source").as("source"))
+        // the lineage join below reads (doc_id, source) straight off the
+        // pruned parquet scan: normalize runs once, inside canonicalDocs
+        val keptIds = graft.dedup.Normalize.canonicalDocs(t.documents,
+            "doc_id", "text", Seq("source"))
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         val kept = t.documents.select(col("doc_id"), col("text"))
           .join(keptIds.select(col("doc_id")), "doc_id")
         val toks = graft.dedup.SubstringDedup
           .tokenFrame(kept, "doc_id", "text")
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val verdicts = graft.dedup.SubstringDedup.dedupVerdicts(
-          graft.dedup.SubstringDedup.crossDocSpans(toks, "doc_id",
-            minWords = 50, minDocs = 2), "doc_id")
+        val verdicts = graft.dedup.SubstringDedup.keepOneVerdicts(toks,
+          "doc_id")
         val stripped = graft.dedup.SubstringDedup
           .applyKeepOne(toks, verdicts, "doc_id")
           .join(keptIds, "doc_id")
@@ -1521,14 +1472,7 @@ object TextDedupQueries {
           .orderBy(col("doc_id"))
       },
       Some {
-        s"""WITH b AS (SELECT doc_id, source, text,
-           |    md5(${graft.dedup.Normalize.normalizeSql("text")}) AS grp
-           |  FROM documents),
-           |canon AS (SELECT grp, min(doc_id) AS cid FROM b GROUP BY grp),
-           |keptd AS (SELECT b.doc_id, b.source, b.text FROM b
-           |  JOIN canon USING (grp) WHERE doc_id = cid),
-           |${substringSpansCteOn("keptd")},
-           |$keepOneStripCtes,
+        s"""WITH $keptStripCtes,
            |j AS (SELECT st.*, k.source FROM stripped st
            |  JOIN keptd k USING (doc_id)),
            |r AS (SELECT source, n_tokens_after,
@@ -1588,8 +1532,7 @@ object TextDedupQueries {
         // for the scale where gsz outgrows the broadcast threshold.
         val base = t.documents.select(col("doc_id"), col("source"),
           size(filter(toks, x => x =!= lit(""))).cast("long").as("n_tok"),
-          md5(encode(graft.dedup.Normalize.normalizeText(col("text")),
-            "UTF-8")).as("grp"))
+          graft.dedup.Normalize.contentHash(col("text")).as("grp"))
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         val gsz = base.groupBy(col("grp")).agg(count(lit(1)).as("n_copies"))
         base.join(gsz, "grp")

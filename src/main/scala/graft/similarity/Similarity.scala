@@ -17,18 +17,12 @@ import org.apache.spark.sql.functions._
 object Similarity {
 
   /** dot product of two double arrays (sequential fold → deterministic).
-    * Native codegen'd kernel; `dotHof` below is the documented pure-Column
-    * equivalent (bit-identical — VectorExprSpec pins it).
+    * Native codegen'd kernel; `SimilarityHof.dotHof` (test scope) is the
+    * documented pure-Column equivalent (bit-identical — VectorExprSpec
+    * pins it).
     */
   def dot(a: Column, b: Column): Column =
     graft.expressions.VectorColumns.dotProduct(a, b)
-
-  /** the HOF formulation of [[dot]]: what the SQL oracles replicate. Not the
-    * hot path — higher-order functions stay outside whole-stage codegen and
-    * re-allocate the zipped array per evaluation.
-    */
-  def dotHof(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), (acc, x) => acc + x)
 
   /** element-wise widening to double — a native Cast (codegen'd), identical
     * per-element semantics to `transform(v, _.cast("double"))`
@@ -42,10 +36,6 @@ object Similarity {
     */
   def cosine(a: Column, b: Column): Column =
     graft.expressions.VectorColumns.cosineSim(a, b)
-
-  /** the HOF formulation of [[cosine]] (oracle mirror, not the hot path) */
-  def cosineHof(a: Column, b: Column): Column =
-    dotHof(a, b) / (sqrt(dotHof(a, a)) * sqrt(dotHof(b, b)))
 
   /** Rank a scored candidate frame (query_id, neighbor_id, cos) down to the
     * top k per query with the bounded [[graft.operators.BoundedTopKAgg]]: map-side

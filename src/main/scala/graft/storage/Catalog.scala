@@ -538,20 +538,27 @@ final class Catalog(val spark: SparkSession, root: String, tenant: String) {
     // staging writes go to independent directories and nothing is visible
     // until the rename phase below, so a multi-batch group stages from a
     // small thread pool — the next batch's tasks back-fill executors freed
-    // by the current batch's tail instead of idling through it. Job
-    // descriptions are thread-local, failures cancel the group, and every
-    // successfully staged dir is cleaned up on any failure. The
+    // by the current batch's tail instead of idling through it. The pool's
+    // threads are created for this commit and stopped after it, so they
+    // inherit this thread's Spark local properties (job group,
+    // description, call site) and nothing outlives the commit; failures
+    // cancel the group, and every successfully staged dir is cleaned up
+    // on any failure. The
     // claim/rename/manifest sequence stays strictly single-threaded — the
     // crash-window analysis is untouched.
     val staged: Seq[(GroupBatch, Path)] =
       if (batches.size <= 1) batches.map(b => b -> stageBatch(name, b))
       else {
-        import scala.concurrent.{Await, Future}
+        import scala.concurrent.{Await, ExecutionContext, Future}
         import scala.concurrent.duration.Duration
-        implicit val ec = Catalog.stagingEc
-        val futs = batches.map(b =>
-          Future(scala.util.Try(b -> stageBatch(name, b))))
-        val results = Await.result(Future.sequence(futs), Duration.Inf)
+        val pool = Catalog.stagingPool(batches.size)
+        val results =
+          try {
+            implicit val ec = ExecutionContext.fromExecutorService(pool)
+            val futs = batches.map(b =>
+              Future(scala.util.Try(b -> stageBatch(name, b))))
+            Await.result(Future.sequence(futs), Duration.Inf)
+          } finally pool.shutdown()
         if (results.exists(_.isFailure)) {
           results.collect { case scala.util.Success((_, p)) =>
             fs.delete(p, true) }
@@ -749,19 +756,21 @@ object Catalog {
   private[storage] def encodePart(s: String): String =
     java.net.URLEncoder.encode(s, "UTF-8")
 
-  /** Driver-side pool for overlapping a group commit's independent staging
-    * writes (guide §2.6). Small on purpose: 2-3 concurrent jobs fill the
-    * tail of the scheduler FIFO without fighting for executor slots; the
-    * group sizes here are 2-5 batches. Daemon threads so the pool never
-    * blocks JVM exit.
+  /** Driver-side pool for overlapping ONE group commit's independent
+    * staging writes (guide §2.6); the caller shuts it down after the
+    * commit. Small on purpose: 2-3 concurrent jobs fill the tail of the
+    * scheduler FIFO without fighting for executor slots; the group sizes
+    * here are 2-5 batches. Its threads start lazily on the committing
+    * thread, so each clones that thread's Spark local properties. Daemon
+    * threads so the pool never blocks JVM exit.
     */
-  private[storage] val stagingEc: scala.concurrent.ExecutionContext =
-    scala.concurrent.ExecutionContext.fromExecutorService(
-      java.util.concurrent.Executors.newFixedThreadPool(3, r => {
+  private def stagingPool(nBatches: Int) =
+    java.util.concurrent.Executors.newFixedThreadPool(math.min(nBatches, 3),
+      r => {
         val t = new Thread(r, "graft-commit-staging")
         t.setDaemon(true)
         t
-      }))
+      })
 
   /** A temp catalog root registered for recursive deletion at JVM exit —
     * gate queries that end in a committed store (q216/q222) run once per

@@ -59,28 +59,15 @@ object CorpusStore {
     // strip chain on EVERY reference — persist the kept-id projection and
     // the token frame, and rebuild the kept text via an id semi-join,
     // however many consumers the strip chain fans into.
-    //
-    // r17 optimization round: the canonical row per normalized hash comes
-    // from ONE narrow min(struct(id, source)) aggregate (ids unique;
-    // struct order is field order) where the r14 shape persisted a
-    // corpus-sized (id, source, grp) frame, aggregated it, joined it back
-    // on grp, and filtered id = canon — one pass, no corpus-frame persist,
-    // no join, one exchange fewer, and the exchange carries (grp, id,
-    // source), never text. Same rewrite as q212 (TextDedupQueries).
-    val keptIds = docs.select(col(idCol), col(sourceCol),
-        md5(encode(Normalize.normalizeText(col(textCol)), "UTF-8"))
-          .as("_graft_grp"))
-      .groupBy(col("_graft_grp"))
-      .agg(min(struct(col(idCol), col(sourceCol))).as("_graft_c"))
-      .select(col(s"_graft_c.$idCol").as(idCol),
-        col(s"_graft_c.$sourceCol").as(sourceCol))
+    val keptIds = Normalize.canonicalDocs(docs, idCol, textCol,
+        Seq(sourceCol))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val kept = docs.select(col(idCol), col(textCol))
       .join(keptIds.select(col(idCol)), Seq(idCol))
     val toks = SubstringDedup.tokenFrame(kept, idCol, textCol)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val spans = SubstringDedup.crossDocSpans(toks, idCol, minWords, minDocs)
-    val verdicts = SubstringDedup.dedupVerdicts(spans, idCol)
+    val verdicts = SubstringDedup.keepOneVerdicts(toks, idCol, minWords,
+      minDocs)
     val out = SubstringDedup.keepOneStripped(toks, verdicts, idCol)
       .join(keptIds, Seq(idCol))
       .select(col(idCol), col(sourceCol), col("text").as(textCol),

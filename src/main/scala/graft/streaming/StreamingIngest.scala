@@ -2,7 +2,7 @@ package graft.streaming
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, KeyValueGroupedDataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
@@ -79,11 +79,19 @@ object StreamingIngest {
 
   final case class DedupedDoc(docId: Long, text: String, firstSeen: Boolean)
 
-  /** the content-hash state key: md5 of the text, or of its normalized
-    * form ([[graft.dedup.Normalize.normalizeTextJvm]]) */
-  private def contentKey(normalized: Boolean): DocEvent => String =
-    if (normalized) e => Dedup.md5Hex(graft.dedup.Normalize.normalizeTextJvm(e.text))
-    else e => Dedup.md5Hex(e.text)
+  /** `docs` grouped on a content-hash column: `md5(text)`, or with
+    * `normalized` the batch exact-dedup key
+    * ([[graft.dedup.Normalize.contentHash]]) — the stream keys its state
+    * on the very column the batch path groups by. A null text keys on
+    * null: all null-text documents form one group, as in batch.
+    */
+  private def byContent(docs: Dataset[DocEvent],
+      normalized: Boolean): KeyValueGroupedDataset[String, DocEvent] = {
+    import docs.sparkSession.implicits._
+    docs.groupBy(if (normalized) graft.dedup.Normalize.contentHash(col("text"))
+        else md5(col("text")))
+      .as[String, DocEvent]
+  }
 
   /** Streaming exact dedup: per content-hash state remembers the first doc
     * id that carried the text; later arrivals are flagged duplicates — the
@@ -91,17 +99,16 @@ object StreamingIngest {
     * hash → first-id map, sharded by Spark's state store).
     *
     * `normalized = true` keys the state on the NORMALIZED content hash
-    * ([[graft.dedup.Normalize.normalizeTextJvm]], the exact JVM twin of
-    * the batch `normalizeText` column) so the stream agrees with the
-    * batch normalized-dedup path (q121/q197/q199) on which arrivals are
-    * duplicates — case/punctuation/whitespace re-crawl variants collapse
-    * to one canonical key instead of leaking past the raw hash.
+    * ([[graft.dedup.Normalize.contentHash]], the batch exact-dedup key)
+    * so the stream agrees with the batch normalized-dedup path
+    * (q121/q197/q199) on which arrivals are duplicates — case/
+    * punctuation/whitespace re-crawl variants collapse to one canonical
+    * key instead of leaking past the raw hash.
     */
   def streamingExactDedup(docs: Dataset[DocEvent],
       normalized: Boolean = false): Dataset[DedupedDoc] = {
     import docs.sparkSession.implicits._
-    docs
-      .groupByKey(contentKey(normalized))
+    byContent(docs, normalized)
       .flatMapGroupsWithState[Long, DedupedDoc](
         org.apache.spark.sql.streaming.OutputMode.Append(),
         GroupStateTimeout.NoTimeout) {
@@ -138,8 +145,7 @@ object StreamingIngest {
   def streamingDupWeights(docs: Dataset[DocEvent],
       normalized: Boolean = true): Dataset[DupWeight] = {
     import docs.sparkSession.implicits._
-    docs
-      .groupByKey(contentKey(normalized))
+    byContent(docs, normalized)
       .flatMapGroupsWithState[Long, DupWeight](
         org.apache.spark.sql.streaming.OutputMode.Append(),
         GroupStateTimeout.NoTimeout) {

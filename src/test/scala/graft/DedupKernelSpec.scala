@@ -195,7 +195,7 @@ class DedupKernelSpec extends AnyFunSuite {
       .toDF("id", "text")
     val both = df.select(col("id"),
         Dedup.simhash16(TextFunctions.tokens(col("text"))).as("k"),
-        Dedup.simhash16Hof(TextFunctions.tokens(col("text"))).as("h"))
+        DedupHof.simhash16Hof(TextFunctions.tokens(col("text"))).as("h"))
       .collect()
     both.foreach(r => assert(r.getInt(1) == r.getInt(2),
       s"id=${r.getLong(0)} kernel=${r.getInt(1)} hof=${r.getInt(2)}"))
@@ -204,13 +204,13 @@ class DedupKernelSpec extends AnyFunSuite {
       .toDF("id", "text")
     val nulls = nullDf.select(col("id"),
         Dedup.simhash16(TextFunctions.tokens(col("text"))).as("k"),
-        Dedup.simhash16Hof(TextFunctions.tokens(col("text"))).as("h"))
+        DedupHof.simhash16Hof(TextFunctions.tokens(col("text"))).as("h"))
       .collect()
     nulls.foreach(r => assert(r.getInt(1) == r.getInt(2),
       s"id=${r.getLong(0)} kernel=${r.getInt(1)} hof=${r.getInt(2)}"))
     val nullElems = spark.range(1).select(
       Dedup.simhash16(array(lit("a"), lit(null.asInstanceOf[String]), lit("b"))).as("k"),
-      Dedup.simhash16Hof(array(lit("a"), lit(null.asInstanceOf[String]), lit("b"))).as("h"))
+      DedupHof.simhash16Hof(array(lit("a"), lit(null.asInstanceOf[String]), lit("b"))).as("h"))
       .collect().head
     assert(nullElems.getInt(0) == nullElems.getInt(1))
   }
@@ -240,7 +240,7 @@ class DedupKernelSpec extends AnyFunSuite {
       val native = graft.dedup.Winnowing
         .fingerprints(df, "doc_id", "text", k, w)
         .collect().map(r => (r.getLong(0), r.getString(1))).sorted.toSeq
-      val hof = graft.dedup.Winnowing
+      val hof = DedupHof
         .fingerprintsHof(df, "doc_id", "text", k, w)
         .collect().map(r => (r.getLong(0), r.getString(1))).sorted.toSeq
       assert(native == hof,

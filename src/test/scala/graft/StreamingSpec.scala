@@ -121,12 +121,12 @@ class StreamingSpec extends AnyFunSuite {
       val got = spark.table("norm_dedup_out")
         .as[StreamingIngest.DedupedDoc]
         .collect().map(r => r.docId -> r.firstSeen).toMap
-      // batch truth: first-seen = min doc_id per NORMALIZED content hash
-      // (all ids here arrive in id order, so stream ownership matches)
-      val batchFirst = docs.toDF("docId", "text")
-        .groupBy(graft.dedup.Normalize.normalizeText(col("text")).as("k"))
-        .agg(org.apache.spark.sql.functions.min(col("docId")).as("first"))
-        .select("first").as[Long].collect().toSet
+      // batch truth: first-seen = the batch canonical document (min
+      // doc_id per NORMALIZED content hash; all ids here arrive in id
+      // order, so stream ownership matches)
+      val batchFirst = graft.dedup.Normalize.canonicalDocs(
+          docs.toDF("docId", "text"), "docId", "text", Nil)
+        .as[Long].collect().toSet
       assert(got == docs.map(d => d.docId -> batchFirst(d.docId)).toMap)
       assert(got == Map(1L -> true, 2L -> false, 3L -> false,
         4L -> true, 5L -> false))
@@ -144,8 +144,55 @@ class StreamingSpec extends AnyFunSuite {
     val viaColumn = samples.toDF("t")
       .select(graft.dedup.Normalize.normalizeText(col("t")))
       .as[String].collect().toSeq
-    val viaJvm = samples.map(graft.dedup.Normalize.normalizeTextJvm)
+    val viaJvm = samples.map(normalizeTextJvm)
     assert(viaColumn == viaJvm)
+  }
+
+  /** JVM reference of the `Normalize.normalizeText` column: the same ASCII
+    * casefold, Java-regex replaces for Spark's `regexp_replace` runs, and a
+    * space-only trim (after the collapse the edges hold at most single
+    * spaces, so this equals Spark's `trim`).
+    */
+  private def normalizeTextJvm(s: String): String =
+    if (s == null) null
+    else s.map(c => if (c >= 'A' && c <= 'Z') (c + 32).toChar else c)
+      .replaceAll("[^a-z0-9 \\t\\n\\r\\f]+", " ")
+      .replaceAll("[ \\t\\n\\r\\f]+", " ")
+      .stripPrefix(" ").stripSuffix(" ")
+
+  test("a null text keeps a dedup stream running: null-text docs form one " +
+      "group, as batch md5(null) does") {
+    import spark.implicits._
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    def ev(id: Long, text: String) = StreamingIngest.DocEvent(id, text)
+    Seq(false, true).foreach { normalized =>
+      val input = MemoryStream[StreamingIngest.DocEvent](spark)
+      val name = s"null_dedup_out_$normalized"
+      val q = StreamingIngest.streamingExactDedup(input.toDS(), normalized)
+        .writeStream.outputMode("append")
+        .format("memory").queryName(name).start()
+      try {
+        input.addData(ev(3, null), ev(1, "a b"), ev(2, null))
+        q.processAllAvailable()
+        input.addData(ev(4, null), ev(5, "a b"))
+        q.processAllAvailable()
+        val got = spark.table(name).as[StreamingIngest.DedupedDoc]
+          .collect().map(r => r.docId -> r.firstSeen).sortBy(_._1).toSeq
+        assert(got == Seq(1L -> true, 2L -> true, 3L -> false,
+          4L -> false, 5L -> false), s"normalized=$normalized: $got")
+      } finally q.stop()
+    }
+    val input = MemoryStream[StreamingIngest.DocEvent](spark)
+    val q = StreamingIngest.streamingDupWeights(input.toDS())
+      .writeStream.outputMode("append")
+      .format("memory").queryName("null_dupw_out").start()
+    try {
+      input.addData(ev(2, null), ev(1, null), ev(3, "x"))
+      q.processAllAvailable()
+      val got = spark.table("null_dupw_out").as[StreamingIngest.DupWeight]
+        .collect().sortBy(_.docId).map(r => (r.docId, r.nCopies)).toSeq
+      assert(got == Seq((1L, 1L), (2L, 2L), (3L, 1L)), got.toString)
+    } finally q.stop()
   }
 
   test("streaming passage dedup: cross-batch and cross-doc passage ownership") {

@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.similarity.Similarity
+import graft.similarity.{Similarity, SimilarityHof}
 
 /** The native DotProduct/CosineSimilarity kernels must be bit-identical to
   * their higher-order-function formulations (which the SQL oracles mirror) —
@@ -38,9 +38,9 @@ class VectorExprSpec extends AnyFunSuite {
     }
     val df = pairs(rows).select(
       Similarity.dot(col("a"), col("b")).as("d"),
-      Similarity.dotHof(col("a"), col("b")).as("dh"),
+      SimilarityHof.dotHof(col("a"), col("b")).as("dh"),
       Similarity.cosine(col("a"), col("b")).as("c"),
-      Similarity.cosineHof(col("a"), col("b")).as("ch"))
+      SimilarityHof.cosineHof(col("a"), col("b")).as("ch"))
     df.collect().foreach { r =>
       // bit-level equality, not tolerance: same fold order must mean same bits
       assert(java.lang.Double.doubleToLongBits(r.getDouble(0))
