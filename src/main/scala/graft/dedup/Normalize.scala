@@ -51,10 +51,7 @@ object Normalize {
     * unique and a struct orders by its fields in order — so normalize+md5
     * runs once per document, nothing corpus-sized is persisted or joined
     * back, and the one exchange carries (hash, id, carried…), never text.
-    * (Through r16 this was a persisted (id, carried, hash) frame, a
-    * min(id) aggregate, a join back on the hash and an `id = canon`
-    * filter: one persist, one join and one exchange more.) Callers that
-    * read the result more than once persist it.
+    * Callers that read the result more than once persist it.
     */
   private[graft] def canonicalDocs(docs: DataFrame, idCol: String,
       textCol: String, carried: Seq[String],
