@@ -391,7 +391,7 @@ object LabelQualityQueries {
     Q("q200_curation_v2",
       (s, d) => {
         val t = Tables(s, d)
-        // kept persisted: madKeep references its input twice more
+        // kept persisted: madKeep reads its input twice
         val kept = graft.dedup.Normalize.canonicalDocs(t.documents,
             "doc_id", "text", Seq("lang", "source", "n_chars"), Some("grp"))
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)

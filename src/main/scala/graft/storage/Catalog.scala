@@ -538,14 +538,11 @@ final class Catalog(val spark: SparkSession, root: String, tenant: String) {
     // staging writes go to independent directories and nothing is visible
     // until the rename phase below, so a multi-batch group stages from a
     // small thread pool — the next batch's tasks back-fill executors freed
-    // by the current batch's tail instead of idling through it. The pool's
-    // threads are created for this commit and stopped after it, so they
-    // inherit this thread's Spark local properties (job group,
-    // description, call site) and nothing outlives the commit; failures
-    // cancel the group, and every successfully staged dir is cleaned up
-    // on any failure. The
-    // claim/rename/manifest sequence stays strictly single-threaded — the
-    // crash-window analysis is untouched.
+    // by the current batch's tail instead of idling through it. The pool
+    // lives for this commit only (see stagingPool), failures cancel the
+    // group, and every successfully staged dir is cleaned up on any
+    // failure. The claim/rename/manifest sequence stays strictly
+    // single-threaded — the crash-window analysis is untouched.
     val staged: Seq[(GroupBatch, Path)] =
       if (batches.size <= 1) batches.map(b => b -> stageBatch(name, b))
       else {
@@ -761,7 +758,8 @@ object Catalog {
     * commit. Small on purpose: 2-3 concurrent jobs fill the tail of the
     * scheduler FIFO without fighting for executor slots; the group sizes
     * here are 2-5 batches. Its threads start lazily on the committing
-    * thread, so each clones that thread's Spark local properties. Daemon
+    * thread, so each clones that thread's Spark local properties (job
+    * group, description, call site) and none outlives the commit. Daemon
     * threads so the pool never blocks JVM exit.
     */
   private def stagingPool(nBatches: Int) =
